@@ -115,34 +115,18 @@ def _latest_verdicts() -> dict[str, tuple[int, bool]]:
 # list each round.
 CHANGED_THIS_ROUND = frozenset(
     {
-        # r17 (r16 verdict #1): the persisted-store ANN serves grew the
-        # empty/wrong-dim qvec guard in probe_cells — the ONE
-        # probe-planning definition all three serving paths share
-        # (plans/similarity.py; query_ivfpq_store's duplicated inline
-        # probe was folded into it). All oracled callers pass
-        # correct-dimension vectors, so values are provably unchanged
-        # (tri-scale re-verified locally), but the executed serve path
-        # was rewritten — listed per the r9 precedent. 4 of the 3-5
-        # slots the r16 verdict pre-scoped for this fix; knn_ivf_filtered
-        # is in-session (no probe_cells) and stays out. The strict
-        # write-arm assignment guard (r16 verdict #7) rides
-        # streaming_vector_ingest's slot (same query), and the
-        # PQ-geometry introspection (r17 coupling audit: the ADC serve
-        # reads the subspace count off the codes part instead of PQ_M)
-        # rides knn_ivfpq_store_roundtrip's slot. No new queries —
-        # every spare slot goes to r12/r13-stale rows (r16 verdict #2/#3).
-        "knn_ivf_store_roundtrip",
-        "knn_ivfpq_store_roundtrip",
-        "knn_ivf_rebalanced_roundtrip",
-        "streaming_vector_ingest",
-        # r17 (r16 verdict #6, optional): build_index(chargrams=True)
-        # now persists the gram k in a 1-row gramk part and
-        # wildcard_indexed probes at the persisted k instead of the
-        # CHARGRAM_K constant — the build/serve coupling is eliminated.
-        # Values unchanged (the part is written at the same constant),
-        # but the roundtrip's executed build+serve path changed. 5th
-        # slot, inside the verdict's pre-scoped budget.
-        "wildcard_indexed_roundtrip",
+        # The MinHash near-dup chain (shingles -> signatures -> bands ->
+        # candidates -> exact verify) is defined once in plans/dedup.py;
+        # these four paths now call it instead of private copies.
+        "dedup_minhash_near_dups",
+        "dedup_containment_pairs",
+        "dedup_incremental_minhash",
+        "streaming_near_dup_pairs",
+        # The MMR greedy walk stops at the pool size instead of crashing
+        # on a shortlist smaller than TOP_K.
+        "search_mmr_rerank",
+        # Carried over: its rewrite has not been oracle-verified since.
+        "index_compaction_roundtrip",
     }
 )
 
