@@ -30,6 +30,8 @@ agree on this subset: character classes, (?s), non-greedy repetition).
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -232,7 +234,13 @@ def stopword_member(t: Column) -> Column:
             seq = _to_seq(sc, [F.lit(s)._jc for s in STOPWORDS])
             _stop_seq_cache[key] = seq
         return Column(t._jc.isin(seq))
-    except Exception:  # noqa: BLE001 — internal-API drift: same semantics
+    except (ImportError, AttributeError) as exc:  # internal-API drift
+        warnings.warn(
+            f"cached stopword seq unavailable ({exc!r}); building the "
+            "stopword IN list per call",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return t.isin(*STOPWORDS)
 
 

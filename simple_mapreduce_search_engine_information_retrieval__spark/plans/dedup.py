@@ -1,8 +1,26 @@
 """Deduplication operators (north star: training-data pipeline).
 
 - exact dedup: hash-groupBy on the normalized token-stream fingerprint;
-- near-dup: MinHash + LSH banding + exact-Jaccard verify over word-3-gram
-  shingles, then n-gram-Jaccard on adjacent-id pairs as a dense check.
+- near-dup: ONE MinHash LSH chain over word-3-gram shingles,
+
+      shingles_of -> signatures_of -> bands_of -> candidates -> verify_pairs
+
+  Candidates come in two shapes: the corpus self-join on ``band_key``
+  (``self_candidates``) and the broadcast probe of an increment's bands
+  against stored bands (``probe_candidates``). ``verify_pairs`` scores
+  every candidate pair exactly — Jaccard, or containment — off the
+  (doc_id, shingle) table. The callers:
+  ``minhash_near_dups`` (self-join over identical-set representatives,
+  via ``lsh_pairs``), ``containment_pairs`` (self-join, containment
+  score), ``incremental_minhash`` (probe of a hash-split delta) and
+  ``streaming.jobs.incremental_near_dups`` (probe of each micro-batch
+  against the persisted store);
+- dense checks: n-gram Jaccard on adjacent-id pairs, SimHash, and the
+  MinHash estimator calibration.
+
+The split into candidate generation by equi-join followed by exact
+verification is the one of the Hamming-distance similarity-search
+MapReduce paper (EDBT 2015).
 
 Portability trick that makes MinHash oracle-checkable: the "random" hash
 family is md5 with an integer salt prefix — identical strings in Spark
@@ -29,7 +47,9 @@ from ..sources.tables import table
 from ..functions.tokenize import (
     duck_kgrams,
     duck_tokens_list,
+    filter_stopwords,
     kgrams_col,
+    tokens_col,
 )
 from . import QuerySpec
 from .corpus import tokenized_docs
@@ -63,14 +83,22 @@ GROUP BY fingerprint HAVING count(*) > 1
 """
 
 
-def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # derived from the shared tokenized-corpus cache (kept ≡ the
-    # stopworded stream doc_terms uses), so shingle building shares its
-    # tokenize pass with the quality gates / fingerprints
-    staged = tokenized_docs(spark, sf_dir)
-    return staged.select(
+# --- the MinHash LSH near-dup chain -------------------------------------
+
+
+def shingles_of(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, shingle) word-3-grams of a (doc_id, kept) frame,
+    ``kept`` being the stopword-filtered token stream."""
+    return docs.select(
         "doc_id", F.explode(kgrams_col(F.col("kept"), 3)).alias("shingle")
     ).distinct()
+
+
+def text_shingles(docs: DataFrame) -> DataFrame:
+    """``shingles_of`` a raw (doc_id, text) frame, tokenized exactly as
+    the shared tokenized-corpus cache derives its ``kept`` stream."""
+    kept = filter_stopwords(tokens_col(F.col("text"), stopworded=False))
+    return shingles_of(docs.select("doc_id", kept.alias("kept")))
 
 
 _DUCK_SHINGLES = (
@@ -80,21 +108,37 @@ _DUCK_SHINGLES = (
 
 # shingle sets are the expensive intermediate (tokenize + 3-gram explode
 # + distinct): cache per (session, sf_dir) so signatures / candidate
-# verification / size lookups share one computation
+# verification / size lookups share one computation. Derived from the
+# shared tokenized-corpus cache, so shingle building shares its tokenize
+# pass with the quality gates / fingerprints.
 _shingle_cache: dict = register_cache({})
 
 
 def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _shingle_cache:
-        _shingle_cache[key] = _shingles(spark, sf_dir).cache()
+        _shingle_cache[key] = shingles_of(tokenized_docs(spark, sf_dir)).cache()
     return _shingle_cache[key]
+
+
+def _salted_md5s() -> list:
+    """The MinHash hash family, one md5 per salt: ``md5('<i>:' || shingle)``."""
+    return [
+        F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle"))) for i in range(N_HASHES)
+    ]
+
+
+def signatures_of(sh: DataFrame) -> DataFrame:
+    """(doc_id, h0..h7): per-doc min of each salted md5 over its shingles."""
+    return sh.groupBy("doc_id").agg(
+        *[F.min(h).alias(f"h{i}") for i, h in enumerate(_salted_md5s())]
+    )
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h0..h7): salted-md5 MinHash signature over 3-gram
     shingles."""
-    return _signatures_of(_shingles_cached(spark, sf_dir))
+    return signatures_of(_shingles_cached(spark, sf_dir))
 
 
 def _duck_minhash(src: str | None = None) -> str:
@@ -107,7 +151,8 @@ def _duck_minhash(src: str | None = None) -> str:
     return f"SELECT doc_id, {mins} FROM {rel} GROUP BY doc_id"
 
 
-def _bands(sig: DataFrame) -> DataFrame:
+def bands_of(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_key): one row per doc and band of its signature."""
     rows = []
     per = N_HASHES // N_BANDS
     for b in range(N_BANDS):
@@ -139,27 +184,10 @@ def _duck_bands() -> str:
     return _duck_bands_of("sig")
 
 
-# verified near-dup pairs are consumed by several downstream operators
-# (grouping, reporting) — cache the small result per (session, sf_dir)
-_pairs_cache: dict = register_cache({})
-
-
-def _signatures_of(sh: DataFrame) -> DataFrame:
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"h{i}")
-        for i in range(N_HASHES)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def _lsh_verified_pairs(sh: DataFrame, sig: DataFrame | None = None) -> DataFrame:
-    """LSH candidate pairs over a (doc_id, shingle) set, verified with
-    exact Jaccard: (doc_a, doc_b, jaccard) for jaccard >= threshold.
-    ``sig`` optionally supplies precomputed signatures for exactly the
-    docs in ``sh`` (a signature depends only on the doc's own shingles,
-    so callers that already aggregated can skip the second pass)."""
-    bands = _bands(_signatures_of(sh) if sig is None else sig)
-    cand = (
+def self_candidates(bands: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b: distinct doc pairs sharing a band
+    key — the corpus self-join."""
+    return (
         bands.alias("x")
         .join(bands.alias("y"), "band_key")
         .filter(F.col("x.doc_id") < F.col("y.doc_id"))
@@ -168,33 +196,75 @@ def _lsh_verified_pairs(sh: DataFrame, sig: DataFrame | None = None) -> DataFram
         )
         .distinct()
     )
+
+
+def probe_candidates(
+    probe: DataFrame, stored: DataFrame, names: tuple = ("doc_a", "doc_b")
+) -> DataFrame:
+    """(probe doc, stored doc) band collisions, named ``names``, of an
+    increment's bands against stored bands; the stored side is only
+    scanned, never shuffled. Not deduplicated."""
+    p, s = names
+    return (
+        # bounded: the probe side is an increment's own bands (a delta
+        # batch or a micro-batch), tiny vs the stored index
+        F.broadcast(probe.withColumnRenamed("doc_id", p))
+        .join(stored.withColumnRenamed("doc_id", s), "band_key")
+        .select(p, s)
+    )
+
+
+def verify_pairs(
+    cand: DataFrame, sh: DataFrame, measure: str = "jaccard"
+) -> DataFrame:
+    """Exact verify of a two-column candidate relation against a
+    (doc_id, shingle) table: (a, b, <measure>) with the score rounded to
+    6 places and kept at its threshold. ``measure`` is ``"jaccard"``
+    (n_inter / |A ∪ B|, JACCARD_THRESHOLD) or ``"containment"``
+    (n_inter / min(|A|, |B|), CONTAINMENT_THRESHOLD). The output keeps
+    the candidate relation's column names."""
+    a_col, b_col = cand.columns
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+    a = sh.select(F.col("doc_id").alias(a_col), "shingle")
+    b = sh.select(F.col("doc_id").alias(b_col), "shingle")
     # bounded: the candidate set is the tiny LSH residue — broadcast it
     # against the shingle table so the verify never shuffles side ``a``;
-    # the (doc_b, shingle) join is the one real exchange in the verify
+    # the (b, shingle) join is the one real exchange in the verify
     inter = (
-        F.broadcast(cand).join(a, "doc_a").join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
+        F.broadcast(cand).join(a, a_col).join(b, [b_col, "shingle"])
+        .groupBy(a_col, b_col)
         .agg(F.count("*").alias("n_inter"))
     )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+    na = sizes.select(F.col("doc_id").alias(a_col), F.col("n").alias("n_a"))
+    nb = sizes.select(F.col("doc_id").alias(b_col), F.col("n").alias("n_b"))
+    n_inter, n_a, n_b = F.col("n_inter"), F.col("n_a"), F.col("n_b")
+    if measure == "containment":
+        score = n_inter / F.least(n_a, n_b).cast("double")
+        threshold = CONTAINMENT_THRESHOLD
+    else:
+        score = n_inter / (n_a + n_b - n_inter).cast("double")
+        threshold = JACCARD_THRESHOLD
     return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        inter.join(na, a_col)
+        .join(nb, b_col)
+        .select(a_col, b_col, F.round(score, 6).alias(measure))
+        .filter(F.col(measure) >= threshold)
     )
+
+
+def lsh_pairs(sh: DataFrame, sig: DataFrame | None = None) -> DataFrame:
+    """The self-join chain over a (doc_id, shingle) set: (doc_a, doc_b,
+    jaccard) for jaccard >= threshold. ``sig`` optionally supplies
+    precomputed signatures for exactly the docs in ``sh`` (a signature
+    depends only on the doc's own shingles, so callers that already
+    aggregated can skip the second pass)."""
+    sig = signatures_of(sh) if sig is None else sig
+    return verify_pairs(self_candidates(bands_of(sig)), sh)
+
+
+# verified near-dup pairs are consumed by several downstream operators
+# (grouping, reporting) — cache the small result per (session, sf_dir)
+_pairs_cache: dict = register_cache({})
 
 
 def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,10 +303,7 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # change. The pieces slice the SAME salted md5s the MinHash mins
     # consume: aggregate-input subexpression elimination computes each
     # md5 once, so the fingerprint adds no hashing to the pass.
-    salted = [
-        F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))
-        for i in range(N_HASHES)
-    ]
+    salted = _salted_md5s()
     fp_pieces = [
         F.sum(
             F.conv(F.substring(salted[j], 1, 8), 16, 10).cast("long")
@@ -265,7 +332,7 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             *fp_pieces,
             F.count("*").alias("_fpn"),
-            *[F.min(salted[i]).alias(f"h{i}") for i in range(N_HASHES)],
+            *[F.min(h).alias(f"h{i}") for i, h in enumerate(salted)],
         )
         .withColumn(
             "fp", F.concat_ws(":", "_fp0", "_fp1", "_fp2", "_fp3", "_fpn")
@@ -281,7 +348,7 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-GB build side on every executor at 1e9 docs). Plain left-semi
     # on the fixed-width id: one exchange per side, and AQE still picks a
     # broadcast at runtime when the rep set measures genuinely small.
-    # _lsh_verified_pairs scans this from three branches (sizes / both
+    # verify_pairs scans this from three branches (sizes / both
     # verify sides); each branch re-probes the SESSION-CACHED shingle
     # table (`sh`) with the cheap semi-join rather than pinning a second
     # shingle-sized transient cache whose release would otherwise have to
@@ -293,9 +360,7 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # times; before the checkpoint their analyzed plans carried ~360
     # Exchange nodes of InMemoryRelation re-reads). Lazy for the same
     # construction-is-side-effect-free reason as `membership` above.
-    rep_pairs = _lsh_verified_pairs(sh_rep, sig=rep_sig).localCheckpoint(
-        eager=False
-    )
+    rep_pairs = lsh_pairs(sh_rep, sig=rep_sig).localCheckpoint(eager=False)
     ma = membership.select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("da"))
     mb = membership.select(F.col("rep").alias("doc_b"), F.col("doc_id").alias("db"))
     # Only rep_pairs itself is hinted. The (rep_pairs JOIN ma) expansion
@@ -516,7 +581,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys on doc_id (narrow — no LSH, no candidate explosion); all
     outputs integer ppm (est = k/8 is dyadic-exact)."""
     sh = _shingles_cached(spark, sf_dir)
-    sig = _signatures_of(sh)
+    sig = signatures_of(sh)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_HASHES)],
@@ -894,8 +959,8 @@ _full_bands_cache: dict = register_cache({})
 def _full_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _full_bands_cache:
-        _full_bands_cache[key] = _bands(
-            _signatures_of(_shingles_cached(spark, sf_dir))
+        _full_bands_cache[key] = bands_of(
+            signatures_of(_shingles_cached(spark, sf_dir))
         ).cache()
     return _full_bands_cache[key]
 
@@ -903,39 +968,8 @@ def _full_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, containment) for band-candidate pairs whose max
     directional containment clears the threshold."""
-    sh = _shingles_cached(spark, sf_dir)
-    bands = _full_bands_cached(spark, sf_dir)
-    cand = (
-        bands.alias("x")
-        .join(bands.alias("y"), "band_key")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        # bounded: cand is the LSH band-collision residue (pair-cardinality)
-        F.broadcast(cand)
-        .join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    c = F.round(
-        F.col("n_inter") / F.least("n_a", "n_b").cast("double"), 6
-    )
-    return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select("doc_a", "doc_b", c.alias("containment"))
-        .filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
-    )
+    cand = self_candidates(_full_bands_cached(spark, sf_dir))
+    return verify_pairs(cand, _shingles_cached(spark, sf_dir), "containment")
 
 
 def _duck_containment() -> str:
@@ -1100,45 +1134,14 @@ def incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filtering afterwards would silently re-pay a corpus pass per run)
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _incr_base_cache:
-        _incr_base_cache[key] = _bands(
-            _signatures_of(sh.filter(~_incr_delta_flag()))
+        _incr_base_cache[key] = bands_of(
+            signatures_of(sh.filter(~_incr_delta_flag()))
         ).cache()
-    bands_b = _incr_base_cache[key]
-    bands_d = _bands(_signatures_of(sh.filter(_incr_delta_flag())))
-    cand = (
-        # bounded: delta bands are increment-sized, tiny vs the base
-        F.broadcast(bands_d.withColumnRenamed("doc_id", "new_doc"))
-        .join(bands_b.withColumnRenamed("doc_id", "base_doc"), "band_key")
-        .select("new_doc", "base_doc")
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("new_doc"), "shingle")
-    b = sh.select(F.col("doc_id").alias("base_doc"), "shingle")
-    inter = (
-        # bounded: cand is the delta-probe collision residue
-        F.broadcast(cand)
-        .join(a, "new_doc")
-        .join(b, ["base_doc", "shingle"])
-        .groupBy("new_doc", "base_doc")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    na = sizes.select(F.col("doc_id").alias("new_doc"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("base_doc"), F.col("n").alias("n_b"))
-    return (
-        inter.join(na, "new_doc")
-        .join(nb, "base_doc")
-        .select(
-            "new_doc",
-            "base_doc",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    bands_d = bands_of(signatures_of(sh.filter(_incr_delta_flag())))
+    cand = probe_candidates(
+        bands_d, _incr_base_cache[key], ("new_doc", "base_doc")
+    ).distinct()
+    return verify_pairs(cand, sh)
 
 
 def _duck_incremental_minhash() -> str:

@@ -2132,7 +2132,8 @@ def _micro(c: Column) -> Column:
 
 def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(rank, vec_id, cos_micro, mmr_micro): MMR-diversified top-{TOP_K}
-    from the cosine top-{MMR_POOL} shortlist.
+    from the cosine top-{MMR_POOL} shortlist; a shortlist smaller than
+    TOP_K yields one row per vector, an empty one no rows.
 
     Shape (r17 optimization): the corpus-sized work — the relevance
     shortlist and the POOL^2 pairwise sims — stays distributed and
@@ -2175,21 +2176,18 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cm = {r["vec_id"]: r["cm"] for r in cand.select("vec_id", "cm").collect()}
     lam, com = MMR_LAMBDA_TENTHS, 10 - MMR_LAMBDA_TENTHS
     # greedy walk on exact int64 micro units (Python ints — identical
-    # compares to the Spark orderBy it replaces; ties to smallest vec_id)
-    first = min(cm, key=lambda v: (-cm[v], v))
-    rows = [(1, first, cm[first], lam * cm[first])]
-    selected = [first]
-    for i in range(2, TOP_K + 1):
-        best = None
-        for v, c in cm.items():
-            if v in selected:
-                continue
-            mmr = lam * c - com * max(pm[(v, s)] for s in selected)
-            key = (-mmr, v)
-            if best is None or key < best[0]:
-                best = (key, v, c, mmr)
-        rows.append((i, best[1], best[2], best[3]))
-        selected.append(best[1])
+    # compares to the Spark orderBy it replaces; ties to smallest vec_id).
+    # The first pick has no max-sim term. A pool smaller than TOP_K
+    # (a tiny or empty corpus) ends the walk early.
+    rows, selected = [], []
+    for i in range(1, min(TOP_K, len(cm)) + 1):
+        neg_mmr, v = min(
+            (-(lam * c - com * max((pm[(v, s)] for s in selected), default=0)), v)
+            for v, c in cm.items()
+            if v not in selected
+        )
+        rows.append((i, v, cm[v], -neg_mmr))
+        selected.append(v)
     return spark.createDataFrame(
         rows, "rank int, vec_id long, cos_micro long, mmr_micro long"
     )

@@ -406,7 +406,9 @@ def incremental_near_dups(
     store (within-batch self-probe included), verified with exact
     Jaccard against the persisted shingle store, and then appended to
     the store — the streaming twin of plans/dedup.py's
-    dedup_incremental_minhash, where the "increment" is a micro-batch.
+    incremental_minhash (registered as dedup_incremental_minhash), where
+    the "increment" is a micro-batch. Shingling, signatures, bands, the
+    probe and the exact verify are plans/dedup.py's one MinHash chain.
 
     Discovered pairs land in <store>/pairs; bands and shingles
     accumulate in <store>/bands and <store>/shingles (LSM-style
@@ -425,11 +427,12 @@ def incremental_near_dups(
     no 100 TB maintenance job could pay)."""
     import os
 
-    from ..functions.tokenize import filter_stopwords, kgrams_col, tokens_col
     from ..plans.dedup import (
-        JACCARD_THRESHOLD,
-        _bands,
-        _signatures_of,
+        bands_of,
+        probe_candidates,
+        signatures_of,
+        text_shingles,
+        verify_pairs,
     )
 
     bands_p = os.path.join(store_path, "bands")
@@ -442,22 +445,8 @@ def incremental_near_dups(
         # single core (the same single-split hazard as replicated
         # fixture reads — see bench.py's index build)
         batch = batch.repartition(spark.sparkContext.defaultParallelism)
-        sh_b = (
-            batch.select(
-                "doc_id",
-                F.explode(
-                    kgrams_col(
-                        filter_stopwords(
-                            tokens_col(F.col("text"), stopworded=False)
-                        ),
-                        3,
-                    )
-                ).alias("shingle"),
-            )
-            .distinct()
-            .localCheckpoint()  # shingles feed 4 consumers below
-        )
-        bands_b = _bands(_signatures_of(sh_b))
+        sh_b = text_shingles(batch).localCheckpoint()  # feeds 4 consumers below
+        bands_b = bands_of(signatures_of(sh_b))
         # store detection goes through the Hadoop FileSystem resolved
         # from the path's own scheme, not driver-local os.path — on
         # HDFS/S3 store paths a local-FS check is always false and every
@@ -484,17 +473,11 @@ def incremental_near_dups(
         else:
             bands_all, sh_all = bands_b, sh_b
         cand = (
-            # bounded: probe side is the micro-batch's own bands
-            F.broadcast(
-                bands_b.select(
-                    F.col("doc_id").alias("probe_doc"), "band_key"
-                )
-            )
-            .join(bands_all, "band_key")
-            .filter(F.col("doc_id") != F.col("probe_doc"))
+            probe_candidates(bands_b, bands_all)
+            .filter(F.col("doc_a") != F.col("doc_b"))
             .select(
-                F.least("probe_doc", "doc_id").alias("doc_a"),
-                F.greatest("probe_doc", "doc_id").alias("doc_b"),
+                F.least("doc_a", "doc_b").alias("doc_a"),
+                F.greatest("doc_a", "doc_b").alias("doc_b"),
             )
             .distinct()
             # every candidate has >=1 batch member (the probe side is
@@ -520,66 +503,31 @@ def incremental_near_dups(
             "doc_id",
         ).cache()
         try:
-            _verify_and_write(
-                spark, cand, sh_cand, bands_b, sh_b, batch_id,
-                pairs_p, bands_p, sh_p,
+            pairs = verify_pairs(cand, sh_cand)
+            # batch-sized writes: coalesce so the store stays a few
+            # files per batch instead of spraying 32 shards each (the
+            # store is re-read every subsequent batch; at cluster scale
+            # size the coalesce to the increment's real volume). Each
+            # batch OVERWRITES its own batch=<id> partition instead of
+            # appending to a flat dir: replaying a killed half-committed
+            # batch rewrites exactly its own partition, which together
+            # with the `batch < batch_id` store-read filter above makes
+            # the foreachBatch idempotent by batch id — the exactly-once
+            # contract, not just at-least-once.
+            pairs.coalesce(1).write.mode("overwrite").parquet(
+                f"{pairs_p}/batch={batch_id}"
+            )
+            bands_b.coalesce(2).write.mode("overwrite").parquet(
+                f"{bands_p}/batch={batch_id}"
+            )
+            sh_b.coalesce(2).write.mode("overwrite").parquet(
+                f"{sh_p}/batch={batch_id}"
             )
         finally:
             # release the batch residue even when a mid-batch write
             # fails (r12 ADVICE) — the replayed batch re-caches its own
             cand.unpersist()
             sh_cand.unpersist()
-
-    def _verify_and_write(
-        spark, cand, sh_cand, bands_b, sh_b, batch_id, pairs_p, bands_p, sh_p
-    ):
-        sizes = sh_cand.groupBy("doc_id").agg(F.count("*").alias("n"))
-        a = sh_cand.select(F.col("doc_id").alias("doc_a"), "shingle")
-        b = sh_cand.select(F.col("doc_id").alias("doc_b"), "shingle")
-        inter = (
-            # bounded: cand is the batch-probe collision residue
-            F.broadcast(cand)
-            .join(a, "doc_a")
-            .join(b, ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("n_inter"))
-        )
-        na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-        nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-        pairs = (
-            inter.join(na, "doc_a")
-            .join(nb, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.round(
-                    F.col("n_inter")
-                    / (
-                        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-                    ).cast("double"),
-                    6,
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        )
-        # batch-sized writes: coalesce so the store stays a few files
-        # per batch instead of spraying 32 shards each (the store is
-        # re-read every subsequent batch; at cluster scale size the
-        # coalesce to the increment's real volume). Each batch OVERWRITES
-        # its own batch=<id> partition instead of appending to a flat
-        # dir: replaying a killed half-committed batch rewrites exactly
-        # its own partition, which together with the `batch < batch_id`
-        # store-read filter above makes the foreachBatch idempotent by
-        # batch id — the exactly-once contract, not just at-least-once.
-        pairs.coalesce(1).write.mode("overwrite").parquet(
-            f"{pairs_p}/batch={batch_id}"
-        )
-        bands_b.coalesce(2).write.mode("overwrite").parquet(
-            f"{bands_p}/batch={batch_id}"
-        )
-        sh_b.coalesce(2).write.mode("overwrite").parquet(
-            f"{sh_p}/batch={batch_id}"
-        )
 
     # ``checkpoint_path`` makes the maintenance restartable: a killed
     # job resumes at the first uncommitted batch, and because every

@@ -75,7 +75,7 @@ def test_collapse_matches_direct_lsh_on_mixed_corpus(spark, mixed_dir):
     """The guard must be output-identical to direct LSH over all docs —
     check on a corpus that actually exercises the collapse path (clone
     groups, cross-group near-dup variants, unrelated tails)."""
-    direct = dedup._lsh_verified_pairs(dedup._shingles_cached(spark, mixed_dir))
+    direct = dedup.lsh_pairs(dedup._shingles_cached(spark, mixed_dir))
     guarded = dedup.minhash_near_dups(spark, mixed_dir)
     assert guarded.count() > 0  # the corpus does produce pairs
     sym_diff = guarded.exceptAll(direct).unionByName(direct.exceptAll(guarded))

@@ -259,3 +259,51 @@ def test_contrastive_pairs_labels(spark, sf_dir):
         assert labels[r.pos_id] == labels[r.anchor_id], r
         assert labels[r.neg_id] != labels[r.anchor_id], r
         assert -1.0 <= r.neg_cos <= 1.0 and -1.0 <= r.pos_cos <= 1.0
+
+
+def test_mmr_rerank_pool_smaller_than_top_k(spark, tmp_path):
+    """A cosine shortlist with fewer than TOP_K vectors yields one pick
+    per vector, in the DuckDB recursive-CTE twin's order; a corpus with
+    only the query vector yields the empty typed frame."""
+    import duckdb
+
+    from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarity import (
+        QUERY_VEC_ID,
+        TOP_K,
+        _duck_mmr,
+        mmr_rerank,
+    )
+
+    schema = "vec_id long, embedding array<float>, label int"
+    vecs = [
+        (QUERY_VEC_ID, [1.0, 0.0, 0.0], 0),
+        (1, [1.0, 0.1, 0.0], 0),
+        (2, [0.0, 1.0, 0.0], 1),
+        (3, [0.9, 0.0, 0.4], 1),
+    ]
+    assert len(vecs) - 1 < TOP_K
+
+    def fixture(name, rows):
+        out = tmp_path / name
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            str(out / "embeddings.parquet")
+        )
+        return str(out)
+
+    small = fixture("small", vecs)
+    got = sorted(mmr_rerank(spark, small).collect(), key=lambda r: r.rank)
+    assert [(r.rank, r.vec_id) for r in got] == [(1, 1), (2, 3), (3, 2)]
+    assert got[0].mmr_micro == 7 * got[0].cos_micro
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{small}/embeddings.parquet/*.parquet')"
+    )
+    want = con.execute(_duck_mmr()).fetchall()
+    assert [tuple(r) for r in got] == sorted(want)
+
+    empty = mmr_rerank(spark, fixture("empty", vecs[:1]))
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<rank:int,vec_id:bigint,cos_micro:bigint,mmr_micro:bigint>"
+    )

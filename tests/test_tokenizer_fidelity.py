@@ -197,3 +197,28 @@ def test_duck_ascii_lower_matches_spark(spark):
     want = _expr_tokens(spark, text, stopworded=False, acronyms=True,
                         compat_ascii_lower=True)
     assert got == want
+
+
+def test_stopword_member_fallback_warns_with_same_semantics(spark, monkeypatch):
+    """When the cached-seq internals are unavailable, stopword_member
+    warns and falls back to a plain ``isin`` with the same answer."""
+    import sys
+    import types
+
+    import pytest
+
+    from simple_mapreduce_search_engine_information_retrieval__spark.functions import (
+        tokenize,
+    )
+
+    df = spark.createDataFrame([("the",), ("spark",), ("and",)], "t string")
+    want = [r.m for r in df.select(tokenize.stopword_member(F.col("t")).alias("m")).collect()]
+    # drift: the private seq helper the cached path imports is gone
+    real = sys.modules["pyspark.sql.classic.column"]
+    drifted = types.ModuleType(real.__name__)
+    drifted.__dict__.update({k: v for k, v in vars(real).items() if k != "_to_seq"})
+    monkeypatch.setattr(tokenize, "_stop_seq_cache", {})
+    monkeypatch.setitem(sys.modules, real.__name__, drifted)
+    with pytest.warns(RuntimeWarning, match="stopword"):
+        member = tokenize.stopword_member(F.col("t"))
+    assert [r.m for r in df.select(member.alias("m")).collect()] == want == [True, False, True]
