@@ -115,17 +115,30 @@ def _latest_verdicts() -> dict[str, tuple[int, bool]]:
 # list each round.
 CHANGED_THIS_ROUND = frozenset(
     {
-        # The MinHash near-dup chain (shingles -> signatures -> bands ->
-        # candidates -> exact verify) is defined once in plans/dedup.py;
-        # these four paths now call it instead of private copies.
+        # Every session memo (warm indexes, shingles, band tables,
+        # codebooks, BPE artifacts, doremi checkpoint, name dictionary)
+        # is now declared with the one caches.memo decorator; these are
+        # the queries served by those rewritten memos.
+        "search_two_term",
+        "search_phrase_2gram",
+        "search_fidelity_stemmed",
         "dedup_minhash_near_dups",
         "dedup_containment_pairs",
         "dedup_incremental_minhash",
+        "text_quality_scores",
+        "knn_ivf_trained",
+        "knn_ivfpq_adc",
+        "embedding_kmeans_clusters",
+        "pipeline_doremi_weights",
+        "pipeline_doremi_mix",
+        "text_bpe_merges",
+        "text_tokenize_ids",
+        "text_tokenize_ids_incremental",
+        "dedup_record_linkage",
+        "embedding_srp_lsh_pairs",
+        # Carried over: their rewrites have not been oracle-verified since.
         "streaming_near_dup_pairs",
-        # The MMR greedy walk stops at the pool size instead of crashing
-        # on a shortlist smaller than TOP_K.
         "search_mmr_rerank",
-        # Carried over: its rewrite has not been oracle-verified since.
         "index_compaction_roundtrip",
     }
 )
