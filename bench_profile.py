@@ -24,32 +24,22 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from simple_mapreduce_search_engine_information_retrieval__spark.session import (  # noqa: E402
+    session_confs,
+)
 
-def _spark_with_ui(cpus: str):
-    """get_spark's exact confs (session.py) + UI enabled for REST metrics.
-    $SPARK_PROFILE_CONFS ("k=v;k=v") lays experiment overrides on top."""
-    shuffle_partitions = int(cpus) if cpus.isdigit() else 32
-    builder = (
-        SparkSession.builder.appName("smse-bench-profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    )
+
+def _spark_with_ui():
+    """get_spark's conf table (session.py) with the UI enabled for REST
+    metrics. $SPARK_PROFILE_CONFS ("k=v;k=v") lays experiment overrides
+    on top."""
+    confs = {**session_confs(), "spark.ui.enabled": "true"}
     for kv in os.environ.get("SPARK_PROFILE_CONFS", "").split(";"):
         if "=" in kv:
             k, _, v = kv.partition("=")
-            builder = builder.config(k.strip(), v.strip())
-    return builder.getOrCreate()
+            confs[k.strip()] = v.strip()
+    builder = SparkSession.builder.appName("smse-bench-profile")
+    return builder.config(map=confs).getOrCreate()
 
 
 def _rest_jobs(ui_url: str, app_id: str) -> list[dict]:
@@ -59,14 +49,13 @@ def _rest_jobs(ui_url: str, app_id: str) -> list[dict]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     name_filters = [a for a in sys.argv[1:] if not a.startswith("-")]
 
     import __spark_entry__ as e
     from bench import warm_engine
 
     registry = e.queries()
-    spark = _spark_with_ui(cpus)
+    spark = _spark_with_ui()
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     ui_url = sc.uiWebUrl

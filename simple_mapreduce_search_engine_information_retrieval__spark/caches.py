@@ -1,22 +1,49 @@
-"""Registry + eviction for session-lifetime memo caches.
+"""Session-lifetime memo caches: one decorator, one registry, one eviction.
 
-Several plans memoize expensive intermediates (warm postings, shingle
-sets, verified near-dup pairs) keyed by ``(applicationId, sf_dir, ...)``.
+Several plans memoize an expensive intermediate (warm postings, shingle
+sets, band tables, codebooks, BPE artifacts) once per session and corpus.
+Each is declared with ``@memo`` on a ``fn(spark, sf_dir, *args)``: the
+first call per key (the session's application id, ``sf_dir``, ``*args``)
+runs the body and stores its value, every later call returns it. The
+storage kind (``cache()``, ``persist(MEMORY_AND_DISK)``,
+``localCheckpoint()``) and any ``pinned_cache_partitioning`` block stay in
+the function body; the decorator only keys, stores and evicts.
+
 In the test/driver harness the session is short-lived and the memos are
 harmless; in a long-lived driver serving many scale factors they would
-grow without bound and pin cached DataFrames in executor memory. Modules
-register their memo dicts here; ``evict(sf_dir)`` unpersists and drops
-every entry for that corpus, ``clear()`` drops everything.
+grow without bound and pin cached DataFrames in executor memory.
+``evict(sf_dir)`` unpersists and drops every entry for that corpus,
+``clear()`` drops everything. ``frames(value)`` walks a memo value's
+DataFrames once, for eviction and for warm-up.
 """
 
 from __future__ import annotations
 
-from typing import Any
-
-_REGISTRY: list[dict] = []
-
-
+import functools
 from contextlib import contextmanager
+from typing import Any, Callable, Iterator
+
+from pyspark.sql import DataFrame
+
+_STORES: list[dict] = []
+
+
+def memo(fn: Callable) -> Callable:
+    """Memoize ``fn(spark, sf_dir, *args)`` per (session, sf_dir, *args).
+    The entry dict is exposed as ``.entries`` for inspection."""
+    entries: dict = {}
+    _STORES.append(entries)
+
+    @functools.wraps(fn)
+    def cached(spark, sf_dir: str, *args):
+        app = spark.sparkContext.applicationId
+        key = (app, sf_dir, *args)
+        if key not in entries:
+            entries[key] = fn(spark, sf_dir, *args)
+        return entries[key]
+
+    cached.entries = entries
+    return cached
 
 
 @contextmanager
@@ -30,7 +57,11 @@ def pinned_cache_partitioning(spark):
     compute-heavy-per-byte consumers (the BPE census barriers, the
     tokenized-corpus gate expressions). The conf is consulted when the
     cached plan compiles at its first action, so the pin must span the
-    fill's materializing action."""
+    fill's materializing action.
+
+    The pin sets a SESSION-WIDE conf, not a thread-local one: a query
+    running at the same time in the same session compiles its cached
+    plans under the pinned value too."""
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     old = spark.conf.get(key, "false")
     spark.conf.set(key, "false")
@@ -40,55 +71,49 @@ def pinned_cache_partitioning(spark):
         spark.conf.set(key, old)
 
 
-def register_cache(memo: dict) -> dict:
-    """Register a memo dict (keys are tuples whose second element is
-    sf_dir) and return it, so modules can write
-    ``_warm = register_cache({})``."""
-    _REGISTRY.append(memo)
-    return memo
-
-
-def _unpersist(value: Any) -> None:
-    from pyspark.sql import DataFrame
-
+def frames(value: Any) -> Iterator[DataFrame]:
+    """Every DataFrame in a memo value: the value itself, or the items of
+    (nested) tuples and lists. Other values (ints, merge lists) yield
+    nothing."""
     if isinstance(value, DataFrame):
-        try:
-            value.unpersist()
-            # A localCheckpoint()ed DataFrame pins its blocks on the
-            # plan's SOURCE RDD, which DataFrame.unpersist() does not
-            # touch (r11 ADVICE: evicting a doremi memo left the
-            # checkpoint blocks on executors until ContextCleaner GC).
-            # When the analyzed plan IS a checkpoint scan (LogicalRDD),
-            # unpersist that RDD too; plain cached frames no-op here.
-            # Guarded on isLocallyCheckpointed (r12 ADVICE): a LogicalRDD
-            # can also wrap an RDD the caller built via
-            # spark.createDataFrame(rdd) and may share outside the memo —
-            # only an RDD that localCheckpoint() itself marked is ours to
-            # release.
-            plan = value._jdf.queryExecution().analyzed()
-            if (
-                plan.getClass().getSimpleName() == "LogicalRDD"
-                and plan.rdd().isLocallyCheckpointed()
-            ):
-                plan.rdd().unpersist(False)
-        except Exception:  # session already stopped — nothing to release
-            pass
+        yield value
     elif isinstance(value, (tuple, list)):
         for item in value:
-            _unpersist(item)
+            yield from frames(item)
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+        # A localCheckpoint()ed DataFrame pins its blocks on the plan's
+        # SOURCE RDD, which DataFrame.unpersist() does not touch (r11
+        # ADVICE: evicting a doremi memo left the checkpoint blocks on
+        # executors until ContextCleaner GC). When the analyzed plan IS a
+        # checkpoint scan (LogicalRDD), unpersist that RDD too; plain
+        # cached frames no-op here. Guarded on isLocallyCheckpointed (r12
+        # ADVICE): a LogicalRDD can also wrap an RDD the caller built via
+        # spark.createDataFrame(rdd) and may share outside the memo —
+        # only an RDD that localCheckpoint() itself marked is ours to
+        # release.
+        plan = df._jdf.queryExecution().analyzed()
+        if (
+            plan.getClass().getSimpleName() == "LogicalRDD"
+            and plan.rdd().isLocallyCheckpointed()
+        ):
+            plan.rdd().unpersist(False)
+    except Exception:  # session already stopped — nothing to release
+        pass
 
 
 def evict(sf_dir: str | None = None) -> int:
-    """Unpersist + drop every registered memo entry for ``sf_dir`` (all
-    entries when None). Returns the number of entries dropped."""
+    """Unpersist + drop every memo entry for ``sf_dir`` (all entries when
+    None). Returns the number of entries dropped."""
     dropped = 0
-    for memo in _REGISTRY:
-        for key in list(memo):
-            if sf_dir is None or (
-                isinstance(key, tuple) and len(key) > 1 and key[1] == sf_dir
-            ):
-                _unpersist(memo.pop(key))
-                dropped += 1
+    for entries in _STORES:
+        for key in [k for k in entries if sf_dir is None or k[1] == sf_dir]:
+            for df in frames(entries.pop(key)):
+                _unpersist(df)
+            dropped += 1
     return dropped
 
 

@@ -84,7 +84,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..caches import register_cache
+from ..caches import memo, pinned_cache_partitioning
 from ..sources.tables import table
 from . import QuerySpec
 from .textstats import _BPE_SQL_LIT, BPE_PATTERN
@@ -109,8 +109,6 @@ OOV_SEED = "\u00a7"  # '§': a char the ASCII fixture never contains —
 # appended to delta docs by text_tokenizer_oov_rate in BOTH engines so
 # the UNK path carries signal at every scale (the pii_scrub/
 # repetition_scrub seeding precedent; disclosed)
-
-_bpe_cache: dict = register_cache({})
 
 
 def _pieces_of(docs: DataFrame) -> DataFrame:
@@ -204,9 +202,6 @@ def _piece_vocab(spark: SparkSession, pieces: DataFrame) -> DataFrame:
 # handful of FULLER partitions (measured optimum for the per-merge
 # census barriers) — pin AQE's cached-plan re-partitioning off around
 # the loops and cache fills (r17); one shared definition in caches.py
-from ..caches import pinned_cache_partitioning as _pinned_cache_partitioning
-
-
 def _learn_merges(
     spark: SparkSession, pieces: DataFrame, n_merges: int
 ) -> list[tuple]:
@@ -217,7 +212,7 @@ def _learn_merges(
     r8 ADVICE) — so every CKPT_EVERY merges the current vocabulary is
     localCheckpoint-ed, bounding re-evaluation per iteration to
     CKPT_EVERY replaces."""
-    with _pinned_cache_partitioning(spark):
+    with pinned_cache_partitioning(spark):
         v0 = _piece_vocab(spark, pieces)
         merges: list[tuple] = []
         cur = v0
@@ -277,7 +272,7 @@ def learn_merges_batched(
     Returns (merges, round_sizes) — len(round_sizes) is the driver-
     barrier count the batching is buying down; the sizes let tests pin
     the per-round disjointness invariant on exact round boundaries."""
-    with _pinned_cache_partitioning(spark):  # see _learn_merges (r17)
+    with pinned_cache_partitioning(spark):  # see _learn_merges (r17)
         v0 = _piece_vocab(spark, pieces)
         merges: list[tuple] = []
         round_sizes: list[int] = []
@@ -377,16 +372,14 @@ def learn(
     return _learn_merges(spark, pieces, n_merges)
 
 
+@memo
 def learned_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """[(merge_rank, lhs, rhs, n_occ)] — the learned merge table,
     memoized per (session, corpus) so text_bpe_merges, text_tokenize_ids
     and the store build share one learning run. Routes through the
     ``learn`` selector: N_MERGES=16 <= BATCHED_ABOVE, so the canon
     queries stay on the exact learner their unrolled oracles replay."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _bpe_cache:
-        _bpe_cache[key] = learn(spark, _pieces(spark, sf_dir), N_MERGES)
-    return _bpe_cache[key]
+    return learn(spark, _pieces(spark, sf_dir), N_MERGES)
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -410,7 +403,6 @@ def _merges_df(spark: SparkSession, merges: list[tuple]) -> DataFrame:
 # Zipf join + reassembly aggregate run once (the warm-index build/serve-
 # split discipline; the relation is corpus-cardinality but narrow —
 # doc_id + two longs + one md5).
-_enc_cache: dict = register_cache({})
 
 
 def _encode_under(pieces: DataFrame, merges: list[tuple]):
@@ -425,22 +417,20 @@ def _encode_under(pieces: DataFrame, merges: list[tuple]):
     return symbols, _assemble_docs(pieces, pe)
 
 
+@memo
 def _corpus_encoding(spark: SparkSession, sf_dir: str):
     """(symbols, encoded_df) under the full-corpus learned merges."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _enc_cache:
-        # pinned like the learners (r17): the encode chain's distinct-
-        # piece scan + N-replace chain + persisted assembly are
-        # vocabulary-sized iterative relations whose caches AQE's
-        # byte-based cached-plan re-partitioning destabilizes (measured
-        # encode 1.65 -> 2.8-9.8 s under the session-wide conf)
-        with _pinned_cache_partitioning(spark):
-            merges = learned_merges(spark, sf_dir)
-            symbols, enc = _encode_under(_pieces(spark, sf_dir), merges)
-            enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
-            enc.count()  # materialize under the pin, not at first consumer
-        _enc_cache[key] = (symbols, enc)
-    return _enc_cache[key]
+    # pinned like the learners (r17): the encode chain's distinct-
+    # piece scan + N-replace chain + persisted assembly are
+    # vocabulary-sized iterative relations whose caches AQE's
+    # byte-based cached-plan re-partitioning destabilizes (measured
+    # encode 1.65 -> 2.8-9.8 s under the session-wide conf)
+    with pinned_cache_partitioning(spark):
+        merges = learned_merges(spark, sf_dir)
+        symbols, enc = _encode_under(_pieces(spark, sf_dir), merges)
+        enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
+        enc.count()  # materialize under the pin, not at first consumer
+    return symbols, enc
 
 
 def encoded_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,27 +647,22 @@ def _write_store(
 # queries (text_tokenize_ids_incremental, text_tokenizer_oov_rate) —
 # memoize it per (session, corpus) so the base merge learning + base
 # encode run once (the build/serve-split discipline).
-_base_cache: dict = register_cache({})
-
-
+@memo
 def _base_artifacts(spark: SparkSession, sf_dir: str):
     """(merges, symbols, enc_base) learned/encoded over the UNSEEDED
     base corpus (doc_id % DOC_DELTA_MOD != 0)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _base_cache:
-        # pinned for the same reason as _corpus_encoding (r17)
-        with _pinned_cache_partitioning(spark):
-            pieces = _pieces_of(
-                table(spark, sf_dir, "documents").filter(
-                    F.col("doc_id") % DOC_DELTA_MOD != 0
-                )
+    # pinned for the same reason as _corpus_encoding (r17)
+    with pinned_cache_partitioning(spark):
+        pieces = _pieces_of(
+            table(spark, sf_dir, "documents").filter(
+                F.col("doc_id") % DOC_DELTA_MOD != 0
             )
-            merges = learn(spark, pieces, N_MERGES)
-            symbols, enc = _encode_under(pieces, merges)
-            enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
-            enc.count()  # materialize under the pin
-        _base_cache[key] = (merges, symbols, enc)
-    return _base_cache[key]
+        )
+        merges = learn(spark, pieces, N_MERGES)
+        symbols, enc = _encode_under(pieces, merges)
+        enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
+        enc.count()  # materialize under the pin
+    return merges, symbols, enc
 
 
 def read_bpe_merges(spark: SparkSession, store_path: str) -> list[tuple]:

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caches import register_cache
+from ..caches import memo
 from ..sources.tables import table
 from ..functions.tokenize import (
     duck_kgrams,
@@ -111,14 +111,9 @@ _DUCK_SHINGLES = (
 # verification / size lookups share one computation. Derived from the
 # shared tokenized-corpus cache, so shingle building shares its tokenize
 # pass with the quality gates / fingerprints.
-_shingle_cache: dict = register_cache({})
-
-
+@memo
 def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _shingle_cache:
-        _shingle_cache[key] = shingles_of(tokenized_docs(spark, sf_dir)).cache()
-    return _shingle_cache[key]
+    return shingles_of(tokenized_docs(spark, sf_dir)).cache()
 
 
 def _salted_md5s() -> list:
@@ -264,9 +259,7 @@ def lsh_pairs(sh: DataFrame, sig: DataFrame | None = None) -> DataFrame:
 
 # verified near-dup pairs are consumed by several downstream operators
 # (grouping, reporting) — cache the small result per (session, sf_dir)
-_pairs_cache: dict = register_cache({})
-
-
+@memo
 def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH near-dup pairs: (doc_a, doc_b, jaccard) for jaccard >= threshold.
 
@@ -281,9 +274,6 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     every band bucket (the classic quadratic LSH bucket); the only
     remaining quadratic is the within-group pair OUTPUT itself, which any
     formulation must emit."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _pairs_cache:
-        return _pairs_cache[key]
     sh = _shingles_cached(spark, sf_dir)
     fp_w = Window.partitionBy("fp")
     # ONE aggregate over the shingle stream computes both the set
@@ -409,9 +399,7 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1.0).alias("jaccard"),
         )
     )
-    out = cross.unionByName(within)
-    _pairs_cache[key] = out.cache()
-    return _pairs_cache[key]
+    return cross.unionByName(within).cache()
 
 
 def _duck_near_dups() -> str:
@@ -953,16 +941,9 @@ CONTAINMENT_THRESHOLD = 0.5
 # memo is its base/delta-split sibling). Consumers re-pay only the
 # candidate join + verify — the per-query work — not the corpus-wide
 # signature aggregate that builds the index.
-_full_bands_cache: dict = register_cache({})
-
-
+@memo
 def _full_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _full_bands_cache:
-        _full_bands_cache[key] = bands_of(
-            signatures_of(_shingles_cached(spark, sf_dir))
-        ).cache()
-    return _full_bands_cache[key]
+    return bands_of(signatures_of(_shingles_cached(spark, sf_dir))).cache()
 
 
 def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1119,7 +1100,15 @@ def _incr_delta_flag():
 # sf_dir) like the trained-IVF codebook (r4 verdict's build/serve split)
 # so the registered query times the PER-INGEST cost (delta signatures +
 # broadcast probe + verify), not a from-scratch base index build per run.
-_incr_base_cache: dict = register_cache({})
+# A signature depends only on the doc's own shingles, so each side filters
+# its docs' shingles BEFORE the signature aggregate — the delta pass
+# touches O(increment) shingles, never the corpus (with the base table
+# memoized, aggregating the full corpus and filtering afterwards would
+# silently re-pay a corpus pass per run).
+@memo
+def _incr_base_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sh = _shingles_cached(spark, sf_dir)
+    return bands_of(signatures_of(sh.filter(~_incr_delta_flag()))).cache()
 
 
 def incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1127,19 +1116,9 @@ def incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch against the base corpus, verified with exact Jaccard at the
     standard threshold."""
     sh = _shingles_cached(spark, sf_dir)
-    # a signature depends only on the doc's own shingles, so each side
-    # filters its docs' shingles BEFORE the signature aggregate — the
-    # delta pass touches O(increment) shingles, never the corpus (with
-    # the base table memoized below, aggregating the full corpus and
-    # filtering afterwards would silently re-pay a corpus pass per run)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _incr_base_cache:
-        _incr_base_cache[key] = bands_of(
-            signatures_of(sh.filter(~_incr_delta_flag()))
-        ).cache()
     bands_d = bands_of(signatures_of(sh.filter(_incr_delta_flag())))
     cand = probe_candidates(
-        bands_d, _incr_base_cache[key], ("new_doc", "base_doc")
+        bands_d, _incr_base_bands(spark, sf_dir), ("new_doc", "base_doc")
     ).distinct()
     return verify_pairs(cand, sh)
 

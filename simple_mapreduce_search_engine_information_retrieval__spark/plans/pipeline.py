@@ -30,7 +30,7 @@ from .dedup import (
     minhash_near_dups,
 )
 from .corpus import tokenized_docs
-from ..caches import register_cache
+from ..caches import memo
 from ..sources.tables import table
 from .textstats import (
     _duck_lang_id,
@@ -966,14 +966,9 @@ def _doremi_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The checkpointed (source, n_tokens, sum_micro) relation is the
 # doremi family's K-row build artifact — memoized per (session, corpus)
 # like _base_artifacts so weights/mix/capstone share ONE corpus pass.
-_doremi_cache: dict = register_cache({})
-
-
+@memo
 def _doremi_per_source_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _doremi_cache:
-        _doremi_cache[key] = _doremi_per_source(spark, sf_dir).localCheckpoint()
-    return _doremi_cache[key]
+    return _doremi_per_source(spark, sf_dir).localCheckpoint()
 
 
 def doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

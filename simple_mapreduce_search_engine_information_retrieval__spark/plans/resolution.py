@@ -56,7 +56,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_cache
+from ..caches import memo
 from ..sources.tables import table
 from . import QuerySpec
 from .similarity import _dot, _micro
@@ -71,23 +71,19 @@ LINKAGE_MAX_LEV = 2  # verify threshold: near-identical entity names
 # dictionary is excluded before the self-join can square its bucket.
 LINKAGE_HOT_TOKEN_PPM = 200_000
 
+
 # Distinct-name dictionary memo: dictionary-sized (Heaps-bounded), read
 # by FOUR consumers (both token-block sides + both count joins) — cache
 # it so the record stream is scanned exactly once per (session, corpus),
 # the _full_bands_cached discipline from dedup.py.
-_names_cache: dict = register_cache({})
-
-
+@memo
 def _names_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _names_cache:
-        _names_cache[key] = (
-            table(spark, sf_dir, "part")
-            .groupBy("p_name")
-            .agg(F.count("*").alias("n_recs"))
-            .cache()
-        )
-    return _names_cache[key]
+    return (
+        table(spark, sf_dir, "part")
+        .groupBy("p_name")
+        .agg(F.count("*").alias("n_recs"))
+        .cache()
+    )
 
 
 def record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,17 +294,10 @@ def _srp_bands(aug: DataFrame) -> DataFrame:
 # both sides of every self-join read the cached (vec_id, band, bucket)
 # rows (SRP_BANDS=8 rows of 3 longs — ~192 bytes per vector, still
 # small next to the 512-byte vectors themselves), and caches.evict()
-# can release the blocks.
-_srp_bands_cache: dict = register_cache({})
-
-
+# releases the blocks with every other memo entry for the corpus.
+@memo
 def _srp_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _srp_bands_cache:
-        _srp_bands_cache[key] = _srp_bands(
-            _augmented(spark, sf_dir)
-        ).cache()
-    return _srp_bands_cache[key]
+    return _srp_bands(_augmented(spark, sf_dir)).cache()
 
 
 def srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

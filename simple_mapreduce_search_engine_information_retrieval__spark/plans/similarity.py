@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from pyspark.storagelevel import StorageLevel
 
-from ..caches import register_cache
+from ..caches import memo
 from ..sources.tables import table
 from . import QuerySpec
 
@@ -304,16 +304,9 @@ def knn_ivf_bucketed(
 # Shared cached-embeddings memo: BOTH warm indexes (trained IVF, ADC)
 # read the same (vec_id, embedding) projection — one cache entry, not
 # one per index, so warming both does not double the footprint.
-_emb_cache: dict = register_cache({})
-
-
+@memo
 def _emb_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _emb_cache:
-        _emb_cache[key] = (
-            table(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
-        )
-    return _emb_cache[key]
+    return table(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
 
 
 # Warm trained-IVF memo (same contract as _warm_adc_index): training —
@@ -323,17 +316,12 @@ def _emb_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per (session, sf_dir) so repeated queries pay serving latency, not a
 # from-scratch retrain (judge r4: the cold composed plan re-derived the
 # training every run — a bench-hygiene gap, fixed here).
-_warm_trained: dict = register_cache({})
-
-
+@memo
 def _warm_trained_index(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _warm_trained:
-        emb = _emb_cached(spark, sf_dir)
-        cents = _ivf_centroids_trained(emb).cache()
-        cells = _ivf_cells(_ivf_pairs(emb, cents)).cache()
-        _warm_trained[key] = (emb, cents, cells)
-    return _warm_trained[key]
+    emb = _emb_cached(spark, sf_dir)
+    cents = _ivf_centroids_trained(emb).cache()
+    cells = _ivf_cells(_ivf_pairs(emb, cents)).cache()
+    return emb, cents, cells
 
 
 def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1261,9 +1249,7 @@ def _stride_seed_codebook(emb: DataFrame) -> DataFrame:
     return _update(emb, _assign(emb, seeds))
 
 
-_kmeans_assign: dict = register_cache({})
-
-
+@memo
 def kmeans_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster, d): the final Lloyd assignment WITH its argmin
     squared distance, memoized per (session, sf_dir) — the clustering
@@ -1273,31 +1259,27 @@ def kmeans_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained-IVF codebook and the LSH band tables (the r4/r5 build/serve
     discipline). Lazy persist: construction stays side-effect-free, the
     first action fills the cache."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _kmeans_assign:
-        emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        c1 = _stride_seed_codebook(emb)
-        pairs = emb.crossJoin(F.broadcast(c1)).select(
+    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    c1 = _stride_seed_codebook(emb)
+    pairs = emb.crossJoin(F.broadcast(c1)).select(
+        "vec_id",
+        "cent_id",
+        _sq_dist(F.col("embedding"), F.col("cvec")).alias("d"),
+    )
+    return (
+        pairs.groupBy("vec_id")
+        .agg(
+            F.min(
+                F.struct(F.col("d").alias("d"), F.col("cent_id").alias("c"))
+            ).alias("m")
+        )
+        .select(
             "vec_id",
-            "cent_id",
-            _sq_dist(F.col("embedding"), F.col("cvec")).alias("d"),
+            F.col("m.c").cast("long").alias("cluster"),
+            F.col("m.d").alias("d"),
         )
-        a2 = (
-            pairs.groupBy("vec_id")
-            .agg(
-                F.min(
-                    F.struct(F.col("d").alias("d"), F.col("cent_id").alias("c"))
-                ).alias("m")
-            )
-            .select(
-                "vec_id",
-                F.col("m.c").cast("long").alias("cluster"),
-                F.col("m.d").alias("d"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        _kmeans_assign[key] = a2
-    return _kmeans_assign[key]
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
 
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1767,28 +1749,24 @@ def _duck_pq() -> str:
 # oracle.
 ADC_RERANK = 50
 
-# Warm ADC-index memo (same contract as search.py's _warm: the index —
-# coarse cells + PQ codes — is BUILT once per (session, sf_dir) and
+
+# Warm ADC-index memo (same contract as search.py's _warm_index: the
+# index — coarse cells + PQ codes — is BUILT once per (session, sf_dir) and
 # cached; every query after that touches only code rows, broadcast LUTs
 # and the RERANK-row exact join. Without it the composed plan re-derives
 # the embeddings lineage ~20x per query — harmless at sf0.001, a
 # 20-pass corpus read at 100 TB. The on-disk analogue is write_ivf_store
 # plus a persisted codes table.)
-_warm_adc: dict = register_cache({})
-
-
+@memo
 def _warm_adc_index(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _warm_adc:
-        emb = _emb_cached(spark, sf_dir)
-        # the codebooks are part of the index — a serving engine loads
-        # them WITH the cells/codes, it does not re-derive them per query
-        cents = _ivf_centroids(emb).cache()
-        seeds = _pq_seeds(emb).cache()
-        cells = _ivf_cells(_ivf_pairs(emb, cents)).cache()
-        codes = pq_codes(spark, sf_dir).cache()
-        _warm_adc[key] = (emb, cells, codes, cents, seeds)
-    return _warm_adc[key]
+    emb = _emb_cached(spark, sf_dir)
+    # the codebooks are part of the index — a serving engine loads
+    # them WITH the cells/codes, it does not re-derive them per query
+    cents = _ivf_centroids(emb).cache()
+    seeds = _pq_seeds(emb).cache()
+    cells = _ivf_cells(_ivf_pairs(emb, cents)).cache()
+    codes = pq_codes(spark, sf_dir).cache()
+    return emb, cells, codes, cents, seeds
 
 
 def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,17 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "smse-spark", shuffle_partitions: int | None = None) -> SparkSession:
+def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The engine's one session conf table. get_spark applies it,
+    bench_profile.py overrides only spark.ui.enabled, and
+    sources.tables.ensure_session_confs re-asserts the keys every plan
+    depends on in a caller-provided session."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    return {
+        "spark.master": f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # let AQE size the output partitioning of CACHED plans by bytes
         # (guide §2.2: fewer, larger partitions): the warm memo caches
         # (postings, shingles, bands, embeddings) otherwise pin the
@@ -37,25 +40,22 @@ def get_spark(app_name: str = "smse-spark", shuffle_partitions: int | None = Non
         # advisoryPartitionSizeInBytes, so a 100 TB cached relation
         # keeps thousands of partitions while a dictionary-sized memo
         # collapses to a handful.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # older fixture generations carried events.ts as TIMESTAMP(NANOS),
         # which Spark's vectorized reader rejects — read those as
         # epoch-nanos long; sources/tables.py::ts_as_nanos normalizes the
         # current timestamp[us] generation to the same canonical long.
         # DuckDB side uses epoch_ns() for the same integer value.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    )
-    return builder.getOrCreate()
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    }
 
 
-def tune_for_scale(spark: SparkSession, target_partitions: int) -> None:
-    """At 100 TB, shuffle partition count must track data volume
-    (~128-256 MB per post-shuffle partition); AQE coalesces down but the
-    initial number bounds parallelism. Call-site override for big jobs."""
-    spark.conf.set("spark.sql.shuffle.partitions", str(target_partitions))
+def get_spark(app_name: str = "smse-spark", shuffle_partitions: int | None = None) -> SparkSession:
+    builder = SparkSession.builder.appName(app_name)
+    return builder.config(map=session_confs(shuffle_partitions)).getOrCreate()

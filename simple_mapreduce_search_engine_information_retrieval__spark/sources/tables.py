@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import session_confs
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -28,10 +30,12 @@ def ensure_session_confs(spark: SparkSession) -> None:
       read as epoch-nanos long (all time queries do exact integer
       arithmetic on it);
     - UTC session timezone so timestamp renderings match the oracle (and
-      so naive-timestamp → epoch conversions are timezone-independent)."""
+      so naive-timestamp → epoch conversions are timezone-independent).
+    Values come from session.py's conf table."""
+    confs = session_confs()
     try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        for key in ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone"):
+            spark.conf.set(key, confs[key])
     except Exception:  # pragma: no cover — conf locked down: proceed
         pass
 

@@ -7,10 +7,7 @@ from __future__ import annotations
 
 import io
 
-from simple_mapreduce_search_engine_information_retrieval__spark import (
-    caches,
-    repl,
-)
+from simple_mapreduce_search_engine_information_retrieval__spark import repl
 
 
 def test_repl_rejects_repeated_tokenizer_flag(tmp_path):
@@ -205,21 +202,3 @@ def test_repl_index_serving_survives_a_fresh_process(spark, tmp_path):
     assert got == {
         (r.rank, r.docno, f"{r.score:.6f}") for r in want
     }, proc.stdout[-1500:]
-
-
-def test_evict_releases_localcheckpoint_blocks(spark):
-    """caches.evict() on a localCheckpoint()ed memo entry must release
-    the checkpoint RDD blocks, not just call DataFrame.unpersist()
-    (r11 ADVICE: evicted doremi memos left blocks pinned on executors
-    until ContextCleaner GC)."""
-    sc = spark.sparkContext._jsc.sc()
-    memo = caches.register_cache({})
-    df = spark.range(64).localCheckpoint()
-    df.count()
-    plan = df._jdf.queryExecution().analyzed()
-    assert plan.getClass().getSimpleName() == "LogicalRDD"
-    rid = plan.rdd().id()
-    assert sc.getPersistentRDDs().contains(rid)
-    memo[("app", "/tmp/evict_probe_r12")] = df
-    assert caches.evict("/tmp/evict_probe_r12") == 1
-    assert not sc.getPersistentRDDs().contains(rid)

@@ -9,7 +9,6 @@ import os
 
 import pytest
 
-from simple_mapreduce_search_engine_information_retrieval__spark import caches
 from simple_mapreduce_search_engine_information_retrieval__spark.plans import bpe
 
 SF = "/root/testdata/sf0.001"
@@ -294,34 +293,3 @@ def test_repl_term_lookup_usage_errors(spark, monkeypatch):
     text = out.getvalue()
     assert text.count("serves from the index store") == 2
     assert text.count("blank to quit") == 3
-
-
-def test_evict_leaves_foreign_rdd_backed_frames_alone(spark):
-    """r12 ADVICE (low, caches.py): the LogicalRDD eviction branch used
-    to unpersist the source RDD of ANY RDD-backed DataFrame — e.g. one
-    built via spark.createDataFrame(rdd) whose RDD is shared outside
-    the memo. Now guarded on localCheckpoint provenance."""
-    sc = spark.sparkContext
-    rdd = sc.parallelize([(1,), (2,)]).persist()
-    rdd.count()
-    df = spark.createDataFrame(rdd, "x long")
-    memo = caches.register_cache({})
-    memo[("app", "/tmp/fake_sf")] = df
-    assert caches.evict("/tmp/fake_sf") == 1
-    # the foreign RDD's persistence survives eviction
-    assert rdd.getStorageLevel().useMemory
-    rdd.unpersist()
-    caches._REGISTRY.remove(memo)
-
-
-def test_evict_still_releases_local_checkpoints(spark):
-    """The r11 fix stays effective under the new guard: a memoized
-    localCheckpoint()ed DataFrame's blocks ARE released on evict."""
-    df = spark.range(10).localCheckpoint()
-    jrdd = df._jdf.queryExecution().analyzed().rdd()
-    assert jrdd.getStorageLevel().useMemory()
-    memo = caches.register_cache({})
-    memo[("app", "/tmp/fake_sf2")] = df
-    assert caches.evict("/tmp/fake_sf2") == 1
-    assert not jrdd.getStorageLevel().useMemory()
-    caches._REGISTRY.remove(memo)
