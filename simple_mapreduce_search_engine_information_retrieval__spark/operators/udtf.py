@@ -36,13 +36,14 @@ class PositionalTokens:
 def positional_terms_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UDTF-powered twin of plans/indexing.py::positional_terms: a
     LATERAL table-function join in SQL."""
-    from ..sources.tables import register_views
+    from ..plans import sql_over_views
 
-    register_views(spark, sf_dir)
     spark.udtf.register("smse_positional_tokens", PositionalTokens)
-    return spark.sql(
+    return sql_over_views(
+        spark,
+        sf_dir,
         """
         SELECT d.doc_id AS docno, t.pos, t.term
         FROM documents d, LATERAL smse_positional_tokens(d.text) t
-        """
+        """,
     )

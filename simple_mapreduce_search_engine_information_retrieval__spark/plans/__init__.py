@@ -6,7 +6,8 @@ Two authoring styles:
 - dual rendering: Spark DataFrame code + DuckDB SQL generated from the
   SAME constants (tokenizer queries — dialects genuinely differ);
 - shared SQL: one ANSI string executed by both Spark SQL and DuckDB
-  (relational pack — dialect subset is common).
+  (relational pack — dialect subset is common), or a Spark SQL string
+  with its DuckDB rendering where the dialects differ.
 """
 
 from __future__ import annotations
@@ -24,12 +25,19 @@ class QuerySpec:
     note: str = ""
 
 
-def shared_sql(sql: str, note: str = "") -> QuerySpec:
-    """One ANSI-SQL string runnable by both Spark SQL and DuckDB."""
+def sql_over_views(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """Run ``sql`` over ``sf_dir``'s fixture tables as temp views."""
     from ..sources.tables import register_views
 
-    def fn(spark: SparkSession, sf_dir: str, _sql: str = sql) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(_sql)
+    register_views(spark, sf_dir)
+    return spark.sql(sql)
 
-    return QuerySpec(fn=fn, oracle=sql, note=note)
+
+def shared_sql(sql: str, note: str = "", duck: str | None = None) -> QuerySpec:
+    """Spark SQL over the fixture views. The DuckDB oracle runs the same
+    string, or ``duck`` where the two dialects must differ."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return sql_over_views(spark, sf_dir, sql)
+
+    return QuerySpec(fn=fn, oracle=sql if duck is None else duck, note=note)

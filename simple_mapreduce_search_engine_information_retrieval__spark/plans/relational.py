@@ -27,7 +27,6 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 from . import QuerySpec, shared_sql
-from ..sources.tables import register_views
 
 # ---------------------------------------------------------------- TPC-H-ish
 
@@ -560,12 +559,7 @@ def _events_pair(body: str) -> QuerySpec:
         JSONK="CAST(json_extract_string(props, '$.k') AS BIGINT)",
         TS="(epoch_ns(ts) // 1000)",
     )
-
-    def fn(spark, sf_dir, _sql=spark_sql):
-        register_views(spark, sf_dir)
-        return spark.sql(_sql)
-
-    return QuerySpec(fn=fn, oracle=duck_sql, note="events (dual time fragments)")
+    return shared_sql(spark_sql, "events (dual time fragments)", duck=duck_sql)
 
 
 EVENTS_HOURLY = """
@@ -750,11 +744,6 @@ FROM m GROUP BY event_type
 """
 
 
-def _events_mad_outliers(spark: SparkSession, sf_dir: str) -> "DataFrame":
-    register_views(spark, sf_dir)
-    return spark.sql(_MAD_BODY.format(P="percentile"))
-
-
 # GROUPING SETS — the general form behind ROLLUP/CUBE (both already
 # covered): sliced single-dimension marginals + grand total in ONE pass
 # over orders (Spark Expand + single aggregate; a UNION ALL of three
@@ -795,17 +784,7 @@ GROUP BY event_type
 """
 
 
-def _events_variant(spark: SparkSession, sf_dir: str) -> "DataFrame":
-    register_views(spark, sf_dir)
-    return spark.sql(_EVENTS_VARIANT_SPARK)
-
-
 _PIVOT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def _events_percentiles(spark: SparkSession, sf_dir: str) -> "DataFrame":
-    register_views(spark, sf_dir)
-    return spark.sql(_PCTL_BODY.format(P="percentile"))
 
 
 # EWMA — the order-SENSITIVE sequential fold (smoothed per-user value):
@@ -947,11 +926,11 @@ QUERIES: dict[str, QuerySpec] = {
         oracle=_duck_user_zscores(),
         note="applyInPandas grouped-map twin (§2.10 API exerciser)",
     ),
-    "events_props_variant": QuerySpec(
-        fn=_events_variant,
-        oracle=_EVENTS_VARIANT_DUCK,
-        note="Spark 4 VARIANT semi-structured path: parse_json once, "
+    "events_props_variant": shared_sql(
+        _EVENTS_VARIANT_SPARK,
+        "Spark 4 VARIANT semi-structured path: parse_json once, "
         "typed variant_get extractions, vs DuckDB JSON oracle",
+        duck=_EVENTS_VARIANT_DUCK,
     ),
     "events_value_gmean_udaf": QuerySpec(
         fn=_value_gmean,
@@ -1010,10 +989,10 @@ QUERIES: dict[str, QuerySpec] = {
     "events_asof_last_purchase": _events_pair(EVENTS_ASOF_LAST_PURCHASE),
     "events_user_segments_scd2": _events_pair(EVENTS_USER_SEGMENTS_SCD2),
     "range_join_value_bands": shared_sql(RANGE_JOIN_VALUE_BANDS, "band/range join"),
-    "events_value_percentiles": QuerySpec(
-        fn=_events_percentiles,
-        oracle=_PCTL_BODY.format(P="quantile_cont"),
-        note="exact interpolated percentiles (percentile vs quantile_cont)",
+    "events_value_percentiles": shared_sql(
+        _PCTL_BODY.format(P="percentile"),
+        "exact interpolated percentiles (percentile vs quantile_cont)",
+        duck=_PCTL_BODY.format(P="quantile_cont"),
     ),
     "events_user_ewma": QuerySpec(
         fn=_events_ewma,
@@ -1022,11 +1001,11 @@ QUERIES: dict[str, QuerySpec] = {
         "reduce over the time-sorted value list; batch twin of the "
         "stateful-streaming operator)",
     ),
-    "events_value_mad_outliers": QuerySpec(
-        fn=_events_mad_outliers,
-        oracle=_MAD_BODY.format(P="quantile_cont"),
-        note="median/MAD robust outlier profile, single-shuffle window "
+    "events_value_mad_outliers": shared_sql(
+        _MAD_BODY.format(P="percentile"),
+        "median/MAD robust outlier profile, single-shuffle window "
         "formulation, thresholds rounded before comparison",
+        duck=_MAD_BODY.format(P="quantile_cont"),
     ),
     "grouping_sets_orders": shared_sql(
         ORDERS_GROUPING_SETS, "GROUPING SETS single-pass marginals"

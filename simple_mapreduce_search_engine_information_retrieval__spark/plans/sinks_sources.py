@@ -117,30 +117,16 @@ DUCK_TSV_DOCNO = (
 )
 
 
-_JSONL_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-    ]
-)
-
-
 def jsonl_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → JSONL sink → JSONL source with explicit schema; the
     returned projection recomputes the text length AFTER the round-trip,
     so JSON escaping errors (quotes, unicode, newlines) surface as value
     mismatches, not just row-count drift."""
     path = _out_path("jsonl_docs", sf_dir)
-    (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text", "lang", "source")
-        .write.mode("overwrite")
-        .json(path)
-    )
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
+    docs.write.mode("overwrite").json(path)
     return (
-        spark.read.schema(_JSONL_SCHEMA)
+        spark.read.schema(docs.schema)
         .json(path)
         .select(
             "doc_id",
@@ -196,17 +182,18 @@ def csv_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rest belongs in the columnar paths above."""
     hostile = F.concat(F.lit('say "'), F.col("text"), F.lit('",\n end'))
     path = _out_path("csv_docs", sf_dir)
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", hostile.alias("text"), "lang", "source"
+    )
     (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", hostile.alias("text"), "lang", "source")
-        .write.mode("overwrite")
+        docs.write.mode("overwrite")
         .option("header", True)
         .option("quote", '"')
         .option("escape", '"')
         .csv(path)
     )
     return (
-        spark.read.schema(_JSONL_SCHEMA)
+        spark.read.schema(docs.schema)
         .option("header", True)
         .option("quote", '"')
         .option("escape", '"')
@@ -249,10 +236,11 @@ def csv_documents_sharded_roundtrip(
     makes an unsplittable format scale by file count."""
     hostile = F.concat(F.lit('say "'), F.col("text"), F.lit('",\n end'))
     path = _out_path("csv_docs_sharded", sf_dir)
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", hostile.alias("text"), "lang", "source"
+    )
     (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", hostile.alias("text"), "lang", "source")
-        .repartitionByRange(SOURCE_SHARDS, "doc_id")
+        docs.repartitionByRange(SOURCE_SHARDS, "doc_id")
         .write.mode("overwrite")
         .option("header", True)
         .option("quote", '"')
@@ -260,7 +248,7 @@ def csv_documents_sharded_roundtrip(
         .csv(path)
     )
     return (
-        spark.read.schema(_JSONL_SCHEMA)
+        spark.read.schema(docs.schema)
         .option("header", True)
         .option("quote", '"')
         .option("escape", '"')

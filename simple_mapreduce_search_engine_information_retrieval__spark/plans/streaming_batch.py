@@ -13,12 +13,6 @@ import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..sources.tables import table
 from ..streaming.jobs import hourly_counts, sliding_counts, user_sessions
@@ -192,22 +186,13 @@ def incremental_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import incremental_index, read_incremental_index
     from .sinks_sources import _out_path
 
-    docs_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
     path = _out_path("incr_index", sf_dir)
     # the upsert sink APPENDS (LSM layout) — start each run from empty or
     # re-runs would double every tf
     if os.path.exists(path):
         shutil.rmtree(path)
     docs_stream = (
-        spark.readStream.schema(docs_schema)
+        spark.readStream.schema(table(spark, sf_dir, "documents").schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
@@ -230,31 +215,18 @@ def streaming_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..sources.tables import table
     from ..streaming.jobs import incremental_near_dups
     from .sinks_sources import _out_path
 
-    docs_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
     split_path = _out_path("neardup_splits", sf_dir)
     store_path = _out_path("neardup_store", sf_dir)
     for p in (split_path, store_path):
         if os.path.exists(p):
             shutil.rmtree(p)
-    (
-        table(spark, sf_dir, "documents")
-        .repartitionByRange(3, "doc_id")
-        .write.parquet(split_path)
-    )
+    docs = table(spark, sf_dir, "documents")
+    docs.repartitionByRange(3, "doc_id").write.parquet(split_path)
     docs_stream = (
-        spark.readStream.schema(docs_schema)
+        spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(split_path)
     )
@@ -302,9 +274,7 @@ def streaming_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.parquet(split)
     )
     emb_stream = (
-        spark.readStream.schema(
-            "vec_id LONG, embedding ARRAY<FLOAT>, label LONG"
-        )
+        spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(split)
     )

@@ -4,14 +4,22 @@ Defaults are chosen for the test harness (local[32], 128 GiB box) but the
 knobs mirror what a 1000-executor cluster run would set: AQE on (runtime
 partition coalescing + skew-join splitting), explicit shuffle partitions,
 Arrow for the few pandas-UDF paths, UTC session timezone so results are
-byte-identical to the DuckDB oracle.
+byte-identical to the DuckDB oracle. get_spark also ships the package
+to the Python workers, so UDF queries run from any working directory.
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
@@ -56,6 +64,27 @@ def session_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
     }
 
 
+def ship_package(spark: SparkSession) -> None:
+    """Zip this package's sources once per SparkContext and add the zip
+    with ``addPyFile``, so Python workers import the package whatever
+    their working directory (UDFs and UDTFs pickle their functions by
+    module reference). The zip lives until the driver process exits."""
+    sc = spark.sparkContext
+    name = os.path.basename(_PACKAGE_DIR) + ".zip"
+    if name in sc._python_includes:
+        return
+    out = tempfile.mkdtemp(prefix="smse-pyfiles-")
+    atexit.register(shutil.rmtree, out, True)
+    path = os.path.join(out, name)
+    root = os.path.dirname(_PACKAGE_DIR)
+    with zipfile.ZipFile(path, "w") as zf:
+        for src in glob.glob(os.path.join(_PACKAGE_DIR, "**", "*.py"), recursive=True):
+            zf.write(src, os.path.relpath(src, root))
+    sc.addPyFile(path)
+
+
 def get_spark(app_name: str = "smse-spark", shuffle_partitions: int | None = None) -> SparkSession:
     builder = SparkSession.builder.appName(app_name)
-    return builder.config(map=session_confs(shuffle_partitions)).getOrCreate()
+    spark = builder.config(map=session_confs(shuffle_partitions)).getOrCreate()
+    ship_package(spark)
+    return spark

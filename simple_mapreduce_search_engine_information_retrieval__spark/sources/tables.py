@@ -1,10 +1,18 @@
-"""Fixture table loaders.
+"""The fixture catalog: every plan reads the driver-generated Parquet
+tables (`/root/testdata/sf*/`, see TESTDATA.md) through this module.
 
-All tests/benches read the driver-generated Parquet tables
-(`/root/testdata/sf*/`, see TESTDATA.md). Loading is plain
-``spark.read.parquet`` — Catalyst gets column pruning + predicate pushdown
-for free, and at cluster scale the same call reads a partitioned
-directory tree with partition pruning.
+Each table is resolved once per session and ``sf_dir``: ``raw_table`` is a
+``caches.memo`` over ``spark.read.parquet``, so its schema-inference job
+runs on the first read only and every later plan reuses the resolved
+relation. A DataFrame is a lazy plan over that relation, so sharing it
+loses nothing: Catalyst still prunes columns and pushes predicates per
+query. ``table`` adds the canonical ``ts`` form for events, and
+``register_views`` re-points the ten temp views at the memoized frames on
+every call (no job), so switching ``sf_dir`` re-points them too.
+
+Fixture files are treated as immutable for the life of a session. After
+rewriting a fixture in place, ``caches.evict(sf_dir)`` drops its reads
+and the next call re-resolves them.
 """
 
 from __future__ import annotations
@@ -13,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..caches import memo
 from ..session import session_confs
 
 TABLES = (
@@ -60,15 +69,23 @@ def ts_as_nanos(df: DataFrame) -> DataFrame:
     )
 
 
+@memo
+def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The one read of ``<sf_dir>/<name>.parquet`` per session, with the
+    file's physical types (streams take their schema from it). Callers
+    run ensure_session_confs first."""
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = raw_table(spark, sf_dir, name)
     return ts_as_nanos(df) if name == "events" else df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view (mirrors the driver's
-    DuckDB-side pre-registered views) and return the DataFrames."""
+    """Point every fixture temp view (mirrors the driver's DuckDB-side
+    pre-registered views) at this ``sf_dir``'s tables and return them."""
     out = {}
     for name in TABLES:
         df = table(spark, sf_dir, name)

@@ -22,25 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-def _events_schema(ts_type) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),  # physical fixture type; see below
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
 SESSION_GAP = "30 minutes"
@@ -51,15 +33,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture, normalized so ``ts``
     is epoch-nanos long (the canonical form, see sources/tables.py) no
     matter whether the fixture generation wrote TIMESTAMP(NANOS) or
-    timestamp[us]. The stream schema must match the file's physical type,
-    so probe it once with a driver-side batch schema read (metadata only,
-    no scan)."""
-    from ..sources.tables import ensure_session_confs, ts_as_nanos
+    timestamp[us]. The stream schema must match the file's physical
+    types, so it is the fixture catalog's raw events read."""
+    from ..sources.tables import ensure_session_confs, raw_table, ts_as_nanos
 
     ensure_session_confs(spark)
-    physical = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
     stream = (
-        spark.readStream.schema(_events_schema(physical))
+        spark.readStream.schema(raw_table(spark, sf_dir, "events").schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )

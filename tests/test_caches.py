@@ -70,11 +70,13 @@ def test_evict_is_per_sf_dir(spark):
     search._warm_index(spark, SF, 1)
     sh = dedup._shingles_cached(spark, SF)
     sh.count()
-    # evicting a different corpus leaves this one alone
-    assert caches.evict("/root/testdata/sf0.01") == 0 or all(
-        key[1] != SF for key in search._warm_index.entries
-    )
+    # evicting a different corpus drops only that corpus's entries
+    other = "/root/testdata/sf0.01"
+    caches.evict(other)
+    assert all(key[1] != other for store in caches._STORES for key in store)
+    assert any(key[1] == SF for key in search._warm_index.entries)
     assert any(key[1] == SF for key in dedup._shingles_cached.entries)
+    assert sh.storageLevel.useMemory
     caches.clear()
     assert not search._warm_index.entries and not dedup._shingles_cached.entries
     assert not sh.storageLevel.useMemory

@@ -6,17 +6,20 @@ streaming-batch twins)."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 import textwrap
+
+import pytest
 
 
 def test_canon_rejects_raw_array_columns(spark):
     """The round-3 regression class: the driver canon sorts RAW output
     columns before hashing, so a plain array<bigint> column hard-errors
     (factorize on unhashable lists). The local gate must reproduce that:
-    the raw-array int8 rendering FAILS compare(), the csv rendering
-    PASSES, and no registered query ships a top-level array/map column."""
+    the raw-array int8 rendering FAILS compare() and the csv rendering
+    PASSES."""
     from simple_mapreduce_search_engine_information_retrieval__spark.oracle import (
         compare,
         duck_connect,
@@ -46,28 +49,32 @@ def test_canon_rejects_raw_array_columns(spark):
         con.close()
 
 
-def test_no_registered_query_outputs_raw_arrays(spark):
-    """Schema-level guard over the whole registry: plan every query at
-    sf0.001 and assert no top-level ArrayType/MapType output column —
-    the driver canon cannot hash them (struct columns are fine: Rows are
-    tuples)."""
-    import io
-    from contextlib import redirect_stdout, redirect_stderr
+@pytest.mark.parametrize("oracle", [None, "SELECT [1, 2] AS ids, 7 AS n"])
+def test_check_query_rejects_raw_array_and_map_columns(spark, oracle):
+    """The parity sweep is the registry-wide guard: check_query rejects a
+    top-level ArrayType/MapType output column for every spec, oracled or
+    rows-only, and names the column and its type."""
+    from pyspark.sql import functions as F
 
-    from pyspark.sql.types import ArrayType, MapType
+    from simple_mapreduce_search_engine_information_retrieval__spark.oracle import (
+        check_query,
+    )
+    from simple_mapreduce_search_engine_information_retrieval__spark.plans import (
+        QuerySpec,
+    )
 
-    import __spark_entry__ as e
+    def fn(spark, sf_dir):
+        return spark.range(2).select(
+            F.array("id").alias("ids"),
+            F.create_map("id", "id").alias("m"),
+            F.struct("id").alias("s"),
+        )
 
-    sf = "/root/testdata/sf0.001"
-    offenders = []
-    for name, fn in e.queries().items():
-        sink = io.StringIO()
-        with redirect_stdout(sink), redirect_stderr(sink):
-            schema = fn(spark, sf).schema
-        for f in schema.fields:
-            if isinstance(f.dataType, (ArrayType, MapType)):
-                offenders.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
-    assert not offenders, offenders
+    issues = check_query(spark, "/root/testdata/sf0.001", "q", QuerySpec(fn, oracle))
+    assert issues == [
+        "q: raw array<bigint> output column ids",
+        "q: raw map<bigint,bigint> output column m",
+    ]
 
 
 def test_changed_this_round_names_exist():
@@ -118,6 +125,43 @@ def test_vanilla_session_runs_contract():
     assert lines, f"no result line; stderr tail: {proc.stderr[-2000:]}"
     out = json.loads(lines[0][len("RESULT:"):])
     assert out["entry_rows"] == 10
+    assert all(v > 0 for v in out.values()), out
+
+
+def test_udf_queries_run_outside_the_repo(tmp_path):
+    """Python workers import the package from the zip get_spark ships,
+    not from the working directory: the UDTF and UDF lines run from a
+    directory that does not hold the package."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = textwrap.dedent(
+        f"""
+        import json, sys
+        sys.path.insert(0, {repo!r})
+        from simple_mapreduce_search_engine_information_retrieval__spark.session import get_spark
+        spark = get_spark("cwd-test")
+        spark.sparkContext.setLogLevel("ERROR")
+        import __spark_entry__ as e
+
+        q = e.queries()
+        out = {{
+            name: len(q[name](spark, "/root/testdata/sf0.001").collect())
+            for name in ["positional_terms_udtf", "search_fidelity_stemmed"]
+        }}
+        print("RESULT:" + json.dumps(out))
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=420,
+    )
+    lines = [l for l in proc.stdout.splitlines() if l.startswith("RESULT:")]
+    assert lines, f"no result line; stderr tail: {proc.stderr[-2000:]}"
+    out = json.loads(lines[0][len("RESULT:"):])
     assert all(v > 0 for v in out.values()), out
 
 
