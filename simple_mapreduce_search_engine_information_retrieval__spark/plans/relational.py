@@ -152,12 +152,15 @@ WHERE c.c_acctbal > (
 )
 """
 
+# avg over DECIMAL: a double sum's order decides a mean that sits on a
+# rounding tie (sf0.01 Brand#4 is exactly 950.59375), so both engines
+# average the cent-exact prices and round the exact mean half-up.
 PART_SIZE_STATS = """
 SELECT p_brand,
        count(DISTINCT p_type)     AS n_types,
        CAST(max(p_size) AS BIGINT) AS max_size,
        CAST(min(p_size) AS BIGINT) AS min_size,
-       round(avg(p_retailprice), 4) AS avg_price
+       CAST(round(avg(CAST(p_retailprice AS DECIMAL(15, 2))), 4) AS DOUBLE) AS avg_price
 FROM part
 GROUP BY p_brand
 """
