@@ -68,7 +68,7 @@ def ship_package(spark: SparkSession) -> None:
     """Zip this package's sources once per SparkContext and add the zip
     with ``addPyFile``, so Python workers import the package whatever
     their working directory (UDFs and UDTFs pickle their functions by
-    module reference). The zip lives until the driver process exits."""
+    module reference). The zip lives until this Python process exits."""
     sc = spark.sparkContext
     name = os.path.basename(_PACKAGE_DIR) + ".zip"
     if name in sc._python_includes:

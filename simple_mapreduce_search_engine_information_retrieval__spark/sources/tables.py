@@ -1,5 +1,5 @@
-"""The fixture catalog: every plan reads the driver-generated Parquet
-tables (`/root/testdata/sf*/`, see TESTDATA.md) through this module.
+"""The fixture catalog: every plan reads the Parquet fixture tables (see
+TESTDATA.md) through this module.
 
 Each table is resolved once per session and ``sf_dir``: ``raw_table`` is a
 ``caches.memo`` over ``spark.read.parquet``, so its schema-inference job
@@ -84,8 +84,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Point every fixture temp view (mirrors the driver's DuckDB-side
-    pre-registered views) at this ``sf_dir``'s tables and return them."""
+    """Point every fixture temp view (mirrors the oracle's DuckDB-side
+    views) at this ``sf_dir``'s tables and return them."""
     out = {}
     for name in TABLES:
         df = table(spark, sf_dir, name)

@@ -4,6 +4,7 @@ kind the memo body chose."""
 
 from __future__ import annotations
 
+from conftest import SF_MED
 from pyspark.storagelevel import StorageLevel
 
 from simple_mapreduce_search_engine_information_retrieval__spark import caches
@@ -71,9 +72,8 @@ def test_evict_is_per_sf_dir(spark):
     sh = dedup._shingles_cached(spark, SF)
     sh.count()
     # evicting a different corpus drops only that corpus's entries
-    other = "/root/testdata/sf0.01"
-    caches.evict(other)
-    assert all(key[1] != other for store in caches._STORES for key in store)
+    caches.evict(SF_MED)
+    assert all(key[1] != SF_MED for store in caches._STORES for key in store)
     assert any(key[1] == SF for key in search._warm_index.entries)
     assert any(key[1] == SF for key in dedup._shingles_cached.entries)
     assert sh.storageLevel.useMemory

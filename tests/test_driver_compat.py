@@ -12,6 +12,7 @@ import sys
 import textwrap
 
 import pytest
+from conftest import SF_SMALL
 
 
 def test_canon_rejects_raw_array_columns(spark):
@@ -70,7 +71,7 @@ def test_check_query_rejects_raw_array_and_map_columns(spark, oracle):
             F.struct("id").alias("s"),
         )
 
-    issues = check_query(spark, "/root/testdata/sf0.001", "q", QuerySpec(fn, oracle))
+    issues = check_query(spark, SF_SMALL, "q", QuerySpec(fn, oracle))
     assert issues == [
         "q: raw array<bigint> output column ids",
         "q: raw map<bigint,bigint> output column m",
@@ -144,7 +145,7 @@ def test_udf_queries_run_outside_the_repo(tmp_path):
 
         q = e.queries()
         out = {{
-            name: len(q[name](spark, "/root/testdata/sf0.001").collect())
+            name: len(q[name](spark, {SF_SMALL!r}).collect())
             for name in ["positional_terms_udtf", "search_fidelity_stemmed"]
         }}
         print("RESULT:" + json.dumps(out))

@@ -3,17 +3,15 @@ per session and sf_dir, and the temp views follow the latest sf_dir."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pyarrow.parquet as pq
 
+from conftest import SF_MED, SF_SMALL
 from simple_mapreduce_search_engine_information_retrieval__spark import caches
 from simple_mapreduce_search_engine_information_retrieval__spark.sources.tables import (
-    raw_table,
     register_views,
     table,
 )
-
-SF_SMALL = "/root/testdata/sf0.001"
-SF_MED = "/root/testdata/sf0.01"
 
 
 def _jobs(spark) -> int:
@@ -49,10 +47,12 @@ def test_views_follow_the_latest_sf_dir(spark):
         assert got == want[sf]
 
 
-def test_evict_re_resolves_the_tables(spark):
-    first = raw_table(spark, SF_SMALL, "nation")
-    assert raw_table(spark, SF_SMALL, "nation") is first
-    assert caches.evict(SF_SMALL) >= 1
-    again = raw_table(spark, SF_SMALL, "nation")
-    assert again is not first
-    assert again.count() == first.count()
+def test_evict_re_resolves_a_rewritten_fixture(spark, tmp_path):
+    sf = str(tmp_path)
+    path = f"{sf}/nation.parquet"
+    pd.DataFrame({"n_nationkey": [0, 1]}).to_parquet(path)
+    first = table(spark, sf, "nation")
+    assert table(spark, sf, "nation") is first
+    pd.DataFrame({"n_nationkey": [0, 1, 2]}).to_parquet(path)
+    assert caches.evict(sf) == 1
+    assert table(spark, sf, "nation").count() == 3
