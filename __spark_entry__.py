@@ -115,32 +115,14 @@ def _latest_verdicts() -> dict[str, tuple[int, bool]]:
 # list each round.
 CHANGED_THIS_ROUND = frozenset(
     {
-        # Every fixture table is now read once per session through the
-        # sources.tables catalog. These streams take their schema from
-        # the catalog's read instead of a hand-written StructType.
-        "streaming_incremental_index",
-        "streaming_near_dup_pairs",
-        "streaming_vector_ingest",
-        "streaming_interval_join",
-        "streaming_dedup_keys",
-        "streaming_stateful_user_stats",
-        "streaming_enriched_segments",
-        # Sink round-trips that read back with the catalog's documents
-        # schema instead of a hand-written one.
-        "jsonl_documents_roundtrip",
-        "csv_documents_roundtrip",
-        "csv_documents_sharded_roundtrip",
-        # Averages cent-exact prices over DECIMAL so a mean on a rounding
-        # tie no longer depends on the double sum's order.
-        "part_brand_stats",
-        # SQL-over-views specs now built through shared_sql.
-        "events_props_variant",
-        "events_value_percentiles",
-        "events_value_mad_outliers",
-        "events_hourly",
-        # Witnesses of the register_views path over the memoized frames.
-        "tpch_q6_revenue_forecast",
-        "positional_terms_udtf",
+        # Store-served and corpus-side wildcard lookups now share one
+        # gram candidate scan (index_store.gram_candidates).
+        "wildcard_indexed_roundtrip",
+        "wildcard_prefix",
+        "wildcard_suffix",
+        "wildcard_infix",
+        # Probe grams now come from the shared pattern_grams extraction.
+        "search_fuzzy_term",
     }
 )
 
