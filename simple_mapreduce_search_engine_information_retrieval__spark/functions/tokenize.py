@@ -287,12 +287,13 @@ def pattern_grams(parts: list[str], k: int) -> set[str]:
     """Distinct k-grams fully inside a wildcard pattern's FIXED parts —
     the probe set of the classic k-gram wildcard scheme (reference
     CharKGramTermIndexer; a `pre*suf` pattern probes the grams of
-    '$'+pre and suf+'$'). Driver-side twin of chargrams_col's padding
-    convention, and since r15 the ONLY extraction site: the REPL's
-    store-served lookups, the oracled wildcard queries
-    (plans/search.py wildcard_terms/duck_wildcard), and the persisted
-    store serve (plans/index_store.py wildcard_indexed) all call it —
-    one gram space by construction (r14 verdict #3)."""
+    '$'+pre and suf+'$'; a fuzzy probe passes the one part '$'+term+'$').
+    Driver-side twin of chargrams_col's padding convention, and the ONLY
+    extraction site: the oracled corpus queries (plans/search.py
+    wildcard_terms/duck_wildcard, fuzzy_terms/duck_fuzzy_terms) and the
+    store serves (plans/index_store.py wildcard_indexed/fuzzy_indexed,
+    which the REPL's :wildcard/:fuzzy call) all use it — one gram space
+    by construction."""
     grams: set[str] = set()
     for part in parts:
         grams.update(part[i : i + k] for i in range(len(part) - k + 1))
@@ -302,10 +303,9 @@ def pattern_grams(parts: list[str], k: int) -> set[str]:
 def wildcard_verify_cond(pre: str, suf: str) -> Column:
     """Post-filter verify for `pre*suf` candidate terms — the k-gram
     wildcard scheme's false-positive filter, ONE definition shared by
-    the corpus-side query (plans/search.wildcard_terms), the
-    persisted-store serve (plans/index_store.wildcard_indexed), and the
-    REPL's starred arm (r15 review: the verify layer was triplicated
-    the same way the gram extraction had been before pattern_grams):
+    the corpus-side query (plans/search.wildcard_terms) and the
+    persisted-store serve (plans/index_store.wildcard_indexed, which
+    the REPL's :wildcard calls):
     startswith/endswith plus the ``length(term) >= len(pre)+len(suf)``
     overlap guard (r13 ADVICE: 'sp*park' must not match 'spark' — the
     glob needs at least 6 chars). duck_wildcard renders the identical

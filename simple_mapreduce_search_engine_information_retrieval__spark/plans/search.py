@@ -701,11 +701,12 @@ def wildcard_terms(
 
     Returns the matching vocabulary terms. Only patterns with a single
     '*' are supported (the classic k-gram wildcard scheme). Probe grams
-    come from the shared pattern_grams extraction (one definition for
-    this query, its duck oracle, the REPL's store-served lookups, and
-    the persisted-store serve — r14 verdict #3 consolidation), and the
-    post-filter verify from the shared wildcard_verify_cond."""
+    come from the shared pattern_grams extraction, candidates from the
+    store serve's index_store.gram_candidates over the corpus-derived
+    chargram index, and the post-filter verify from the shared
+    wildcard_verify_cond."""
     from ..functions.tokenize import pattern_grams, wildcard_verify_cond
+    from .index_store import gram_candidates
     from .indexing import chargram_flat
 
     # Same exactly-one-'*' contract as the store twin wildcard_indexed
@@ -725,14 +726,8 @@ def wildcard_terms(
 
         cand = doc_terms(spark, sf_dir, 1).select("term").distinct()
     else:
-        idx = chargram_flat(spark, sf_dir, k)
-        gdf = spark.createDataFrame([(g,) for g in sorted(grams)], "gram string")
-        cand = (
-            idx.join(F.broadcast(gdf), "gram")
-            .groupBy("term")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") == len(grams))  # must contain ALL pattern grams
-        )
+        # a term must contain ALL pattern grams
+        cand = gram_candidates(chargram_flat(spark, sf_dir, k), grams, len(grams))
     # post-filter kills k-gram false positives (standard verify step)
     return cand.filter(wildcard_verify_cond(pre, suf)).select("term")
 
@@ -1237,11 +1232,6 @@ FUZZY_MAX_LEV = 2  # classic spell-correct edit-distance tolerance
 FUZZY_TOP = 5
 
 
-def _query_grams(term: str, k: int) -> list[str]:
-    probe = f"${term}$"
-    return sorted({probe[i : i + k] for i in range(len(probe) - k + 1)})
-
-
 def fuzzy_terms(
     spark: SparkSession, sf_dir: str, query_term: str, *, k: int = FUZZY_K
 ) -> DataFrame:
@@ -1254,9 +1244,10 @@ def fuzzy_terms(
     Scale: candidates come from the gram-index join (never a vocab scan
     against the query), the per-term gram counts are dictionary-sized,
     and the levenshtein verify runs only on the candidate set."""
+    from ..functions.tokenize import pattern_grams
     from .indexing import chargram_flat
 
-    qgrams = _query_grams(query_term, k)
+    qgrams = sorted(pattern_grams([f"${query_term}$"], k))
     idx = chargram_flat(spark, sf_dir, k)
     tn = idx.groupBy("term").agg(F.count("*").alias("tn"))
     gdf = spark.createDataFrame([(g,) for g in qgrams], "gram string")
@@ -1286,9 +1277,10 @@ def fuzzy_terms(
 
 
 def duck_fuzzy_terms(query_term: str, *, k: int = FUZZY_K) -> str:
+    from ..functions.tokenize import pattern_grams
     from .indexing import duck_chargram_flat
 
-    qgrams = _query_grams(query_term, k)
+    qgrams = sorted(pattern_grams([f"${query_term}$"], k))
     lits = ", ".join("'" + g + "'" for g in qgrams)
     return f"""
 WITH idx AS ({duck_chargram_flat(k)}),

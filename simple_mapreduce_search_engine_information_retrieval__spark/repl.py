@@ -16,16 +16,15 @@ Reads queries from stdin (one per line, blank line or EOF quits), so it
 is scriptable: `echo "spark join" | python -m ...repl`.
 
 With --index, queries serve from a PREBUILT on-disk index store
-(plans/index_store.build_index's postings/stats/meta layout) instead of
-deriving postings from the corpus — the reference REPL's own shape
-(IntDocVectorsForwardIndex.java:243-322 reads a BUILT forward index,
-never the collection; r12). The store's parts are registered as
-session views once at startup; each query is then a pushed-down
-`term IN` scan plus a tiny aggregate (see search_indexed). The served
-scores are the correct-df tf-idf, so --index rejects --compat-df1 and
---stemmed (the store holds unstemmed k=1 terms and correct df by
-construction); docid display needs the corpus-side mapping, so hits
-print as (rank, docno, score).
+(plans/index_store: build_index writes it, open_index registers its
+parts at startup) instead of deriving postings from the corpus — the
+reference REPL's own shape (IntDocVectorsForwardIndex.java:243-322
+reads a BUILT forward index, never the collection). Each query is
+then index_store.search_indexed. The served scores are the correct-df
+tf-idf, so --index rejects --compat-df1 and --stemmed (the store
+holds unstemmed k=1 terms and correct df by construction); docid
+display needs the corpus-side mapping, so hits print as
+(rank, docno, score).
 
 With --tokenizer, a `:tokenize <text>` line encodes the text to token
 ids under the LOADED sidecar artifact (round 11) — either sidecar
@@ -38,17 +37,12 @@ UNK_ID, the frozen-tokenizer OOV semantics. A byte-level public
 artifact (HFImport.byte_level, r13) byte-expands the input pieces
 before the replay.
 
-With --index, `:wildcard pre*suf` and `:fuzzy term` additionally serve
-TERM lookups from the same store (r12 verdict optional #8 — one
-session, every surface store-served): prefix patterns push down to the
-sorted bucketed stats parquet as a StartsWith filter; suffix/infix
-wildcards and fuzzy (levenshtein<=2) candidates serve from the store's
-chargram part when it exists (build_index(chargrams=True) — the F9
-CharKGramTermIndexer mechanism, r13 verdict #6) with a post-filter
-verify, falling back to the dictionary-sized stats scan otherwise —
-and print the top-10 matching terms by df. --tokenizer composes with
---index, so one session serves ranked queries, term lookups AND
-:tokenize with no corpus access.
+With --index, `:wildcard pre*suf` and `:fuzzy term` print the top-10
+store terms by df, served by index_store.wildcard_indexed and
+index_store.fuzzy_indexed; a `:wildcard` argument without a star is an
+exact dictionary lookup. --tokenizer composes with --index, so one
+session serves ranked queries, term lookups AND :tokenize with no
+corpus access.
 """
 
 from __future__ import annotations
@@ -140,101 +134,30 @@ def _encode_text(
 
 REPL_INDEX_NAME = "smse_repl_index"
 
-# :fuzzy edit budget. The levenshtein verify bound AND the q-gram
-# candidate threshold (len(grams) - MAX_EDITS*K) both derive from this
-# single constant (ADVICE r14: two separate literals could drift, and a
-# threshold looser than the verify is silent — it drops true matches
-# the post-filter can never recover).
-MAX_EDITS = 2
-
-
-def _chargram_candidates(spark, grams: set[str], min_common: int):
-    """Terms sharing >= min_common of the probe grams, served from the
-    store's chargram part as a pushed-down `gram IN (...)` scan + a
-    dictionary-bounded count agg. Returns None when the store has no
-    chargrams part (built with chargrams=False) — caller falls back to
-    the dictionary scan."""
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
-    try:
-        idx = spark.table(f"{REPL_INDEX_NAME}_chargrams")
-    except AnalysisException:  # view not registered: no part on disk
-        # narrowed from bare Exception (ADVICE r14): an unrelated
-        # catalog/analysis failure must surface, not silently degrade
-        # to the dictionary scan
-        return None
-    return (
-        idx.filter(F.col("gram").isin(sorted(grams)))
-        .groupBy("term")
-        .agg(F.count("*").alias("n_common"))
-        .filter(F.col("n_common") >= min_common)
-        .select("term")
-    )
-
 
 def _term_lookup(spark, cmd: str, arg: str):
-    """Store-served term lookup. :wildcard supports pre*, *suf, pre*suf
-    and exact (no star); :fuzzy is levenshtein<=MAX_EDITS spelling
-    correction.
-
-    Serving shapes (r13 verdict #6 — the chargram store backs the REPL
-    instead of a dictionary scan):
-    - prefix-only (`pre*`): StartsWith pushdown into the sorted bucketed
-      stats part (unchanged — already index-shaped);
-    - `*suf` / `pre*suf`: gram-intersection candidates from the store's
-      chargrams part (every pattern gram must hit — wildcard_terms'
-      exact mechanism, plans/search.py:706-713), then the standard
-      post-filter verify including the length(term) >= len(pre)+len(suf)
-      guard (ADVICE r13: overlapping pre/suf previously matched terms
-      shorter than the glob requires);
-    - `:fuzzy`: k-gram count-filter candidates (q-gram lemma: lev<=d
-      terms share >= |grams(q)| - d*k distinct padded grams), then the
-      levenshtein<=2 verify — same results as the full dictionary scan,
-      pinned by test.
-    Both chargram arms fall back to the stats-part dictionary scan when
-    the pattern is too short to yield a gram / a positive threshold, or
-    when the store was built without the chargrams part.
-    Returns None on a malformed pattern (caller prints usage)."""
+    """Top-10 store terms by df, with their df and cf. `:wildcard`
+    takes pre*, *suf or pre*suf (index_store.wildcard_indexed) or a
+    no-star exact term; `:fuzzy` is levenshtein spelling correction
+    (index_store.fuzzy_indexed). The exact-match branch runs ahead of
+    the library call on purpose: wildcard_indexed raises for a no-star
+    pattern. Returns None on a multi-star pattern (caller prints
+    usage)."""
     from pyspark.sql import functions as F
 
-    from .functions.tokenize import pattern_grams, wildcard_verify_cond
-    from .plans.index_store import store_gram_k
-
-    # probe at the k the store's chargram part was WRITTEN with (gramk
-    # part, r17); pre-r17 stores fall back to the module constant
-    K = store_gram_k(spark, REPL_INDEX_NAME)
+    from .plans.index_store import fuzzy_indexed, wildcard_indexed
 
     stats = spark.table(f"{REPL_INDEX_NAME}_stats")
-    cand = None
-    if cmd == ":wildcard":
-        if arg.count("*") > 1:
-            return None
-        pre, star, suf = arg.partition("*")
-        if star:
-            # the shared verify incl. the overlap guard (ADVICE r13);
-            # startswith('')/endswith('') are vacuously true, so one
-            # definition covers pre-only / suf-only / both
-            cond = wildcard_verify_cond(pre, suf)
-            if suf:
-                # suffix/infix: chargram-served when possible
-                grams = pattern_grams([f"${pre}", f"{suf}$"], K)
-                if grams:
-                    cand = _chargram_candidates(spark, grams, len(grams))
-        else:
-            cond = F.col("term") == arg
+    if cmd == ":fuzzy":
+        scope = stats.join(fuzzy_indexed(spark, arg, name=REPL_INDEX_NAME), "term")
+    elif "*" not in arg:
+        scope = stats.filter(F.col("term") == arg)
+    elif arg.count("*") > 1:
+        return None
     else:
-        cond = F.levenshtein(F.col("term"), F.lit(arg)) <= MAX_EDITS
-        grams = pattern_grams([f"${arg}$"], K)
-        # d edits kill <= d*k grams (q-gram lemma) — same MAX_EDITS as
-        # the verify bound above, by construction
-        min_common = len(grams) - MAX_EDITS * K
-        if min_common > 0:
-            cand = _chargram_candidates(spark, grams, min_common)
-    scope = stats if cand is None else stats.join(cand, "term")
+        scope = stats.join(wildcard_indexed(spark, arg, name=REPL_INDEX_NAME), "term")
     return (
-        scope.filter(cond)
-        .orderBy(F.desc("df"), F.asc("term"))
+        scope.orderBy(F.desc("df"), F.asc("term"))
         .limit(10)
         .select("term", "df", "cf")
     )
@@ -301,44 +224,13 @@ def main(argv: list[str] | None = None, out=None) -> int:
     spark = get_spark("smse-repl")
     spark.sparkContext.setLogLevel("ERROR")
     if index_dir is not None:
-        # register the store's parts ONCE as session views so
-        # search_indexed's spark.table() lookups resolve in this fresh
-        # session (build_index's saveAsTable registrations live in the
-        # BUILDING session's catalog, not ours); per-query work is then
-        # the pushed-down term IN scan only
-        import os
+        from .plans.index_store import open_index
 
         try:
-            for part in ("postings", "stats", "meta"):
-                spark.read.parquet(
-                    os.path.join(index_dir, part)
-                ).createOrReplaceTempView(f"{REPL_INDEX_NAME}_{part}")
+            open_index(spark, index_dir, REPL_INDEX_NAME)
         except Exception as exc:  # noqa: BLE001 — bad path/layout
             print(f"! --index: not a built index store: {exc}", file=out)
             return 2
-        # optional chargram part (build_index(chargrams=True), r14):
-        # when present, :wildcard suffix/infix and :fuzzy serve as
-        # pushed-down gram IN scans instead of dictionary scans. Drop
-        # any stale view first — get_spark is getOrCreate, so a second
-        # --index run in the same process would otherwise join THIS
-        # store's stats against the PREVIOUS store's chargram part
-        # (silent false negatives). A chargrams dir that exists but
-        # does not read (interrupted build) degrades to the dictionary
-        # scan instead of crashing — the part is optional.
-        # the 1-row gramk part rides the same optional/stale-view
-        # discipline: lookups probe at the STORE's written k (r17)
-        for part in ("chargrams", "gramk"):
-            spark.catalog.dropTempView(f"{REPL_INDEX_NAME}_{part}")
-            if not os.path.isdir(os.path.join(index_dir, part)):
-                continue
-            try:
-                spark.read.parquet(
-                    os.path.join(index_dir, part)
-                ).createOrReplaceTempView(f"{REPL_INDEX_NAME}_{part}")
-            except Exception as exc:  # noqa: BLE001 — partial/corrupt part
-                print(f"! --index: {part} part unreadable ({exc}); "
-                      "term lookups fall back to the dictionary scan",
-                      file=out)
         print(f"index store: {index_dir}  mode: correct (served)", file=out)
     else:
         print(f"index: {sf_dir}  mode: "

@@ -190,8 +190,8 @@ def test_hf_bytelevel_mapping_is_total_and_invertible(sym):
     st.text(alphabet="abcde", min_size=1, max_size=12),
 )
 def test_qgram_lemma_bound_never_excludes_a_fuzzy_match(q, t):
-    """The REPL's chargram-served :fuzzy candidate filter (repl.py:
-    n_common >= |grams($q$)| - 2k for lev<=2) must be a SUPERSET of the
+    """The chargram-served fuzzy candidate filter (index_store.fuzzy_indexed:
+    n >= |grams($q$)| - 2k for lev<=2) must be a SUPERSET of the
     true matches — the q-gram lemma on $-padded DISTINCT gram sets:
     each edit destroys <= k padded grams, so <= d*k distinct grams of q
     can be missing from t entirely. Verified against an independent DP

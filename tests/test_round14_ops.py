@@ -1,7 +1,7 @@
-"""Round-14 additions: the index store's optional chargram part +
-chargram-served REPL term lookups (r13 verdict #6), the pre*suf overlap
-length guard (r13 ADVICE), and the non-trivially seeded byte-level
-import roundtrip (r13 verdict #4)."""
+"""Round-14 additions: the index store's optional chargram part (r13
+verdict #6; the lookups it serves are tested in test_term_lookup.py)
+and the non-trivially seeded byte-level import roundtrip (r13 verdict
+#4)."""
 
 from __future__ import annotations
 
@@ -23,19 +23,6 @@ def _padded_grams(term: str, k: int = CHARGRAM_K) -> set[str]:
     return {p[i : i + k] for i in range(len(p) - k + 1)}
 
 
-def _lev(a: str, b: str) -> int:
-    """Plain DP edit distance — independent of the engine's builtin."""
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(
-                min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-            )
-        prev = cur
-    return prev[-1]
-
-
 def test_build_index_chargram_part(spark, tmp_path):
     """chargrams=True persists the F9 CharKGramTermIndexer layout —
     exactly the $-padded k-gram pairs of the stats part's terms."""
@@ -52,214 +39,6 @@ def test_build_index_chargram_part(spark, tmp_path):
     out2 = str(tmp_path / "ix_default")
     build_index(spark, SF, out2, name="r14_cg_default")
     assert not os.path.exists(f"{out2}/chargrams")
-
-
-def _register_store(spark, store: str, *, with_chargrams: bool) -> None:
-    from simple_mapreduce_search_engine_information_retrieval__spark.repl import (
-        REPL_INDEX_NAME,
-    )
-
-    parts = ["postings", "stats", "meta"] + (
-        ["chargrams"] if with_chargrams else []
-    )
-    for part in parts:
-        spark.read.parquet(os.path.join(store, part)).createOrReplaceTempView(
-            f"{REPL_INDEX_NAME}_{part}"
-        )
-    # drop a stale chargram view from a previous registration
-    if not with_chargrams:
-        spark.catalog.dropTempView(f"{REPL_INDEX_NAME}_chargrams")
-
-
-def _drop_store_views(spark) -> None:
-    """Session-fixture hygiene (r15 review): views registered over a
-    test's tmp_path store must not outlive the test — a later test
-    calling repl._term_lookup without registering its own store would
-    silently serve (or FileNotFound on) the deleted parquet."""
-    from simple_mapreduce_search_engine_information_retrieval__spark.repl import (
-        REPL_INDEX_NAME,
-    )
-
-    for part in ("postings", "stats", "meta", "chargrams"):
-        spark.catalog.dropTempView(f"{REPL_INDEX_NAME}_{part}")
-
-
-def test_repl_wildcard_overlap_guard_and_chargram_parity(spark, tmp_path):
-    """r13 ADVICE (medium): ':wildcard sp*park' must NOT return 'spark'
-    (the glob needs >= 6 chars) — with AND without the chargram part.
-    And every lookup arm returns the same rows chargram-served as via
-    the dictionary scan (candidates are a superset of matches, the
-    post-filter closes the gap)."""
-    from simple_mapreduce_search_engine_information_retrieval__spark import repl
-
-    store = str(tmp_path / "ix")
-    build_index(spark, SF, store, name="r14_guard_build", chargrams=True)
-    stats = {
-        r["term"]: (int(r["df"]), int(r["cf"]))
-        for r in spark.read.parquet(f"{store}/stats").collect()
-    }
-    assert "spark" in stats
-
-    def expected(cmd: str, arg: str) -> list[tuple[str, int, int]]:
-        if cmd == ":wildcard":
-            pre, star, suf = arg.partition("*")
-            if star:
-                hits = [
-                    t
-                    for t in stats
-                    if t.startswith(pre)
-                    and t.endswith(suf)
-                    and (not suf or len(t) >= len(pre) + len(suf))
-                ]
-            else:
-                hits = [t for t in stats if t == arg]
-        else:
-            hits = [t for t in stats if _lev(t, arg) <= 2]
-        hits.sort(key=lambda t: (-stats[t][0], t))
-        return [(t, *stats[t]) for t in hits[:10]]
-
-    cases = [
-        (":wildcard", "sp*park"),  # overlapping pre/suf: must be empty
-        (":wildcard", "sp*k"),
-        (":wildcard", "*ing"),
-        (":wildcard", "spark"),
-        (":fuzzy", "sprak"),
-        (":fuzzy", "spark"),
-        (":fuzzy", "xq"),  # short: threshold <= 0, dictionary fallback
-    ]
-    assert expected(":wildcard", "sp*park") == []  # the ADVICE scenario
-    try:
-        for with_cg in (True, False):
-            _register_store(spark, store, with_chargrams=with_cg)
-            for cmd, arg in cases:
-                got = [
-                    (r["term"], int(r["df"]), int(r["cf"]))
-                    for r in repl._term_lookup(spark, cmd, arg).collect()
-                ]
-                assert got == expected(cmd, arg), (with_cg, cmd, arg)
-    finally:
-        _drop_store_views(spark)
-
-
-def test_repl_chargram_lookup_scans_push_gram_filter(spark, tmp_path):
-    """The chargram-served arms read the chargram part via a pushed-down
-    gram IN (...) parquet filter — index-shaped serving, not a full
-    dictionary pass (the wildcard_terms store twin)."""
-    from simple_mapreduce_search_engine_information_retrieval__spark import repl
-
-    store = str(tmp_path / "ix")
-    build_index(spark, SF, store, name="r14_plan_build", chargrams=True)
-    try:
-        _register_store(spark, store, with_chargrams=True)
-        for cmd, arg in ((":wildcard", "*tion"), (":fuzzy", "professional")):
-            df = repl._term_lookup(spark, cmd, arg)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            pushed = [
-                seg for seg in plan.split("PushedFilters: [")[1:]
-                if seg.split("]")[0].strip()
-            ]
-            assert any("gram" in seg.split("]")[0] for seg in pushed), (cmd, plan)
-    finally:
-        _drop_store_views(spark)
-
-
-def test_repl_store_chargram_serving_cross_process(spark, tmp_path):
-    """r13 verdict #6 'Done' condition: a fresh-process --index REPL
-    serves suffix/infix :wildcard and :fuzzy from the store's chargram
-    part, results pinned equal to the dictionary-scan semantics."""
-    import subprocess
-    import sys
-
-    store = str(tmp_path / "ix")
-    build_index(spark, SF, store, name="r14_xproc_build", chargrams=True)
-    stats = {
-        r["term"]: (int(r["df"]), int(r["cf"]))
-        for r in spark.read.parquet(f"{store}/stats").collect()
-    }
-    proc = subprocess.run(
-        [sys.executable, "-m",
-         "simple_mapreduce_search_engine_information_retrieval__spark.repl",
-         SF, "--index", store],
-        input=":wildcard *ark\n:wildcard sp*park\n:fuzzy sprak\n\n",
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    assert proc.returncode == 0, proc.stderr[-1500:]
-    prompt = "query (1-2 words, blank to quit): "
-    blocks = proc.stdout.split(prompt)[1:]  # output after each input line
-
-    def fmt(hits):
-        return [f"  {t}  df {d}  cf {c}" for t, d, c in hits] or ["  (no terms)"]
-
-    suffix_hits = sorted(
-        ((t, *stats[t]) for t in stats if t.endswith("ark")),
-        key=lambda x: (-x[1], x[0]),
-    )[:10]
-    fuzzy_hits = sorted(
-        ((t, *stats[t]) for t in stats if _lev(t, "sprak") <= 2),
-        key=lambda x: (-x[1], x[0]),
-    )[:10]
-    assert [l for l in blocks[0].splitlines() if l] == fmt(suffix_hits)
-    assert [l for l in blocks[1].splitlines() if l] == ["  (no terms)"]
-    assert [l for l in blocks[2].splitlines() if l] == fmt(fuzzy_hits)
-    assert ("spark", *stats["spark"]) in fuzzy_hits
-
-
-def test_pattern_grams_semantics():
-    """pattern_grams is now the ONLY extraction site (r14 verdict #3:
-    the inline copies in wildcard_terms/duck_wildcard were consolidated
-    into it, retiring the r14 lockstep tripwire) — pin its semantics
-    directly: $-padded fixed parts, full-window k-grams, nothing
-    spanning the '*'."""
-    from simple_mapreduce_search_engine_information_retrieval__spark.functions.tokenize import (
-        pattern_grams,
-    )
-
-    # pre*suf at k=3: grams of '$pro' and 'ing$', never 'o*i' bridges
-    assert pattern_grams("$pro*ing$".split("*"), 3) == {
-        "$pr", "pro", "ing", "ng$"
-    }
-    # suffix-only: the '$' part yields no 3-gram, 'ark$' yields two
-    assert pattern_grams("$*ark$".split("*"), 3) == {"ark", "rk$"}
-    # parts shorter than k contribute nothing -> possibly empty
-    assert pattern_grams("$s*k$".split("*"), 3) == set()
-    # k=2 matches the oracled wildcard queries' gram space
-    assert pattern_grams("$sp*k$".split("*"), 2) == {"$s", "sp", "k$"}
-    # fuzzy probe shape: one fixed part, both pads
-    assert pattern_grams(["$ab$"], 3) == {"$ab", "ab$"}
-
-
-def test_repl_main_drops_stale_chargram_view(spark, tmp_path, monkeypatch):
-    """A second --index run in the SAME process (get_spark is
-    getOrCreate) must not serve chargram candidates from the previous
-    store's view: store A (with chargrams) is registered and then
-    DELETED; store B (without chargrams) must still serve correct
-    suffix lookups via the dictionary fallback — a leaked stale view
-    would throw FileNotFound at execution or silently drop terms."""
-    import io
-    import shutil
-
-    from simple_mapreduce_search_engine_information_retrieval__spark import repl
-
-    store_a = str(tmp_path / "ix_a")
-    build_index(spark, SF, store_a, name="r14_stale_a", chargrams=True)
-    monkeypatch.setattr("sys.stdin", io.StringIO(":wildcard *ark\n\n"))
-    out = io.StringIO()
-    assert repl.main([SF, "--index", store_a], out=out) == 0
-    first = [l for l in out.getvalue().splitlines() if l.startswith("  ")]
-
-    shutil.rmtree(store_a)
-    store_b = str(tmp_path / "ix_b")
-    build_index(spark, SF, store_b, name="r14_stale_b")
-    monkeypatch.setattr("sys.stdin", io.StringIO(":wildcard *ark\n\n"))
-    out = io.StringIO()
-    assert repl.main([SF, "--index", store_b], out=out) == 0
-    second = [l for l in out.getvalue().splitlines() if l.startswith("  ")]
-    # same corpus, so the served rows must match the chargram-backed
-    # first run exactly (the fallback scan is value-identical)
-    assert second == first
 
 
 def test_bytelevel_seeded_encode_expands_real_multibyte(spark):

@@ -10,10 +10,6 @@ definition all three serving paths share — and reads the dimension off
 the same K-row codebook collect the planner already does (zero extra
 I/O). Mirrors the r16 wildcard exactly-one-'*' contract pattern: raise
 on malformed input, values provably unchanged on well-formed input.
-
-Also: duck_wildcard (the oracle-SQL twin) grew the same
-exactly-one-'*' guard as wildcard_terms / wildcard_indexed (r16
-ADVICE) — reject-only, output byte-identical for valid patterns.
 """
 
 from __future__ import annotations
@@ -183,52 +179,3 @@ def test_ivfpq_serve_reads_pq_geometry_off_the_store(spark, ivfpq_store, tmp_pat
     codes3.write.partitionBy("cell").parquet(f"{bad}/codes")
     with pytest.raises(ValueError, match="does not divide"):
         query_ivfpq_store(spark, bad, good)
-
-
-def test_gram_k_is_persisted_and_read_back(spark, tmp_path):
-    """r16 verdict #6: build_index(chargrams=True) persists the gram k
-    the chargrams part was written with (1-row gramk part), and the
-    serves read it back instead of trusting the CHARGRAM_K module
-    constant — the build/serve coupling the r15/r16 verdicts flagged
-    is eliminated. Stores without the part (pre-r17, or chargrams=False
-    builds) fall back to the constant."""
-    import os
-
-    from simple_mapreduce_search_engine_information_retrieval__spark.plans.index_store import (
-        CHARGRAM_K,
-        build_index,
-        store_gram_k,
-        wildcard_indexed,
-    )
-
-    out = str(tmp_path / "ix_cg")
-    name = build_index(spark, SF, out, name="r17_gramk", chargrams=True)
-    try:
-        assert os.path.isdir(os.path.join(out, "gramk"))
-        assert store_gram_k(spark, name) == CHARGRAM_K
-        got = {r.term for r in wildcard_indexed(spark, "sp*", name=name).collect()}
-        assert "spark" in got
-        # fallback: a store registered WITHOUT the gramk part (the
-        # pre-r17 layout) serves at the module constant
-        assert store_gram_k(spark, "r17_no_such_store") == CHARGRAM_K
-    finally:
-        for part in ("postings", "stats", "chargrams"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}_{part}")
-        for part in ("meta", "gramk"):  # r17: scalar parts are views
-            spark.catalog.dropTempView(f"{name}_{part}")
-
-
-def test_duck_wildcard_shares_the_one_star_contract():
-    """The oracle-SQL generator rejects the same malformed pattern set
-    as wildcard_terms / wildcard_indexed (r16 ADVICE), and its output
-    for valid single-star patterns still renders exactly one LIKE '%'
-    glob (reject-only guard — no rendering change)."""
-    from simple_mapreduce_search_engine_information_retrieval__spark.plans.search import (
-        duck_wildcard,
-    )
-
-    for bad in ("spark", "a*b*c", "", "**"):
-        with pytest.raises(ValueError, match="exactly one"):
-            duck_wildcard(bad)
-    sql = duck_wildcard("sp*")
-    assert "LIKE 'sp%'" in sql and sql.count("LIKE") == 1
