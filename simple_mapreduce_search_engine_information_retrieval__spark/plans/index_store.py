@@ -161,7 +161,7 @@ def _write_scalar_part(df: DataFrame, path: str, view: str) -> None:
     df.sparkSession.read.parquet(path).createOrReplaceTempView(view)
 
 
-def open_index(spark: SparkSession, path: str, name: str = "smse_index") -> str:
+def open_index(spark: SparkSession, path: str, name: str) -> str:
     """Register the store built at ``path`` as the ``<name>_<part>``
     session views the serves read, so any session — a fresh process
     included — serves it (build_index's registrations live in the
@@ -220,9 +220,9 @@ def _term_candidates(
     spark: SparkSession, name: str, grams: set[str], min_common: int
 ) -> DataFrame:
     """gram_candidates over the store's chargrams part, or every stats
-    term when the threshold is <= 0 (no grams to probe) or the store
-    has no chargrams part — a dictionary-sized scan, never a corpus
-    scan."""
+    term when the probe is too short for a positive threshold or the
+    store has no chargrams part — a dictionary-sized scan, never a
+    corpus scan."""
     index = _optional_part(spark, name, "chargrams") if min_common > 0 else None
     if index is None:
         return spark.table(f"{name}_stats").select("term")
