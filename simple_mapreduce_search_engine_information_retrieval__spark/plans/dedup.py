@@ -147,21 +147,16 @@ def _duck_minhash(src: str | None = None) -> str:
 
 
 def bands_of(sig: DataFrame) -> DataFrame:
-    """(doc_id, band_key): one row per doc and band of its signature."""
-    rows = []
+    """(doc_id, band_key): one row per doc and band of its signature.
+    One select exploding the band keys, not a union of per-band
+    selects: Catalyst's column pruning pushes through a union and
+    splits the one signature aggregate under it into one per band."""
     per = N_HASHES // N_BANDS
-    for b in range(N_BANDS):
-        cols = [F.col(f"h{b * per + r}") for r in range(per)]
-        rows.append(
-            sig.select(
-                "doc_id",
-                F.md5(F.concat(F.lit(f"{b}:"), *cols)).alias("band_key"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.union(r)
-    return out
+    keys = [
+        F.md5(F.concat(F.lit(f"{b}:"), *[F.col(f"h{b * per + r}") for r in range(per)]))
+        for b in range(N_BANDS)
+    ]
+    return sig.select("doc_id", F.explode(F.array(*keys)).alias("band_key"))
 
 
 def _duck_bands_of(rel: str) -> str:

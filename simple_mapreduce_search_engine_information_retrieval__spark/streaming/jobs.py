@@ -384,139 +384,107 @@ def incremental_near_dups(
     """Streaming near-dup maintenance: each micro-batch of documents is
     shingled and MinHash-banded, PROBED against the persisted band
     store (within-batch self-probe included), verified with exact
-    Jaccard against the persisted shingle store, and then appended to
-    the store — the streaming twin of plans/dedup.py's
+    Jaccard against the persisted shingle store, and its pairs appended
+    to the store — the streaming twin of plans/dedup.py's
     incremental_minhash (registered as dedup_incremental_minhash), where
     the "increment" is a micro-batch. Shingling, signatures, bands, the
     probe and the exact verify are plans/dedup.py's one MinHash chain.
 
-    Discovered pairs land in <store>/pairs; bands and shingles
-    accumulate in <store>/bands and <store>/shingles (LSM-style
-    batch=<id> partitions, one per micro-batch — each batch overwrites
-    only its own partition, so a replayed batch is idempotent).
-    A pair is discovered exactly once —
-    in the first batch where both members exist (probe side is always
-    the batch; store-store pairs never re-form) — so the accumulated
-    pair set equals the one-shot batch LSH answer in ANY delivery
-    order. Scale: per batch the
-    probe broadcasts the batch-sized band/candidate relations; the
-    stored corpus index is only ever scanned, never reshuffled — and
-    the exact-verify stage scans the shingle store ONCE, restricted to
-    the candidate doc ids (r12; it previously aggregated the whole
-    store's shingle counts every batch, an O(corpus)-per-ingest cost
-    no 100 TB maintenance job could pay)."""
+    The store is three parts under ``store_path`` — shingles, bands and
+    pairs — each LSM-style, one ``batch=<id>`` partition per
+    micro-batch. A batch writes its own partitions first and then
+    reads them back as part of the store, so every batch-sized relation
+    is built once and each store part is scanned once (besides a read
+    of the partition the batch just wrote):
+
+    1. write the batch's shingles to ``shingles/batch=<id>``;
+    2. band the ``batch == id`` shingles and write ``bands/batch=<id>``;
+    3. probe: the ``batch == id`` bands against the ``batch <= id``
+       bands (a broadcast of the batch side; the store is only scanned);
+    4. read the ``batch <= id`` shingles of the candidate docs only;
+    5. verify exactly and write ``pairs/batch=<id>``.
+
+    A pair is discovered exactly once — in the first batch where both
+    members exist (the probe side is always the batch, so store-store
+    pairs never re-form) — so the accumulated pair set equals the
+    one-shot batch LSH answer in ANY delivery order."""
     import os
+
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     from ..plans.dedup import (
         bands_of,
         probe_candidates,
         signatures_of,
         text_shingles,
-        verify_pairs,
     )
 
     bands_p = os.path.join(store_path, "bands")
     sh_p = os.path.join(store_path, "shingles")
     pairs_p = os.path.join(store_path, "pairs")
 
+    def write_part(df: DataFrame, path: str, batch_id: int) -> DataFrame:
+        """Overwrite ``path``'s batch=<id> partition with ``df`` and
+        return the whole part, read with an explicit schema (no
+        schema-inference jobs). The write coalesces to two files, so
+        the store stays a few files per batch instead of one per
+        shuffle partition."""
+        df.coalesce(2).write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
+        schema = StructType(df.schema.fields + [StructField("batch", IntegerType())])
+        return spark.read.schema(schema).parquet(path)
+
     def probe_and_append(batch: DataFrame, batch_id: int) -> None:
+        # verify_pairs is looked up per batch so a test can replace it
+        from ..plans.dedup import verify_pairs
+
         # a micro-batch arrives as one file -> one input split; spread
         # it before the tokenizer or the whole shingle pass runs on a
         # single core (the same single-split hazard as replicated
         # fixture reads — see bench.py's index build)
         batch = batch.repartition(spark.sparkContext.defaultParallelism)
-        sh_b = text_shingles(batch).localCheckpoint()  # feeds 4 consumers below
-        bands_b = bands_of(signatures_of(sh_b))
-        # store detection goes through the Hadoop FileSystem resolved
-        # from the path's own scheme, not driver-local os.path — on
-        # HDFS/S3 store paths a local-FS check is always false and every
-        # batch would silently skip probing the accumulated index
-        # (ADVICE r4)
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(bands_p)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        have_store = fs.exists(jpath)
-        if have_store:
-            # exclude the CURRENT batch's partition: after a mid-batch
-            # crash the store may hold this batch's partially-committed
-            # output, and replaying against it would double-count the
-            # batch's own shingles in the size lookups (wrong Jaccard).
-            # Committed batches are strictly smaller ids.
-            prev = F.col("batch") < batch_id
-            bands_all = bands_b.unionByName(
-                spark.read.parquet(bands_p)
-                .where(prev)
-                .select("doc_id", "band_key")
-            )
-            sh_all = sh_b.unionByName(
-                spark.read.parquet(sh_p).where(prev).select("doc_id", "shingle")
-            )
-        else:
-            bands_all, sh_all = bands_b, sh_b
+        this, upto = F.col("batch") == batch_id, F.col("batch") <= batch_id
+        shingles = write_part(text_shingles(batch), sh_p, batch_id)
+        sh_b = shingles.where(this).select("doc_id", "shingle")
+        bands = write_part(bands_of(signatures_of(sh_b)), bands_p, batch_id)
         cand = (
-            probe_candidates(bands_b, bands_all)
+            probe_candidates(
+                bands.where(this).select("doc_id", "band_key"),
+                bands.where(upto).select("doc_id", "band_key"),
+            )
             .filter(F.col("doc_a") != F.col("doc_b"))
             .select(
                 F.least("doc_a", "doc_b").alias("doc_a"),
                 F.greatest("doc_a", "doc_b").alias("doc_b"),
             )
             .distinct()
-            # every candidate has >=1 batch member (the probe side is
-            # bands_b) and store-store pairs never appear, so each pair
-            # is discovered in exactly one batch — the first where both
-            # members exist — regardless of delivery order
-            .cache()  # collision residue, reused by the verify probe
-            # and the doc-id restriction below; unpersisted post-write
+            .localCheckpoint()  # the collision residue; read twice below
         )
         cand_docs = cand.select(
             F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
         ).distinct()
-        # Exact-verify reads ONLY the candidate docs' shingles (r12):
-        # sizes/a/b previously scanned the FULL accumulated shingle
-        # store three times per batch — O(corpus) per ingest batch, the
-        # one scale-killer this job still carried. The collision
-        # residue is batch-bounded, so the store scan restricts to its
-        # doc ids (value-identical: every downstream join keys on
-        # cand's doc ids) and caches for its three readers.
-        sh_cand = sh_all.join(
+        # the exact verify reads only the candidate docs' shingles, one
+        # scan of the store for its three readers
+        sh_cand = (
+            shingles.where(upto)
+            .select("doc_id", "shingle")
             # bounded: distinct doc ids of the batch collision residue
-            F.broadcast(cand_docs),
-            "doc_id",
-        ).cache()
-        try:
-            pairs = verify_pairs(cand, sh_cand)
-            # batch-sized writes: coalesce so the store stays a few
-            # files per batch instead of spraying 32 shards each (the
-            # store is re-read every subsequent batch; at cluster scale
-            # size the coalesce to the increment's real volume). Each
-            # batch OVERWRITES its own batch=<id> partition instead of
-            # appending to a flat dir: replaying a killed half-committed
-            # batch rewrites exactly its own partition, which together
-            # with the `batch < batch_id` store-read filter above makes
-            # the foreachBatch idempotent by batch id — the exactly-once
-            # contract, not just at-least-once.
-            pairs.coalesce(1).write.mode("overwrite").parquet(
-                f"{pairs_p}/batch={batch_id}"
-            )
-            bands_b.coalesce(2).write.mode("overwrite").parquet(
-                f"{bands_p}/batch={batch_id}"
-            )
-            sh_b.coalesce(2).write.mode("overwrite").parquet(
-                f"{sh_p}/batch={batch_id}"
-            )
-        finally:
-            # release the batch residue even when a mid-batch write
-            # fails (r12 ADVICE) — the replayed batch re-caches its own
-            cand.unpersist()
-            sh_cand.unpersist()
+            .join(F.broadcast(cand_docs), "doc_id")
+            .localCheckpoint()
+        )
+        # pairs go last: a batch that dies before this write leaves only
+        # its own shingles/bands partitions, which its replay overwrites
+        verify_pairs(cand, sh_cand).coalesce(1).write.mode("overwrite").parquet(
+            f"{pairs_p}/batch={batch_id}"
+        )
 
     # ``checkpoint_path`` makes the maintenance restartable: a killed
-    # job resumes at the first uncommitted batch, and because every
-    # batch (re)writes only its own batch=<id> store partition and the
-    # probe reads only strictly-earlier partitions, a replayed
-    # half-committed batch converges to the same store — exactly-once,
-    # including mid-batch kills (tested in tests/test_streaming.py::
-    # test_near_dup_store_checkpoint_resume, which also replays a batch
-    # by deleting its checkpoint commit marker)
+    # job resumes at the first uncommitted batch and replays it under
+    # the same id. Every write overwrites only that batch's own
+    # batch=<id> partition and every read stops at ``batch <= id``, so a
+    # replay over a half- or fully-written batch sees exactly the store
+    # the first attempt saw — exactly-once, including mid-batch kills
+    # (tests/test_near_dup_chain.py covers a kill between the bands and
+    # pairs writes and a replay forced by deleting a commit marker)
     writer = docs_stream.writeStream.foreachBatch(probe_and_append)
     if checkpoint_path is not None:
         writer = writer.option("checkpointLocation", checkpoint_path)

@@ -1,19 +1,12 @@
 """Property tests for the second round-4 operator batch: Dirichlet
-query-likelihood ranking, portable HLL, PII/identifier scrubbing, and
-incremental MinHash dedup. The value oracles run in
-tests/test_oracle_parity.py; these assert the SEMANTIC invariants the
-oracle hash can't express."""
+query-likelihood ranking, portable HLL and PII/identifier scrubbing.
+The value oracles run in tests/test_oracle_parity.py; these assert the
+SEMANTIC invariants the oracle hash can't express."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from simple_mapreduce_search_engine_information_retrieval__spark.plans.dedup import (
-    JACCARD_THRESHOLD,
-    incremental_minhash,
-    minhash_near_dups,
-    _incr_delta_flag,
-)
 from simple_mapreduce_search_engine_information_retrieval__spark.plans.search import (
     search_lm_dirichlet,
     tokenize_query,
@@ -71,31 +64,6 @@ def test_pii_scrub_leaves_no_digits(spark, sf_dir):
     assert res.select("c_custkey").distinct().count() == res.count()
 
 
-def test_incremental_matches_full_run_on_crossing_pairs(spark, sf_dir):
-    """The delta-vs-base probe must find EXACTLY the near-dup pairs of
-    the full symmetric run that cross the split (same band scheme, same
-    verify), with identical jaccard values."""
-    inc = {
-        (r.new_doc, r.base_doc, r.jaccard)
-        for r in incremental_minhash(spark, sf_dir).collect()
-    }
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    delta_ids = {
-        r.doc_id for r in docs.filter(_incr_delta_flag()).collect()
-    }
-    full = minhash_near_dups(spark, sf_dir).collect()
-    crossing = set()
-    for r in full:
-        if r.jaccard < JACCARD_THRESHOLD:
-            continue
-        if (r.doc_a in delta_ids) != (r.doc_b in delta_ids):
-            new, base = (
-                (r.doc_a, r.doc_b) if r.doc_a in delta_ids else (r.doc_b, r.doc_a)
-            )
-            crossing.add((new, base, r.jaccard))
-    assert inc == crossing
-
-
 def test_stratified_sample_allocation_exact(spark):
     """Largest-remainder allocation sums EXACTLY to the budget and every
     stratum is within 1 of its exact proportional quota."""
@@ -133,38 +101,6 @@ def test_epoch_mix_respects_weights(spark):
     # deterministic: a second evaluation is identical
     again = {r.source: r.n_copies for r in epoch_mix(spark, "/root/testdata/sf0.01").collect()}
     assert again == {s: r.n_copies for s, r in rows.items()}
-
-
-def test_streaming_near_dups_equal_batch_answer(spark, sf_dir):
-    """The accumulated streaming pair store equals the one-shot batch
-    LSH answer, and cross-batch pairs (members in different doc_id
-    quartiles) are discovered whenever the batch answer contains them —
-    proving the probe really works against the persisted store, not
-    just within a micro-batch."""
-    from simple_mapreduce_search_engine_information_retrieval__spark.plans.streaming_batch import (
-        streaming_near_dup_pairs,
-    )
-    from simple_mapreduce_search_engine_information_retrieval__spark.sources.tables import (
-        table,
-    )
-
-    got = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in streaming_near_dup_pairs(spark, sf_dir).collect()
-    }
-    want = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_near_dups(spark, sf_dir).collect()
-        if r.jaccard >= JACCARD_THRESHOLD
-    }
-    assert got == want
-    ids = sorted(r.doc_id for r in table(spark, sf_dir, "documents").select("doc_id").collect())
-    quartile = {d: i * 4 // len(ids) for i, d in enumerate(ids)}
-    want_cross = {p for p in want if quartile[p[0]] != quartile[p[1]]}
-    got_cross = {p for p in got if quartile[p[0]] != quartile[p[1]]}
-    assert got_cross == want_cross
-    if want_cross:
-        assert len(got_cross) > 0
 
 
 def test_truncation_quality_decays_monotonically(spark, sf_dir):

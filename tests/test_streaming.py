@@ -115,92 +115,6 @@ def test_parquet_sink_checkpoint_exactly_once(spark, sf_dir):
         assert n1 == n2 == want
 
 
-def test_near_dup_store_checkpoint_resume(spark, sf_dir):
-    """Kill-and-resume contract for the streaming LSH maintenance
-    (VERDICT r5 directive #6): drain part of the corpus, 'die', resume
-    from the checkpoint with the remaining files, then restart once more
-    with nothing new — the accumulated pair store must equal the
-    one-shot batch LSH answer exactly, with no re-applied appends."""
-    import os
-    import shutil
-    import tempfile
-
-    from simple_mapreduce_search_engine_information_retrieval__spark.plans.dedup import (
-        minhash_near_dups,
-    )
-    from simple_mapreduce_search_engine_information_retrieval__spark.sources.tables import (
-        table,
-    )
-    from simple_mapreduce_search_engine_information_retrieval__spark.streaming.jobs import (
-        incremental_near_dups,
-    )
-
-    schema = (
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        staged, watched = f"{tmp}/staged", f"{tmp}/watched"
-        store, ckpt = f"{tmp}/store", f"{tmp}/ckpt"
-        (
-            table(spark, sf_dir, "documents")
-            .repartitionByRange(4, "doc_id")
-            .write.parquet(staged)
-        )
-        parts = sorted(
-            f for f in os.listdir(staged) if f.endswith(".parquet")
-        )
-        assert len(parts) == 4
-        os.makedirs(watched)
-
-        def run():
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(watched)
-            )
-            incremental_near_dups(
-                spark, stream, store, checkpoint_path=ckpt
-            )
-
-        def pairs_df():
-            return spark.read.parquet(f"{store}/pairs").select(
-                "doc_a", "doc_b", "jaccard"
-            )
-
-        # batches 1-2 land, then the job "dies"
-        for f in parts[:2]:
-            shutil.copy(f"{staged}/{f}", f"{watched}/{f}")
-        run()
-        # resume from the checkpoint with the late-arriving files
-        for f in parts[2:]:
-            shutil.copy(f"{staged}/{f}", f"{watched}/{f}")
-        run()
-        # pure restart with nothing new: must change nothing
-        n_before = pairs_df().count()
-        run()
-        assert pairs_df().count() == n_before
-        # MID-BATCH kill: forge the crash window where the last batch's
-        # store partitions are written but its checkpoint commit marker
-        # is not — delete the marker so resume REPLAYS that batch over
-        # its own half/fully-committed output. Batch-scoped overwrite +
-        # the batch< filter must make the replay idempotent.
-        commits = sorted(
-            f
-            for f in os.listdir(f"{ckpt}/commits")
-            if not f.startswith(".")
-        )
-        os.remove(f"{ckpt}/commits/{commits[-1]}")
-        crc = f"{ckpt}/commits/.{commits[-1]}.crc"  # Hadoop local-FS shadow
-        if os.path.exists(crc):
-            os.remove(crc)
-        run()
-        got = pairs_df()
-        assert got.count() == n_before
-        want = minhash_near_dups(spark, sf_dir)
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-
-
 def test_vector_ingest_checkpoint_resume(spark, sf_dir):
     """Kill-and-resume contract for the streaming ANN ingest (the
     near-dup test's discipline applied to the vector triad leg): ingest
