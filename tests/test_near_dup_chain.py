@@ -142,7 +142,7 @@ def test_bands_of_equals_duck_bands(spark):
     got = Counter(tuple(r) for r in dedup.bands_of(sig).collect())
     con = duckdb.connect()
     con.execute(
-        f"CREATE TABLE sig AS SELECT * FROM (VALUES "
+        "CREATE TABLE sig AS SELECT * FROM (VALUES "
         + ", ".join(str(row) for row in SIGS)
         + f") t(doc_id, {', '.join(hs)})"
     )
