@@ -300,20 +300,17 @@ def pattern_grams(parts: list[str], k: int) -> set[str]:
     return grams
 
 
-def wildcard_verify_cond(pre: str, suf: str) -> Column:
-    """Post-filter verify for `pre*suf` candidate terms — the k-gram
-    wildcard scheme's false-positive filter, ONE definition shared by
-    the corpus-side query (plans/search.wildcard_terms) and the
-    persisted-store serve (plans/index_store.wildcard_indexed, which
-    the REPL's :wildcard calls):
-    startswith/endswith plus the ``length(term) >= len(pre)+len(suf)``
-    overlap guard (r13 ADVICE: 'sp*park' must not match 'spark' — the
-    glob needs at least 6 chars). duck_wildcard renders the identical
-    predicate in SQL (LIKE + length), the dual-rendering convention."""
+def wildcard_verify_cond(pre: str, suf: str) -> tuple[str, dict]:
+    """Post-filter verify for `pre*suf` candidate terms, ONE definition
+    shared by plans/search.wildcard_terms and the store serve
+    plans/index_store.wildcard_indexed: a Spark SQL condition on
+    ``term`` and its named parameters. startswith/endswith match ``%``
+    and ``_`` literally; the length guard stops 'sp*park' matching
+    'spark'. duck_wildcard renders it in DuckDB SQL (LIKE + length)."""
     return (
-        F.col("term").startswith(pre)
-        & F.col("term").endswith(suf)
-        & (F.length("term") >= len(pre) + len(suf))
+        "startswith(term, :pre) AND endswith(term, :suf) "
+        "AND length(term) >= :min_len",
+        {"pre": pre, "suf": suf, "min_len": len(pre) + len(suf)},
     )
 
 

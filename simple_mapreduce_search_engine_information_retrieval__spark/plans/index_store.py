@@ -12,7 +12,8 @@ IntDocVectorsForwardIndex.java:106-120). The Spark-native answer:
 - ``term IN (...)`` predicates push into the Parquet scan (dictionary +
   row-group stats skip nearly all data — the moral equivalent of the
   forward-index seek);
-- bucketBy(term) means ANY term-keyed join against the index is
+- bucketBy(term) serves the build and any term-keyed join read
+  through the catalog: the stats aggregate and such joins are
   shuffle-free on the index side;
 - at 100 TB the same layout holds with more buckets (buckets ~ total
   size / 1 GB), and heavy terms stay within one bucket but spread over
@@ -26,13 +27,21 @@ Serving, all over the ``<name>_<part>`` session views:
   (levenshtein <= MAX_EDITS) look up vocabulary terms: candidates from
   the optional chargrams part through ``gram_candidates``, then an
   exact verify; a store without the part serves from the stats scan.
+
+Each serve is ONE ``spark.sql`` statement, parsed and analyzed once,
+with terms, grams and pattern pieces bound as named parameters. The
+store scan sits in a ``/*+ COALESCE(1) */`` subquery, so the pushed-down
+``IN`` scan, df, the aggregate, top-k and ``row_number`` run as one task
+with no ``Exchange``: a lookup reads a few row groups, cheaper in one
+task than spread behind shuffles. One eager scalar read (``n_docs`` or
+``store_gram_k``) precedes it. A path-opened store has no bucket
+metadata, so that task opens every part file: ``buckets`` bounds them.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -128,16 +137,8 @@ def build_index(
             .format("parquet")
             .saveAsTable(f"{name}_chargrams")
         )
-        # persist the gram k the part was WRITTEN with next to it
-        # (r16 verdict #6): serves probe at the store's own k instead
-        # of trusting the module constant — the build/serve coupling
-        # the r15/r16 verdicts flagged is eliminated, not just fenced.
-        # Plain parquet + temp view (r17): these 1-row scalar parts
-        # need no bucketing metadata, and saveAsTable's catalog+commit
-        # machinery measured 0.6-3.3 s PER PART vs ~0.6 s for the
-        # write+view pair — the same view-over-part attach open_index
-        # uses, so the serve-side ``spark.table(name_*)`` reads
-        # resolve identically.
+        # persist the gram k the part was WRITTEN with, so serves probe
+        # at the store's own k, not at the module constant
         _write_scalar_part(
             spark.createDataFrame([(CHARGRAM_K,)], "gram_k long"),
             f"{out_dir}/gramk",
@@ -178,55 +179,61 @@ def open_index(spark: SparkSession, path: str, name: str) -> str:
     return name
 
 
-def _optional_part(spark: SparkSession, name: str, part: str) -> DataFrame | None:
-    """The store's ``part`` view, or None when the store has none (a
-    chargrams=False build, or a store from before the part existed).
-    Only the missing-view AnalysisException means "no part": a part
-    whose files are gone must fail, not silently degrade."""
-    try:
-        return spark.table(f"{name}_{part}")
-    except AnalysisException:
-        return None
+def _has_part(spark: SparkSession, name: str, part: str) -> bool:
+    """Whether the store registered a ``part`` view. Only a missing
+    view means "no part": a part whose files are gone fails its scan."""
+    return spark.catalog.tableExists(f"{name}_{part}")
+
+
+def _scan(view: str) -> str:
+    """A store part as a SQL relation read in one task: the serves'
+    filters push through the coalesce into the parquet scan."""
+    return f"(SELECT /*+ COALESCE(1) */ * FROM `{view}`)"
+
+
+def _in_list(prefix: str, values: list[str]) -> tuple[str, dict]:
+    """Named parameter markers ``:<prefix>0, :<prefix>1, ...`` for an
+    ``IN`` list, and their bindings. An empty list renders ``NULL``:
+    ``IN ()`` does not parse, and ``IN (NULL)`` matches no row."""
+    args = {f"{prefix}{i}": v for i, v in enumerate(values)}
+    return ", ".join(f":{p}" for p in args) or "NULL", args
 
 
 def store_gram_k(spark: SparkSession, name: str = "smse_index") -> int:
     """The gram k the store's chargrams part was WRITTEN with, read
-    from the 1-row gramk part build_index persists next to it (r16
-    verdict #6, closed r17 — before this the serves probed at the
-    module constant CHARGRAM_K, correct only by construction). Pre-r17
-    stores have no gramk part and fall back to the constant — those
-    were provably written at it (build_index had no other k)."""
-    gramk = _optional_part(spark, name, "gramk")
-    return CHARGRAM_K if gramk is None else int(gramk.head().gram_k)
+    from its 1-row gramk part. Stores without one were written at the
+    CHARGRAM_K constant (build_index had no other k)."""
+    if not _has_part(spark, name, "gramk"):
+        return CHARGRAM_K
+    return int(spark.table(f"`{name}_gramk`").head().gram_k)
 
 
-def gram_candidates(index: DataFrame, grams: set[str], min_common: int) -> DataFrame:
-    """Terms of a ``(gram, term)`` char-k-gram index that hold at least
-    ``min_common`` of ``grams`` — the candidate step of the k-gram
+def gram_candidates(index: str, grams: set[str], min_common: int) -> tuple[str, dict]:
+    """Terms of a ``(gram, term)`` char-k-gram relation that hold at
+    least ``min_common`` of ``grams`` — the candidate step of the k-gram
     scheme (reference CharKGramTermIndexer: intersect gram posting
-    lists, then verify). A ``gram IN (...)`` filter, which pushes into
-    a parquet scan of the store's chargrams part, and a per-term count.
-    The caller's verify closes the false positives."""
+    lists, then verify). Returns a SQL query over ``index`` (a view or
+    subquery) and its parameters: a ``gram IN (...)`` filter, which
+    pushes into a parquet scan of the store's chargrams part, and a
+    per-term count. The caller's verify closes the false positives."""
+    marks, args = _in_list("g", sorted(grams))
     return (
-        index.filter(F.col("gram").isin(sorted(grams)))
-        .groupBy("term")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= min_common)
-        .select("term")
+        f"SELECT term FROM {index} WHERE gram IN ({marks}) "
+        "GROUP BY term HAVING count(*) >= :min_common",
+        {**args, "min_common": min_common},
     )
 
 
 def _term_candidates(
     spark: SparkSession, name: str, grams: set[str], min_common: int
-) -> DataFrame:
+) -> tuple[str, dict]:
     """gram_candidates over the store's chargrams part, or every stats
     term when the probe is too short for a positive threshold or the
     store has no chargrams part — a dictionary-sized scan, never a
     corpus scan."""
-    index = _optional_part(spark, name, "chargrams") if min_common > 0 else None
-    if index is None:
-        return spark.table(f"{name}_stats").select("term")
-    return gram_candidates(index, grams, min_common)
+    if min_common > 0 and _has_part(spark, name, "chargrams"):
+        return gram_candidates(_scan(f"{name}_chargrams"), grams, min_common)
+    return f"SELECT term FROM {_scan(f'{name}_stats')}", {}
 
 
 def wildcard_indexed(
@@ -237,23 +244,15 @@ def wildcard_indexed(
 ) -> DataFrame:
     """Wildcard term lookup served from the PERSISTED chargram part —
     the store twin of plans/search.py wildcard_terms (reference F9,
-    CharKGramTermIndexer: k-gram index over $-padded terms answers
-    pre*/*suf/pre*suf by intersecting gram posting lists, then
-    post-filtering). A term must contain ALL pattern grams
-    (gram_candidates), then the shared verify filter closes the k-gram
-    false positives. Probe grams come from the shared pattern_grams
-    extraction at the k persisted in the store's gramk part
-    (store_gram_k), the gram space the part was written in. A pattern
-    too short to yield a gram, or a store without the chargrams part,
-    serves from the stats scan instead. At 100 TB the gram scan prunes
-    to a handful of row groups of a dictionary-sized table — serving
-    stays index-shaped regardless of corpus size.
+    CharKGramTermIndexer). A term must contain ALL pattern grams
+    (gram_candidates, probed at store_gram_k), then the shared verify
+    filter closes the k-gram false positives. A pattern too short to
+    yield a gram, or a store without the chargrams part, serves from
+    the stats scan instead. Either scan is dictionary-sized.
 
-    Only patterns with exactly one '*' are supported (the classic
-    k-gram scheme) — enforced here (r15 review): a no-star pattern
-    would silently behave as a prefix glob and a multi-star pattern
-    would silently return empty; a library caller gets the error
-    instead of wrong rows."""
+    Only patterns with exactly one '*' are supported: a no-star pattern
+    would silently act as a prefix glob and a multi-star pattern would
+    silently return empty, so both raise."""
     from ..functions.tokenize import pattern_grams, wildcard_verify_cond
 
     if pattern.count("*") != 1:
@@ -262,8 +261,9 @@ def wildcard_indexed(
         )
     pre, _, suf = pattern.partition("*")
     grams = pattern_grams(f"${pre}*{suf}$".split("*"), store_gram_k(spark, name))
-    cand = _term_candidates(spark, name, grams, len(grams))
-    return cand.filter(wildcard_verify_cond(pre, suf)).select("term")
+    cand, args = _term_candidates(spark, name, grams, len(grams))
+    verify, vargs = wildcard_verify_cond(pre, suf)
+    return spark.sql(f"SELECT term FROM ({cand}) WHERE {verify}", {**args, **vargs})
 
 
 def fuzzy_indexed(
@@ -282,10 +282,11 @@ def fuzzy_indexed(
 
     k = store_gram_k(spark, name)
     grams = pattern_grams([f"${term}$"], k)
-    cand = _term_candidates(spark, name, grams, len(grams) - MAX_EDITS * k)
-    return cand.filter(
-        F.levenshtein(F.col("term"), F.lit(term)) <= MAX_EDITS
-    ).select("term")
+    cand, args = _term_candidates(spark, name, grams, len(grams) - MAX_EDITS * k)
+    return spark.sql(
+        f"SELECT term FROM ({cand}) WHERE levenshtein(term, :term) <= :max_edits",
+        {**args, "term": term, "max_edits": MAX_EDITS},
+    )
 
 
 def search_indexed(
@@ -295,21 +296,19 @@ def search_indexed(
     top_k: int = 10,
     name: str = "smse_index",
 ) -> DataFrame:
-    """Top-k over the PREBUILT index: the serving path. The only work is
-    a pushed-down `term IN (...)` scan of a few row groups + a tiny agg —
-    no tokenization, no corpus scan."""
-    from pyspark.sql import Window
-
-    post = spark.table(f"{name}_postings").filter(F.col("term").isin(terms))
-    stats = spark.table(f"{name}_stats").filter(F.col("term").isin(terms))
-    n_docs = spark.table(f"{name}_meta").head().n_docs
-    contrib = (1 + F.log(F.col("tf"))) * F.log10(F.lit(n_docs) / F.col("df"))
-    w = Window.orderBy(F.desc("score"), F.asc("docno"))
-    return (
-        post.join(stats, "term")
-        .groupBy("docno")
-        .agg(F.round(F.sum(contrib), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docno"))
-        .limit(top_k)
-        .select("docno", "score", F.row_number().over(w).cast("long").alias("rank"))
+    """Top-k over the PREBUILT index: a pushed-down ``term IN (...)``
+    scan of a few row groups and a tiny aggregate, in one task. df is
+    counted on the term's scanned postings rows, which is how
+    build_index defines ``stats.df``, so no stats part is read."""
+    n_docs = spark.table(f"`{name}_meta`").head().n_docs
+    marks, args = _in_list("t", terms)
+    return spark.sql(
+        f"""
+SELECT docno, score,
+       CAST(row_number() OVER (ORDER BY score DESC, docno) AS BIGINT) AS rank
+FROM (SELECT docno, round(sum((1 + ln(tf)) * log10(:n_docs / df)), 6) AS score
+      FROM (SELECT docno, tf, count(*) OVER (PARTITION BY term) AS df
+            FROM {_scan(f"{name}_postings")} WHERE term IN ({marks}))
+      GROUP BY docno ORDER BY score DESC, docno LIMIT :top_k)""",
+        {**args, "n_docs": n_docs, "top_k": top_k},
     )

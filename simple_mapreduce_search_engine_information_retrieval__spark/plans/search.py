@@ -616,13 +616,10 @@ def search_phrase(
 
 def search_indexed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_index + search_indexed composed in ONE query: the on-disk
-    bucketed index store written and then SERVED — a pushed-down
-    `term IN (...)` scan of the persisted postings/stats plus the meta
-    n_docs, no corpus re-tokenize in the serving path. Same query and
-    value oracle as search_two_term (r12 verdict #2: the
-    search_indexed_warm bench line had no driver-oracled counterpart —
-    this is the text_bpe_store_roundtrip pattern applied to
-    plans/index_store.py)."""
+    index store written and then SERVED — a pushed-down `term IN (...)`
+    scan of the persisted postings plus the meta n_docs, no corpus
+    re-tokenize. Same query and value oracle as search_two_term: the
+    driver-oracled twin of the search_indexed_warm bench line."""
     from .index_store import build_index, search_indexed
     from .sinks_sources import _out_path
 
@@ -647,16 +644,10 @@ def search_phrase_indexed_roundtrip(
 
 def wildcard_indexed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_index(chargrams=True) + a wildcard lookup served from the
-    PERSISTED chargram part, composed in ONE query — the store surface
-    the r14 roundtrips never put in front of the value oracle (r14
-    verdict #2: the oracled wildcard_* queries serve from the
-    corpus-derived chargram index and the two search roundtrips build
-    with chargrams=False, so the DuckDB gate never read
-    <store>/chargrams). The search_indexed_roundtrip pattern: the
-    executed serving path is a pushed-down `gram IN (...)` scan of the
-    bucketed+sorted on-disk part + the post-filter verify; the oracle
-    is the corpus-side duck_wildcard at the store's own CHARGRAM_K
-    (same term universe — the stats part's terms ARE the k=1
+    PERSISTED chargram part, composed in ONE query, so the value oracle
+    reads <store>/chargrams: a pushed-down `gram IN (...)` scan plus the
+    post-filter verify. The oracle is the corpus-side duck_wildcard at
+    the store's CHARGRAM_K (the stats part's terms ARE the k=1
     vocabulary)."""
     from .index_store import build_index, wildcard_indexed
     from .sinks_sources import _out_path
@@ -707,7 +698,7 @@ def wildcard_terms(
     wildcard_verify_cond."""
     from ..functions.tokenize import pattern_grams, wildcard_verify_cond
     from .index_store import gram_candidates
-    from .indexing import chargram_flat
+    from .indexing import chargram_flat, doc_terms
 
     # Same exactly-one-'*' contract as the store twin wildcard_indexed
     # (r15 review / r15 verdict #5): a no-star pattern would silently
@@ -719,17 +710,17 @@ def wildcard_terms(
         )
     pre, _, suf = pattern.partition("*")
     grams = pattern_grams(f"${pre}*{suf}$".split("*"), k)
-    if not grams:
-        # pattern too short to yield any k-gram (e.g. bare '*'): fall
-        # back to a vocabulary scan with only the post-filter
-        from .indexing import doc_terms
-
-        cand = doc_terms(spark, sf_dir, 1).select("term").distinct()
-    else:
-        # a term must contain ALL pattern grams
-        cand = gram_candidates(chargram_flat(spark, sf_dir, k), grams, len(grams))
+    if grams:  # a term must contain ALL pattern grams
+        index = chargram_flat(spark, sf_dir, k)
+        cand, args = gram_candidates("{index}", grams, len(grams))
+    else:  # no k-gram in the pattern (e.g. bare '*'): vocabulary scan
+        index = doc_terms(spark, sf_dir, 1)
+        cand, args = "SELECT DISTINCT term FROM {index}", {}
     # post-filter kills k-gram false positives (standard verify step)
-    return cand.filter(wildcard_verify_cond(pre, suf)).select("term")
+    verify, vargs = wildcard_verify_cond(pre, suf)
+    return spark.sql(
+        f"SELECT term FROM ({cand}) WHERE {verify}", {**args, **vargs}, index=index
+    )
 
 
 def duck_wildcard(pattern: str, *, k: int = 3) -> str:

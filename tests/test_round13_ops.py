@@ -1,7 +1,6 @@
-"""Round-13 fixes: the r12 ADVICE items (lone-surrogate refuse in the
-HF exporter, checkpoint-provenance guard on cache eviction, try/finally
-residue release) and the verdict-#4 roundtrip trim (artifact-in-hand
-export must render byte-identical to a store-read export)."""
+"""Round-13 fixes: the HF exporter's lone-surrogate refuse, the
+artifact-in-hand export and byte-level import roundtrips, the IVF
+store's pruned scan and the REPL's term-lookup usage errors."""
 
 from __future__ import annotations
 
@@ -180,22 +179,6 @@ def test_bytelevel_registry_query_green_at_sf0001(spark):
     assert not issues, issues
 
 
-def test_store_served_roundtrips_registered_and_oracled():
-    """Verdict r12 #2: the warm store-serving bench lines now have
-    driver-oracled registry twins — every one pairs a queries() entry
-    with real oracle SQL (not a rows-only check)."""
-    import __spark_entry__ as e
-
-    q, o = e.queries(), e.oracle_sql()
-    for name in (
-        "search_indexed_roundtrip",
-        "search_phrase_indexed_roundtrip",
-        "knn_ivf_store_roundtrip",
-        "knn_ivfpq_store_roundtrip",
-    ):
-        assert name in q and name in o and o[name].strip()
-
-
 def test_ivf_store_serving_scan_is_partition_pruned(spark, tmp_path):
     """The store-served ANN query's scan must read only the probed
     cells' partitions — the PartitionFilters line carries the static
@@ -219,63 +202,6 @@ def test_ivf_store_serving_scan_is_partition_pruned(spark, tmp_path):
     pruned = plan.split("PartitionFilters:")[1].split("]")[0]
     assert "cell" in pruned  # the probe IN-list prunes cell= directories
     assert len(df.collect()) > 0
-
-
-def test_repl_unified_store_serving_across_processes(spark, tmp_path):
-    """r12 verdict optional #8: ONE fresh-process REPL session serves
-    ranked queries, :wildcard / :fuzzy term lookups AND :tokenize, all
-    from prebuilt stores (--index + --tokenizer together) — no corpus
-    access, no building-session catalog state."""
-    import json
-    import os
-    import re
-    import subprocess
-    import sys
-
-    from simple_mapreduce_search_engine_information_retrieval__spark.plans.index_store import (
-        build_index,
-    )
-
-    store = str(tmp_path / "uni_index")
-    build_index(spark, SF, store, name="r13_uni_build")
-    bpe_store = str(tmp_path / "uni_bpe")
-    bpe.write_bpe_store(spark, SF, bpe_store)
-    sidecar = bpe.export_bpe_json_hf(
-        spark, bpe_store, str(tmp_path / "uni_tok.json")
-    )
-    # expected wildcard/fuzzy rows straight off the store's stats part
-    stats = {
-        r["term"]: (int(r["df"]), int(r["cf"]))
-        for r in spark.read.parquet(f"{store}/stats").collect()
-    }
-    assert "spark" in stats
-    proc = subprocess.run(
-        [sys.executable, "-m",
-         "simple_mapreduce_search_engine_information_retrieval__spark.repl",
-         SF, "--index", store, "--tokenizer", sidecar],
-        input=(
-            "spark join\n:wildcard sp*\n:fuzzy sprak\n"
-            ":wildcard a*b*c\n:tokenize the spark\n\n"
-        ),
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    assert proc.returncode == 0, proc.stderr[-1500:]
-    text = proc.stdout
-    assert " 1. doc " in text  # ranked query served
-    df_sp, cf_sp = stats["spark"]
-    assert f"spark  df {df_sp}  cf {cf_sp}" in text  # :wildcard sp*
-    # :fuzzy sprak -> levenshtein<=2 catches 'spark'
-    fuzzy_block = text.split(":tokenize")[0]
-    assert fuzzy_block.count(f"spark  df {df_sp}") >= 2
-    assert "usage: :wildcard" in text  # multi-star rejected
-    m = re.search(r"ids \((\d+)\): (\[.*?\])", text)
-    assert m and json.loads(m.group(2))  # :tokenize served in-session
-    # every 'sp*' hit printed really is a store term starting 'sp'
-    for t in re.findall(r"^  (\S+)  df \d+  cf \d+$", text, re.M):
-        assert t in stats
 
 
 def test_repl_term_lookup_usage_errors(spark, monkeypatch):

@@ -1,44 +1,13 @@
-"""Round-14 additions: the index store's optional chargram part (r13
-verdict #6; the lookups it serves are tested in test_term_lookup.py)
-and the non-trivially seeded byte-level import roundtrip (r13 verdict
-#4)."""
+"""Round-14 addition: the non-trivially seeded byte-level import
+roundtrip (r13 verdict #4)."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
 from simple_mapreduce_search_engine_information_retrieval__spark.plans import bpe
-from simple_mapreduce_search_engine_information_retrieval__spark.plans.index_store import (
-    CHARGRAM_K,
-    build_index,
-)
 
 SF = "/root/testdata/sf0.001"
-
-
-def _padded_grams(term: str, k: int = CHARGRAM_K) -> set[str]:
-    p = f"${term}$"
-    return {p[i : i + k] for i in range(len(p) - k + 1)}
-
-
-def test_build_index_chargram_part(spark, tmp_path):
-    """chargrams=True persists the F9 CharKGramTermIndexer layout —
-    exactly the $-padded k-gram pairs of the stats part's terms."""
-    out = str(tmp_path / "ix")
-    build_index(spark, SF, out, name="r14_cg_build", chargrams=True)
-    terms = [r["term"] for r in spark.read.parquet(f"{out}/stats").collect()]
-    got = {
-        (r["gram"], r["term"])
-        for r in spark.read.parquet(f"{out}/chargrams").collect()
-    }
-    want = {(g, t) for t in terms for g in _padded_grams(t)}
-    assert got == want
-    # default build stays 3-part (the r13-oracled roundtrips' layout)
-    out2 = str(tmp_path / "ix_default")
-    build_index(spark, SF, out2, name="r14_cg_default")
-    assert not os.path.exists(f"{out2}/chargrams")
 
 
 def test_bytelevel_seeded_encode_expands_real_multibyte(spark):
