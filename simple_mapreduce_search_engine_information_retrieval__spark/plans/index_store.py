@@ -138,7 +138,9 @@ def build_index(
             .saveAsTable(f"{name}_chargrams")
         )
         # persist the gram k the part was WRITTEN with, so serves probe
-        # at the store's own k, not at the module constant
+        # at the store's own k, not at the module constant. Plain parquet
+        # + temp view: saveAsTable's catalog commit measured 0.6-3.3 s
+        # per 1-row part against ~0.6 s for the write and the view.
         _write_scalar_part(
             spark.createDataFrame([(CHARGRAM_K,)], "gram_k long"),
             f"{out_dir}/gramk",
@@ -296,8 +298,9 @@ def search_indexed(
     top_k: int = 10,
     name: str = "smse_index",
 ) -> DataFrame:
-    """Top-k over the PREBUILT index: a pushed-down ``term IN (...)``
-    scan of a few row groups and a tiny aggregate, in one task. df is
+    """Top-k over the PREBUILT index as one SQL statement: a pushed-down
+    ``term IN (...)`` scan of a few row groups and a tiny aggregate, in
+    one task, since spreading so little work costs shuffles. df is
     counted on the term's scanned postings rows, which is how
     build_index defines ``stats.df``, so no stats part is read."""
     n_docs = spark.table(f"`{name}_meta`").head().n_docs
