@@ -619,7 +619,7 @@ def search_indexed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     index store written and then SERVED — a pushed-down `term IN (...)`
     scan of the persisted postings plus the meta n_docs, no corpus
     re-tokenize. Same query and value oracle as search_two_term: the
-    driver-oracled twin of the search_indexed_warm bench line."""
+    DuckDB-oracled twin of the search_indexed_warm bench line."""
     from .index_store import build_index, search_indexed
     from .sinks_sources import _out_path
 

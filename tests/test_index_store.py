@@ -124,7 +124,7 @@ def test_build_index_chargram_part(spark, tmp_path):
 
 def test_store_served_roundtrips_registered_and_oracled():
     """Verdict r12 #2: the warm store-serving bench lines now have
-    driver-oracled registry twins — every one pairs a queries() entry
+    DuckDB-oracled registry twins — every one pairs a queries() entry
     with real oracle SQL (not a rows-only check)."""
     import __spark_entry__ as e
 
