@@ -16,7 +16,7 @@ obsolete under Parquet predicate pushdown (SURVEY.md S5/§3.2).
 
 Usage:
     python -m simple_mapreduce_search_engine_information_retrieval__spark \
-        index    --sf-dir DIR --out DIR [--k K] [--buckets N]
+        index    --sf-dir DIR --out DIR [--k K]
     ... chargram --sf-dir DIR --out DIR [--k K]
     ... docnos   --sf-dir DIR --out DIR
     ... search   "free text query" --sf-dir DIR [--k K] [--compat-df1]
@@ -38,7 +38,6 @@ def _parser() -> argparse.ArgumentParser:
     ix.add_argument("--sf-dir", required=True)
     ix.add_argument("--out", required=True)
     ix.add_argument("--k", type=int, default=1)
-    ix.add_argument("--buckets", type=int, default=None)
 
     cg = sub.add_parser("chargram", help="build + persist the char-k-gram index")
     cg.add_argument("--sf-dir", required=True)
@@ -69,12 +68,9 @@ def main(argv: list[str] | None = None, out=None) -> int:
     if args.cmd == "index":
         from .plans import index_store
 
-        kw = {"k": args.k}
-        if args.buckets:
-            kw["buckets"] = args.buckets
-        name = index_store.build_index(spark, args.sf_dir, args.out, **kw)
+        name = index_store.build_index(spark, args.sf_dir, args.out, k=args.k)
         n = spark.table(f"{name}_postings").count()
-        print(f"indexed {n} postings rows -> {args.out} (tables {name}_*)", file=out)
+        print(f"indexed {n} postings rows -> {args.out} (views {name}_*)", file=out)
     elif args.cmd == "chargram":
         from .plans.indexing import chargram_arrays
 

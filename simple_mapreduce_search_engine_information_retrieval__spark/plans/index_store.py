@@ -3,21 +3,32 @@
 The reference's answer to "how do I look up a term fast" is a hand-built
 byte-offset forward index over SequenceFiles
 (BuildIntDocVectorsForwardIndex.java + the Hashtable load at
-IntDocVectorsForwardIndex.java:106-120). The Spark-native answer:
+IntDocVectorsForwardIndex.java:106-120). The Spark-native answer is
+plain parquet parts, each range-partitioned and sorted by its key:
 
-    postings (term, docno, tf)  -> write bucketed+sorted by term
-    stats    (term, df, cf)     -> same layout
-    meta     (n_docs)           -> one-row table
+    postings  (term, docno, tf)  -> by (term, docno)
+    stats     (term, df, cf)     -> by term
+    chargrams (gram, term)       -> by (gram, term)   optional
+    meta      (n_docs)           -> one row; gramk (gram_k) likewise
 
-- ``term IN (...)`` predicates push into the Parquet scan (dictionary +
-  row-group stats skip nearly all data — the moral equivalent of the
-  forward-index seek);
-- bucketBy(term) serves the build and any term-keyed join read
-  through the catalog: the stats aggregate and such joins are
-  shuffle-free on the index side;
-- at 100 TB the same layout holds with more buckets (buckets ~ total
-  size / 1 GB), and heavy terms stay within one bucket but spread over
-  row groups.
+- Sorted by term, each file holds one term range and its row groups
+  and pages hold narrower ones, so a pushed-down ``term IN (...)``
+  scan skips the rest by footer min/max statistics: the forward-index
+  seek done by the parquet reader (*Columnar Formatted Inverted
+  Index*, ICDE 2025). A heavy term spreads over neighbouring files,
+  since ``docno`` is the second range key.
+- The store's parameters travel in its schema: the meta part's
+  ``n_docs`` column carries ``{"n_docs": N, "format": FORMAT}`` as Spark
+  field metadata, which the parquet footer keeps and every
+  ``spark.read.parquet`` open restores. A ranked serve reads them off
+  the view's schema and runs no job; a store of another format is
+  refused, not guessed at.
+- No catalog: every part is opened by path (``open_index``), in the
+  building session and in a fresh process alike.
+- At scale the file count follows AQE's advisory partition size, and a
+  serve still opens every file's footer to skip it. A per-file
+  term-range index that prunes files before they are opened is the
+  job of a store manifest.
 
 Serving, all over the ``<name>_<part>`` session views:
 - ``open_index`` registers a built store's parts from their paths, so
@@ -33,9 +44,8 @@ with terms, grams and pattern pieces bound as named parameters. The
 store scan sits in a ``/*+ COALESCE(1) */`` subquery, so the pushed-down
 ``IN`` scan, df, the aggregate, top-k and ``row_number`` run as one task
 with no ``Exchange``: a lookup reads a few row groups, cheaper in one
-task than spread behind shuffles. One eager scalar read (``n_docs`` or
-``store_gram_k``) precedes it. A path-opened store has no bucket
-metadata, so that task opens every part file: ``buckets`` bounds them.
+task than spread behind shuffles. Wildcard and fuzzy serves read
+``store_gram_k`` eagerly first.
 """
 
 from __future__ import annotations
@@ -48,7 +58,9 @@ from pyspark.sql import functions as F
 from ..sources.tables import table
 from .indexing import postings_flat
 
-DEFAULT_BUCKETS = 16
+# The store layout version the serves accept, kept in the meta part's
+# schema. Bump it when a layout change would make old stores misserve.
+FORMAT = 1
 # k for the optional chargram part — matches wildcard_terms' default
 # (plans/search.py) so store-served lookups and the oracled corpus-side
 # queries use the same gram space.
@@ -66,109 +78,76 @@ def build_index(
     out_dir: str,
     *,
     k: int = 1,
-    buckets: int = DEFAULT_BUCKETS,
     name: str = "smse_index",
     chargrams: bool = False,
 ) -> str:
-    """Build + persist the index; returns the table name prefix.
+    """Build + persist the index, then open it as ``name``'s views;
+    returns ``name``.
 
     With ``chargrams=True`` the store additionally gets a ``chargrams``
     part — the reference's CharKGramTermIndexer layout (F9: $-padded
-    char-3-gram -> term), bucketed+sorted BY GRAM so wildcard / fuzzy
-    term lookups serve as pushed-down ``gram IN (...)`` scans (the
-    wildcard_suffix / wildcard_infix mechanism, r13 verdict #6).
-    Derived from the just-written stats part (dictionary-sized), so the
-    extra write is vocabulary-bounded, never corpus-bounded. Default
-    off: the r13-oracled roundtrips pin the 3-part layout's cost."""
-    post = postings_flat(spark, sf_dir, k)
-    (
-        # repartition to the bucket count ON the bucket key before the
-        # bucketed write (r17, guide §6): Spark's bucket id IS the
-        # HashPartitioning partition id, so each task then holds exactly
-        # one bucket and writes ONE file — without it every task of the
-        # (term, docno)-partitioned agg output writes a file per bucket
-        # it touches (up to tasks x buckets small files, paid again by
-        # every store read). Same move as a REBALANCE-before-write; at
-        # 100 TB the bucket count scales (~total size / 1 GB) and this
-        # exchange is the write's required clustering, not an extra pass.
-        post.repartition(buckets, "term")
-        .write.mode("overwrite")
-        .option("path", f"{out_dir}/postings")
-        .bucketBy(buckets, "term")
-        .sortBy("term")
-        .format("parquet")
-        .saveAsTable(f"{name}_postings")
-    )
+    char-3-gram -> term), sorted by gram so wildcard / fuzzy term
+    lookups serve as pushed-down ``gram IN (...)`` scans — and a
+    ``gramk`` part holding the k it was written with. Derived from the
+    written stats part (dictionary-sized), so the extra write is
+    vocabulary-bounded, never corpus-bounded. Default off: the
+    r13-oracled roundtrips pin the 3-part layout's cost."""
+    _write_sorted(postings_flat(spark, sf_dir, k), f"{out_dir}/postings", "term", "docno")
     stats = (
-        spark.table(f"{name}_postings")
+        spark.read.parquet(f"{out_dir}/postings")
         .groupBy("term")
         .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
     )
-    (
-        stats.write.mode("overwrite")
-        .option("path", f"{out_dir}/stats")
-        .bucketBy(buckets, "term")
-        .sortBy("term")
-        .format("parquet")
-        .saveAsTable(f"{name}_stats")
-    )
+    _write_sorted(stats, f"{out_dir}/stats", "term")
     if chargrams:
         from ..functions.tokenize import chargrams_col
 
-        grams = (
-            spark.table(f"{name}_stats")
-            .select(
-                F.explode(chargrams_col(F.col("term"), CHARGRAM_K)).alias(
-                    "gram"
-                ),
-                "term",
-            )
-            .distinct()
+        grams = spark.read.parquet(f"{out_dir}/stats").select(
+            F.explode(chargrams_col(F.col("term"), CHARGRAM_K)).alias("gram"),
+            "term",
         )
-        (
-            # same bucket-aligned repartition as the postings write: the
-            # distinct leaves the grams (gram, term)-partitioned, which
-            # would spray a file per (task, bucket) pair
-            grams.repartition(buckets, "gram")
-            .write.mode("overwrite")
-            .option("path", f"{out_dir}/chargrams")
-            .bucketBy(buckets, "gram")
-            .sortBy("gram")
-            .format("parquet")
-            .saveAsTable(f"{name}_chargrams")
-        )
-        # persist the gram k the part was WRITTEN with, so serves probe
-        # at the store's own k, not at the module constant. Plain parquet
-        # + temp view: saveAsTable's catalog commit measured 0.6-3.3 s
-        # per 1-row part against ~0.6 s for the write and the view.
-        _write_scalar_part(
-            spark.createDataFrame([(CHARGRAM_K,)], "gram_k long"),
-            f"{out_dir}/gramk",
-            f"{name}_gramk",
-        )
-    n_docs = table(spark, sf_dir, "documents").count()
-    _write_scalar_part(
-        spark.createDataFrame([(n_docs,)], "n_docs long"),
-        f"{out_dir}/meta",
-        f"{name}_meta",
-    )
-    return name
+        _write_sorted(grams.distinct(), f"{out_dir}/chargrams", "gram", "term")
+        spark.createDataFrame([(CHARGRAM_K,)], "gram_k long").write.mode(
+            "overwrite"
+        ).parquet(f"{out_dir}/gramk")
+    write_meta(spark, f"{out_dir}/meta", table(spark, sf_dir, "documents").count())
+    return open_index(spark, out_dir, name)
 
 
-def _write_scalar_part(df: DataFrame, path: str, view: str) -> None:
-    """Persist a 1-row scalar store part as plain parquet and register
-    the session view the serves read (the open_index attach) — the
-    bucketed parts keep saveAsTable because bucketing metadata lives in
-    the catalog; these scalars have none."""
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path).createOrReplaceTempView(view)
+def _write_sorted(df: DataFrame, path: str, *keys: str) -> None:
+    """Write ``df`` as parquet range-partitioned and sorted by ``keys``:
+    each file holds one key range. No partition count, so AQE sizes
+    the files."""
+    df.repartitionByRange(*keys).sortWithinPartitions(*keys).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def write_meta(spark: SparkSession, path: str, n_docs: int) -> None:
+    """Write the 1-row meta part, with the store's parameters as the
+    ``n_docs`` column's field metadata (what ``search_indexed`` reads)."""
+    params = {"n_docs": n_docs, "format": FORMAT}
+    spark.createDataFrame([(n_docs,)], "n_docs long").select(
+        F.col("n_docs").alias("n_docs", metadata=params)
+    ).write.mode("overwrite").parquet(path)
+
+
+def _store_params(spark: SparkSession, name: str) -> dict:
+    """The parameters in the meta view's schema, read with no job.
+    Raises ``ValueError`` for a store of an unknown format."""
+    params = spark.table(f"`{name}_meta`").schema["n_docs"].metadata
+    if params.get("format") != FORMAT:
+        raise ValueError(
+            f"index store {name!r} has format {params.get('format')!r}, "
+            f"not {FORMAT}: rebuild it with build_index"
+        )
+    return params
 
 
 def open_index(spark: SparkSession, path: str, name: str) -> str:
     """Register the store built at ``path`` as the ``<name>_<part>``
     session views the serves read, so any session — a fresh process
-    included — serves it (build_index's registrations live in the
-    building session only). The optional chargrams/gramk views are
+    included — serves it. The optional chargrams/gramk views are
     dropped first, then registered when their directories exist: a
     second open under the same name must not serve the previous
     store's chargram part. Returns ``name``."""
@@ -302,8 +281,10 @@ def search_indexed(
     ``term IN (...)`` scan of a few row groups and a tiny aggregate, in
     one task, since spreading so little work costs shuffles. df is
     counted on the term's scanned postings rows, which is how
-    build_index defines ``stats.df``, so no stats part is read."""
-    n_docs = spark.table(f"`{name}_meta`").head().n_docs
+    build_index defines ``stats.df``, so no stats part is read;
+    ``n_docs`` comes from the meta view's schema, so the call runs no
+    job."""
+    n_docs = _store_params(spark, name)["n_docs"]
     marks, args = _in_list("t", terms)
     return spark.sql(
         f"""

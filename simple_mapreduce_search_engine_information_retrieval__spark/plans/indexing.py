@@ -5,8 +5,8 @@ Scale design (100 TB):
 - The PRIMARY index representation is FLAT postings ``(term, docno, tf)``
   — one shuffle (hash by (term, docno), partial aggregation = the
   reference's combiner, TermKGramDocIndexer.java:273, is automatic).
-  Written out it is bucketed/sorted by term so term-lookup joins need no
-  shuffle and Parquet row-group stats prune scans (replaces the
+  Written out it is range-partitioned and sorted by term, so Parquet
+  footer min/max stats prune term-lookup scans (replaces the
   reference's hand-built byte-offset forward index,
   BuildIntDocVectorsForwardIndex.java — obsolete under Parquet).
 - The array-of-struct postings form (reference SequenceFile layout,

@@ -661,7 +661,8 @@ def query_rebalanced_store(
         else:
             units.append(r["unit_base"])
     scan = spark.read.parquet(f"{path}/vectors").filter(
-        F.col("unit").isin(units) & F.col("cell").isin(probes)
+        # sorted: collect() row order varies, and so would the plan text
+        F.col("unit").isin(sorted(units)) & F.col("cell").isin(probes)
     )
     if where is not None:
         scan = scan.filter(where)

@@ -12,8 +12,7 @@ char totals, min/max content md5) so the driver hash pins both the merge
 logic AND the merged payloads.
 
 Scale: ONE shuffle on the merge key — or zero when base and changes are
-co-bucketed on it (plans/index_store.py discipline); AQE splits skewed
-keys. The change-set is usually << base, so the planner broadcasts it
+already partitioned on it; AQE splits skewed keys. The change-set is usually << base, so the planner broadcasts it
 when small — no hint needed (round-3 lesson: never hint a relation whose
 cardinality scales with the corpus). The audit rollup is
 five-group-tiny.

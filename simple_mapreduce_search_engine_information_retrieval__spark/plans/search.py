@@ -20,8 +20,9 @@ near-ties — documented divergence, SURVEY.md O6).
 
 Scale: the query side is a handful of terms — Catalyst broadcasts it
 (BroadcastHashJoin) so the index side never shuffles; with the index
-bucketed by term the lookup is a pruned scan, the exact Spark analogue of
-the reference's forward-index seek (and why that job is obsolete here).
+stored sorted by term the lookup is a pruned scan, the exact Spark
+analogue of the reference's forward-index seek (and why that job is
+obsolete here).
 """
 
 from __future__ import annotations
@@ -53,7 +54,7 @@ def tokenize_query(text: str) -> list[str]:
 # Warm-index memo: a real engine queries a built index, it does not
 # re-tokenize the corpus per query. Keyed on (session id, sf_dir, k);
 # cache() keeps the flat postings hot across the query workload (the
-# in-memory analogue of the materialized bucketed index in
+# in-memory analogue of the materialized term-sorted index in
 # plans/index_store.py — which is the on-disk path at 100 TB).
 @memo
 def _warm_index(spark: SparkSession, sf_dir: str, k: int):
@@ -1743,7 +1744,7 @@ QUERIES: dict[str, QuerySpec] = {
     "search_indexed_roundtrip": QuerySpec(
         fn=search_indexed_roundtrip,
         oracle=duck_search("spark join"),
-        note="store-SERVED search: build_index (bucketed+sorted parquet) "
+        note="store-SERVED search: build_index (term-range-sorted parquet) "
         "then search_indexed in one query — pushed-down term IN scan of "
         "the persisted postings, same value oracle as search_two_term "
         "(the search_indexed_warm bench line's driver-oracled twin)",

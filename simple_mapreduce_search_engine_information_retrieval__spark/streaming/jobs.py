@@ -278,8 +278,9 @@ def incremental_index(
 
     Each batch computes its local (term, docno, tf) and appends; readers
     aggregate tf by (term, docno) on load — an LSM-style layout that
-    avoids rewriting the index per batch (at scale: compact periodically,
-    bucketBy(term) on compaction)."""
+    avoids rewriting the index per batch (at scale: compact periodically
+    into the index store's layout, range-partitioned and sorted by
+    term)."""
     from ..functions.tokenize import tokens_col
 
     def upsert(batch: DataFrame, batch_id: int) -> None:

@@ -6,10 +6,12 @@ test_term_lookup.py."""
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 from collections import Counter
 
+import pyarrow.parquet as pq
 import pytest
 
 from conftest import SF_SMALL as SF
@@ -22,6 +24,7 @@ from simple_mapreduce_search_engine_information_retrieval__spark.plans.index_sto
     open_index,
     search_indexed,
     wildcard_indexed,
+    write_meta,
 )
 from simple_mapreduce_search_engine_information_retrieval__spark.plans.search import (
     search,
@@ -65,7 +68,9 @@ def opened(spark):
 def hand_store(spark, tmp_path, opened):
     """A store written part by part from ``docs`` (docno -> terms), so
     it can hold terms the tokenizer never emits: quotes, ')', '--',
-    '%' and '_'. Returns the opened name and the postings."""
+    '%' and '_'. The meta part goes through the package's writer, so
+    it carries the store parameters. Returns the opened name and the
+    postings."""
 
     def make(docs: dict[int, list[str]]) -> tuple[str, list[tuple]]:
         post = [
@@ -78,7 +83,6 @@ def hand_store(spark, tmp_path, opened):
         parts = {
             "postings": (post, "term string, docno long, tf long"),
             "stats": ([(t, df[t], cf[t]) for t in df], "term string, df long, cf long"),
-            "meta": ([(len(docs),)], "n_docs long"),
             "chargrams": (
                 sorted({(g, t) for t in df for g in _padded_grams(t)}),
                 "gram string, term string",
@@ -88,6 +92,7 @@ def hand_store(spark, tmp_path, opened):
         store = str(tmp_path / "hand")
         for part, (rows, schema) in parts.items():
             spark.createDataFrame(rows, schema).write.parquet(f"{store}/{part}")
+        write_meta(spark, f"{store}/meta", len(docs))
         return opened(store, "index_store_hand"), post
 
     return make
@@ -194,18 +199,21 @@ def test_serves_run_one_task_stage_after_the_scalar_read(spark, tmp_path, opened
     """A path-opened store (the REPL and perfbench shape) serves each
     lookup as one job with no Exchange: the coalesced store scan runs
     the pushed-down IN scan, df, the aggregate, top-k and row_number
-    in one task. The serve call itself runs the one eager scalar read
-    (meta's n_docs, or store_gram_k), so jobs are counted from there."""
+    in one task. The ranked serve call runs no job: n_docs comes from
+    the meta view's schema. The wildcard and fuzzy calls run exactly
+    one, the eager store_gram_k read."""
     store = str(tmp_path / "ix")
     build_index(spark, SF, store, name="index_store_shape_build", chargrams=True)
     name = opened(store, "index_store_shape")
     serves = {
-        "search_indexed": lambda: search_indexed(spark, ["spark", "join"], name=name),
-        "wildcard_indexed": lambda: wildcard_indexed(spark, "*ark", name=name),
-        "fuzzy_indexed": lambda: fuzzy_indexed(spark, "sprak", name=name),
+        "search_indexed": (0, lambda: search_indexed(spark, ["spark", "join"], name=name)),
+        "wildcard_indexed": (1, lambda: wildcard_indexed(spark, "*ark", name=name)),
+        "fuzzy_indexed": (1, lambda: fuzzy_indexed(spark, "sprak", name=name)),
     }
-    for serve, call in serves.items():
+    for serve, (call_jobs, call) in serves.items():
+        before = _jobs(spark)
         df = call()
+        assert _jobs(spark) - before == call_jobs, serve
         before = _jobs(spark)
         assert df.collect(), serve
         assert _jobs(spark) - before == 1, serve
@@ -283,3 +291,71 @@ def test_phrase_store_serve_equals_search_phrase(spark, tmp_path, opened):
     phrase = " ".join(tokenize_query("spark join"))
     got = _rows(search_indexed(spark, [phrase], name=name))
     assert got and got == _rows(search_phrase(spark, SF, "spark join"))
+
+
+def _key_ranges(path: str, keys: tuple[str, ...]) -> list[tuple]:
+    """Per data file of a part, in file order: assert the file is
+    sorted on ``keys`` and its footer's min/max of the leading key are
+    the first and last rows' (what a serve skips files and row groups
+    by), and return the file's (first key, last key)."""
+    ranges = []
+    for f in sorted(glob.glob(os.path.join(path, "part-*.parquet"))):
+        rows = list(zip(*pq.read_table(f, columns=list(keys)).to_pydict().values()))
+        if not rows:
+            continue
+        assert rows == sorted(rows), f
+        meta = pq.ParquetFile(f).metadata
+        col = meta.schema.names.index(keys[0])
+        stats = [meta.row_group(g).column(col).statistics for g in range(meta.num_row_groups)]
+        assert min(st.min for st in stats) == rows[0][0], f
+        assert max(st.max for st in stats) == rows[-1][0], f
+        ranges.append((rows[0], rows[-1]))
+    return ranges
+
+
+def test_store_parts_are_range_partitioned_and_sorted(spark, tmp_path):
+    """Every postings, stats and chargrams file is sorted on its key,
+    and the files' key ranges are ordered and disjoint, so footer
+    min/max statistics skip every file and row group outside a term
+    lookup. Partition coalescing is off here, so even this small store
+    spreads over many files."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        store = str(tmp_path / "ix")
+        build_index(spark, SF, store, name="index_store_layout", chargrams=True)
+    finally:
+        spark.conf.set(key, old)
+    for part, keys in (
+        ("postings", ("term", "docno")),
+        ("stats", ("term",)),
+        ("chargrams", ("gram", "term")),
+    ):
+        ranges = _key_ranges(f"{store}/{part}", keys)
+        assert len(ranges) > 1, part
+        for (_, last), (first, _) in zip(ranges, ranges[1:]):
+            assert last < first, (part, last, first)
+
+
+def test_build_index_files_per_part_within_shuffle_partitions(spark, tmp_path):
+    """The range-partitioned writes leave at most
+    spark.sql.shuffle.partitions data files in each part: no task
+    sprays a file per key it touches."""
+    out = str(tmp_path / "store")
+    build_index(spark, SF, out, chargrams=True, name="index_store_files")
+    bound = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for part in ("postings", "stats", "chargrams"):
+        files = glob.glob(os.path.join(out, part, "part-*"))
+        assert 0 < len(files) <= bound, (part, files)
+
+
+def test_search_indexed_refuses_a_store_without_format(spark, hand_store, tmp_path):
+    """A meta part without the format parameter (a store written by an
+    older layout) makes the ranked serve raise, telling to rebuild."""
+    name, _ = hand_store({1: ["a", "b"], 2: ["b"]})
+    old = str(tmp_path / "old_meta")
+    spark.createDataFrame([(2,)], "n_docs long").write.parquet(old)
+    spark.read.parquet(old).createOrReplaceTempView(f"{name}_meta")
+    with pytest.raises(ValueError, match="rebuild"):
+        search_indexed(spark, ["a"], name=name)

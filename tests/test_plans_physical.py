@@ -53,25 +53,6 @@ def test_date_filter_pushdown(spark, sf_dir):
     assert m and "l_shipdate" in m.group(0), plan[:2000]
 
 
-def test_bucketed_index_join_is_colocated(spark, sf_dir, tmp_path):
-    """postings JOIN stats on term: both tables are bucketed(16, term),
-    so the sort-merge join needs NO Exchange on either side — the
-    co-located-join payoff of the bucketed store layout (at 100 TB this
-    is the difference between a full index reshuffle per query batch
-    and none)."""
-    name = index_store.build_index(
-        spark, sf_dir, str(tmp_path / "coidx"), name="t_coidx"
-    )
-    post = spark.table(f"{name}_postings").hint("merge")
-    stats = spark.table(f"{name}_stats").hint("merge")
-    joined = post.join(stats, "term").select("term", "docno", "tf", "df")
-    plan = _physical(joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan, plan[:2000]
-    # and it still computes the right thing
-    assert joined.count() == spark.table(f"{name}_postings").count()
-
-
 def test_indexed_search_pushes_term_filter(spark, sf_dir, tmp_path):
     name = index_store.build_index(
         spark, sf_dir, str(tmp_path / "idx"), name="t_idx"
@@ -80,7 +61,6 @@ def test_indexed_search_pushes_term_filter(spark, sf_dir, tmp_path):
     plan = _physical(df)
     m = re.search(r"PushedFilters: \[.{0,300}", plan)
     assert m and "term" in m.group(0), plan[:2000]
-    # bucketed index side: selected bucket count appears in scan
     rows = df.collect()
     assert len(rows) == 10 and rows[0].rank == 1
     # serving path agrees with the self-contained search plan

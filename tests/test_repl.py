@@ -146,7 +146,7 @@ def test_cli_index_roundtrip(spark, tmp_path):
     rc = main(
         [
             "index", "--sf-dir", "/root/testdata/sf0.001",
-            "--out", str(tmp_path / "ix"), "--k", "1", "--buckets", "4",
+            "--out", str(tmp_path / "ix"), "--k", "1",
         ],
         out=buf,
     )

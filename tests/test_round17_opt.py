@@ -3,8 +3,8 @@
 Each optimization that changed an operator's INTERNALS gets a focused
 pin here (round rule): the cached stopword IN-list must stay
 semantically identical to the per-call isin it replaced, and the
-bucket-aligned store writes must actually produce the one-file-per-
-bucket layout they exist for.
+cell-clustered store writes must actually produce the one-file-per-
+cell layout they exist for.
 """
 
 from __future__ import annotations
@@ -51,35 +51,6 @@ def test_stopword_member_seq_is_cached(spark):
     seq_before = tokenize._stop_seq_cache[key]
     tokenize.stopword_member(F.lit("other"))
     assert tokenize._stop_seq_cache[key] is seq_before
-
-
-def test_build_index_one_file_per_bucket(spark, sf_dir, tmp_path):
-    """The bucket-aligned repartition before the bucketed saveAsTable
-    (r17, guide §6) must leave exactly one data file per bucket in the
-    postings and chargrams parts — the layout the (task x bucket) spray
-    previously broke."""
-    from simple_mapreduce_search_engine_information_retrieval__spark.plans.index_store import (
-        DEFAULT_BUCKETS,
-        build_index,
-    )
-
-    out = str(tmp_path / "store")
-    name = build_index(
-        spark, sf_dir, out, chargrams=True, name="smse_r17opt_files"
-    )
-    try:
-        for part in ("postings", "chargrams"):
-            files = [
-                p
-                for p in glob.glob(os.path.join(out, part, "*"))
-                if os.path.basename(p).startswith("part-")
-            ]
-            assert 0 < len(files) <= DEFAULT_BUCKETS, (part, files)
-    finally:
-        for t in ("postings", "stats", "chargrams"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}_{t}")
-        for t in ("meta", "gramk"):  # scalar parts are session views
-            spark.catalog.dropTempView(f"{name}_{t}")
 
 
 def test_ivfpq_store_single_file_per_cell(spark, sf_dir, tmp_path):
