@@ -115,14 +115,33 @@ def _latest_verdicts() -> dict[str, tuple[int, bool]]:
 # list each round.
 CHANGED_THIS_ROUND = frozenset(
     {
-        # The index store is plain parquet, range-partitioned and sorted
-        # by its key, with n_docs carried in the meta part's schema, so
-        # the ranked serve runs no eager job.
-        "search_indexed_roundtrip",
-        "search_phrase_indexed_roundtrip",
-        "wildcard_indexed_roundtrip",
-        # The rebalanced IVF serve builds its unit IN-list sorted.
-        "knn_ivf_rebalanced_roundtrip",
+        # The in-session tf-idf rankers share one ranker (_rank_tfidf)
+        # and one contribution expression (_tfidf).
+        "search_one_term",
+        "search_two_term",
+        "search_with_stopwords_and_miss",
+        "search_with_docids",
+        "search_compat_df1",
+        "search_phrase_2gram",
+        "search_phrase_warm",
+        "search_fidelity_stemmed",
+        "search_fidelity_warm",
+        "search_passages",
+        "search_batch_workload",
+        "search_eval_metrics",
+        "search_top_terms_per_doc",
+        "search_related_docs",
+        # Every global ranked tail goes through plans.top_k_ranked.
+        "search_prf_expanded",
+        "search_bm25",
+        "search_lm_dirichlet",
+        "search_rrf_fusion",
+        "search_hybrid_rrf",
+        "search_proximity_pair",
+        "search_phrase_positional",
+        "search_snippets",
+        "knn_ivfpq_store_roundtrip",
+        "knn_ivfpq_adc",
     }
 )
 
