@@ -15,7 +15,8 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
@@ -23,6 +24,15 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL; None → driver does rows-only check
     note: str = ""
+
+
+def top_k_ranked(df: DataFrame, top_k: int, *order: Column | str) -> DataFrame:
+    """The ranked tail of a top-k query: the first ``top_k`` rows of
+    ``df`` by ``order``, plus a long ``rank`` numbering them 1..k in that
+    order. ``order`` must be a total order (end it with a unique key)
+    so ties break the same way on every engine."""
+    rank = F.row_number().over(Window.orderBy(*order)).cast("long")
+    return df.orderBy(*order).limit(top_k).select("*", rank.alias("rank"))
 
 
 def sql_over_views(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:

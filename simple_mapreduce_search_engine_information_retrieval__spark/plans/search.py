@@ -9,6 +9,9 @@ Scoring preserves the reference's exact mixed-log-base formula
 
     score(doc) = sum_over_query_terms( (1 + ln(tf)) * log10(N / df) )
 
+``_rank_tfidf`` is that ranker for search, search_phrase and
+search_fidelity; every global top-k tail here is ``top_k_ranked``.
+
 Two df modes (SURVEY.md A8):
 - ``correct``   : df = docs containing the term (what the code intends);
 - ``compat_df1``: df = 1 (what the reference actually computes — reduce
@@ -27,14 +30,17 @@ obsolete here).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+from functools import partial
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caches import memo
 from ..functions.stopwords import STOPWORD_SET
 from ..functions.tokenize import SPLIT_RE, MAX_TOKEN_BYTES, duck_tokens_list, stopword_member
 from ..sources.tables import table
-from . import QuerySpec
+from . import QuerySpec, top_k_ranked
 from .index_store import CHARGRAM_K
 from .indexing import duck_postings_flat, duck_term_stats, postings_flat
 
@@ -68,6 +74,45 @@ def _warm_index(spark: SparkSession, sf_dir: str, k: int):
     return post, stats, n_docs
 
 
+def _tfidf(n: int, df: Column | None = None) -> Column:
+    """A posting's tf-idf contribution (1 + ln tf) * log10(n / df) over
+    the ``tf`` column and the ``df`` column, or ``df`` where given."""
+    return (1 + F.log(F.col("tf"))) * F.log10(
+        F.lit(n) / (F.col("df") if df is None else df)
+    )
+
+
+def _query_hits(post: DataFrame, stats: DataFrame, qdf: DataFrame) -> DataFrame:
+    """The ``post`` rows of the ``qdf`` terms with their ``stats``. The
+    tiny query side is broadcast into both joins; a missing term drops
+    out (inner join == the reference's silent dictionary-miss skip, J2)."""
+    return post.join(F.broadcast(qdf), "term").join(
+        F.broadcast(stats.join(F.broadcast(qdf), "term")), "term"
+    )
+
+
+def _rank_tfidf(
+    spark: SparkSession,
+    index: Callable[[], tuple[DataFrame, DataFrame, int]],
+    terms: list[str],
+    top_k: int,
+    df: Column | None = None,
+) -> DataFrame:
+    """(docno, score, rank): top-k docs by summed tf-idf of the distinct
+    ``terms`` over the warm (post, stats, n_docs) that ``index()``
+    returns; no terms, no rows and no index build."""
+    if not terms:
+        return spark.createDataFrame([], "docno long, score double, rank long")
+    post, stats, n_docs = index()
+    qdf = spark.createDataFrame([(t,) for t in set(terms)], "term string")
+    scored = (
+        _query_hits(post, stats, qdf)
+        .groupBy("docno")
+        .agg(F.round(F.sum(_tfidf(n_docs, df)), 6).alias("score"))
+    )
+    return top_k_ranked(scored, top_k, F.desc("score"), F.asc("docno"))
+
+
 def search(
     spark: SparkSession,
     sf_dir: str,
@@ -78,30 +123,9 @@ def search(
     df_mode: str = "correct",
 ) -> DataFrame:
     """Top-k docs for a free-text query. Returns (docno, score, rank)."""
-    terms = tokenize_query(query)
-    if not terms:
-        return spark.createDataFrame([], "docno long, score double, rank long")
-
-    post, stats, n_docs = _warm_index(spark, sf_dir, k)
-
-    qdf = spark.createDataFrame([(t,) for t in set(terms)], "term string")
-    # broadcast the tiny query side; missing terms drop out (inner join ==
-    # the reference's silent dictionary-miss skip, J2)
-    hits = post.join(F.broadcast(qdf), "term").join(
-        F.broadcast(stats.join(F.broadcast(qdf), "term")), "term"
-    )
-    df_expr = F.lit(1) if df_mode == "compat_df1" else F.col("df")
-    contrib = (1 + F.log(F.col("tf"))) * F.log10(F.lit(n_docs) / df_expr)
-    scored = (
-        hits.groupBy("docno")
-        .agg(F.round(F.sum(contrib), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docno"))
-        .limit(top_k)
-    )
-    w = Window.orderBy(F.desc("score"), F.asc("docno"))
-    return scored.select(
-        "docno", "score", F.row_number().over(w).cast("long").alias("rank")
-    )
+    index = partial(_warm_index, spark, sf_dir, k)
+    df = F.lit(1) if df_mode == "compat_df1" else None
+    return _rank_tfidf(spark, index, tokenize_query(query), top_k, df)
 
 
 # Stemmed-index memo, same contract as _warm_index: the reference REPL
@@ -128,21 +152,8 @@ def search_fidelity(
     queries, IntDocVectorsForwardIndex.java:295)."""
     from ..functions.fidelity import tokenize_text
 
-    terms = tokenize_text(query)
-    if not terms:
-        return spark.createDataFrame([], "docno long, score double, rank long")
-    post, stats, n_docs = _warm_fidelity_index(spark, sf_dir)
-    qdf = spark.createDataFrame([(t,) for t in set(terms)], "term string")
-    hits = post.join(F.broadcast(qdf), "term").join(F.broadcast(stats.join(qdf, "term")), "term")
-    contrib = (1 + F.log(F.col("tf"))) * F.log10(F.lit(n_docs) / F.col("df"))
-    w = Window.orderBy(F.desc("score"), F.asc("docno"))
-    return (
-        hits.groupBy("docno")
-        .agg(F.round(F.sum(contrib), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docno"))
-        .limit(top_k)
-        .select("docno", "score", F.row_number().over(w).cast("long").alias("rank"))
-    )
+    index = partial(_warm_fidelity_index, spark, sf_dir)
+    return _rank_tfidf(spark, index, tokenize_text(query), top_k)
 
 
 def duck_search(query: str, *, k: int = 1, top_k: int = TOP_K, df_mode: str = "correct") -> str:
@@ -290,12 +301,11 @@ def batch_workload(
         )
     qdf = spark.createDataFrame(pairs, "query_id long, term string")
     post, stats, n_docs = _warm_index(spark, sf_dir, k)
-    contrib = (1 + F.log(F.col("tf"))) * F.log10(F.lit(n_docs) / F.col("df"))
     scored = (
         post.join(F.broadcast(qdf), "term")
         .join(F.broadcast(stats.join(F.broadcast(qdf.select("term").distinct()), "term")), "term")
         .groupBy("query_id", "docno")
-        .agg(F.round(F.sum(contrib), 6).alias("score"))
+        .agg(F.round(F.sum(_tfidf(n_docs)), 6).alias("score"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docno"))
     return (
@@ -523,27 +533,12 @@ def search_passages(
         F.countDistinct("doc_id", "chunk_id").alias("df")
     )
     qdf = spark.createDataFrame([(t,) for t in terms], "term string")
-    contrib = (1 + F.log(F.col("tf"))) * F.log10(F.lit(n_chunks) / F.col("df"))
-    return (
-        post.join(F.broadcast(qdf), "term")
-        .join(F.broadcast(stats.join(F.broadcast(qdf), "term")), "term")
+    scored = (
+        _query_hits(post, stats, qdf)
         .groupBy("doc_id", "chunk_id", "start_tok")
-        .agg(F.round(F.sum(contrib), 6).alias("score"))
-        .orderBy(F.desc("score"), "doc_id", "chunk_id")
-        .limit(top_k)
-        .select(
-            "doc_id",
-            "chunk_id",
-            "start_tok",
-            "score",
-            F.row_number()
-            .over(
-                Window.orderBy(F.desc("score"), "doc_id", "chunk_id")
-            )
-            .cast("long")
-            .alias("rank"),
-        )
+        .agg(F.round(F.sum(_tfidf(n_chunks)), 6).alias("score"))
     )
+    return top_k_ranked(scored, top_k, F.desc("score"), "doc_id", "chunk_id")
 
 
 def duck_search_passages(query: str, *, top_k: int = TOP_K) -> str:
@@ -595,24 +590,8 @@ def search_phrase(
     intersection needed). tf = phrase occurrence count; scoring formula
     unchanged."""
     terms = tokenize_query(phrase)
-    k = len(terms)
-    if k == 0:
-        return spark.createDataFrame([], "docno long, score double, rank long")
-    gram = " ".join(terms)
-    post, stats, n_docs = _warm_index(spark, sf_dir, k)
-    qdf = spark.createDataFrame([(gram,)], "term string")
-    hits = post.join(F.broadcast(qdf), "term").join(
-        F.broadcast(stats.join(F.broadcast(qdf), "term")), "term"
-    )
-    contrib = (1 + F.log(F.col("tf"))) * F.log10(F.lit(n_docs) / F.col("df"))
-    w = Window.orderBy(F.desc("score"), F.asc("docno"))
-    return (
-        hits.groupBy("docno")
-        .agg(F.round(F.sum(contrib), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docno"))
-        .limit(top_k)
-        .select("docno", "score", F.row_number().over(w).cast("long").alias("rank"))
-    )
+    index = partial(_warm_index, spark, sf_dir, len(terms))
+    return _rank_tfidf(spark, index, [" ".join(terms)] if terms else [], top_k)
 
 
 def search_indexed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -779,11 +758,8 @@ def search_bm25(
     dl = post.groupBy("docno").agg(F.sum("tf").alias("dl"))
     avgdl = dl.agg(F.avg("dl").alias("avgdl"))
     qdf = spark.createDataFrame([(t,) for t in set(terms)], "term string")
-    hits = (
-        post.join(F.broadcast(qdf), "term")
-        .join(F.broadcast(stats.join(F.broadcast(qdf), "term")), "term")
-        .join(dl, "docno")
-        .crossJoin(F.broadcast(avgdl))
+    hits = _query_hits(post, stats, qdf).join(dl, "docno").crossJoin(
+        F.broadcast(avgdl)
     )
     idf = F.log(
         1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
@@ -792,14 +768,8 @@ def search_bm25(
         F.col("tf")
         + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
     )
-    w = Window.orderBy(F.desc("score"), F.asc("docno"))
-    return (
-        hits.groupBy("docno")
-        .agg(F.round(F.sum(idf * norm), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docno"))
-        .limit(top_k)
-        .select("docno", "score", F.row_number().over(w).cast("long").alias("rank"))
-    )
+    scored = hits.groupBy("docno").agg(F.round(F.sum(idf * norm), 6).alias("score"))
+    return top_k_ranked(scored, top_k, F.desc("score"), F.asc("docno"))
 
 
 def duck_search_bm25(query: str, *, k: int = 1, top_k: int = TOP_K) -> str:
@@ -883,13 +853,8 @@ def search_lm_dirichlet(
         )
         .groupBy("docno")
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docno"))
-        .limit(top_k)
     )
-    w = Window.orderBy(F.desc("score"), F.asc("docno"))
-    return scored.select(
-        "docno", "score", F.row_number().over(w).cast("long").alias("rank")
-    )
+    return top_k_ranked(scored, top_k, F.desc("score"), F.asc("docno"))
 
 
 def duck_search_lm_dirichlet(query: str, *, k: int = 1, top_k: int = TOP_K) -> str:
@@ -934,9 +899,7 @@ def top_terms_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined to dictionary-sized stats; output is docs×k rows, never the
     full postings."""
     post, stats, n_docs = _warm_index(spark, sf_dir, 1)
-    tfidf = F.round(
-        (1 + F.log(F.col("tf"))) * F.log10(F.lit(n_docs) / F.col("df")), 6
-    )
+    tfidf = F.round(_tfidf(n_docs), 6)
     w = Window.partitionBy("docno").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         post.join(stats.select("term", "df"), "term")
@@ -1053,13 +1016,8 @@ def search_rrf(
                 6,
             ).alias("rrf"),
         )
-        .orderBy(F.desc("rrf"), F.asc("docno"))
-        .limit(top_k)
     )
-    w = Window.orderBy(F.desc("rrf"), F.asc("docno"))
-    return fused.select(
-        "docno", "rrf", F.row_number().over(w).cast("long").alias("rank")
-    )
+    return top_k_ranked(fused, top_k, F.desc("rrf"), F.asc("docno"))
 
 
 def duck_search_rrf(query: str, *, top_k: int = TOP_K) -> str:
@@ -1112,13 +1070,8 @@ def search_hybrid_rrf(
                 6,
             ).alias("rrf"),
         )
-        .orderBy(F.desc("rrf"), F.asc("docno"))
-        .limit(top_k)
     )
-    w = Window.orderBy(F.desc("rrf"), F.asc("docno"))
-    return fused.select(
-        "docno", "rrf", F.row_number().over(w).cast("long").alias("rank")
-    )
+    return top_k_ranked(fused, top_k, F.desc("rrf"), F.asc("docno"))
 
 
 def duck_search_hybrid_rrf(query: str, *, top_k: int = TOP_K) -> str:
@@ -1190,15 +1143,7 @@ def search_proximity(
     d = g.filter((F.size("pa") > 0) & (F.size("pb") > 0)).select(
         "docno", mindist.alias("mindist")
     )
-    w = Window.orderBy(F.asc("mindist"), F.asc("docno"))
-    return (
-        d.orderBy(F.asc("mindist"), F.asc("docno"))
-        .limit(top_k)
-        .select(
-            "docno", "mindist",
-            F.row_number().over(w).cast("long").alias("rank"),
-        )
-    )
+    return top_k_ranked(d, top_k, F.asc("mindist"), F.asc("docno"))
 
 
 def duck_search_proximity(term_a: str, term_b: str, *, top_k: int = TOP_K) -> str:
@@ -1317,7 +1262,7 @@ def search_prf(
         return spark.createDataFrame([], "docno long, score double, rank long")
     post, stats, n_docs = _warm_index(spark, sf_dir, 1)
     fb = search(spark, sf_dir, query, top_k=top_k).select("docno")
-    contrib = (1 + F.log(F.col("tf"))) * F.log10(F.lit(n_docs) / F.col("df"))
+    contrib = _tfidf(n_docs)
     cw = (
         post.join(F.broadcast(fb), "docno")
         .filter(~F.col("term").isin(terms))
@@ -1340,15 +1285,7 @@ def search_prf(
         .groupBy("docno")
         .agg(F.round(F.sum(F.col("weight") * contrib), 6).alias("score"))
     )
-    w = Window.orderBy(F.desc("score"), F.asc("docno"))
-    return (
-        scored.orderBy(F.desc("score"), F.asc("docno"))
-        .limit(top_k)
-        .select(
-            "docno", "score",
-            F.row_number().over(w).cast("long").alias("rank"),
-        )
-    )
+    return top_k_ranked(scored, top_k, F.desc("score"), F.asc("docno"))
 
 
 def duck_search_prf(query: str, *, top_k: int = TOP_K) -> str:
@@ -1501,16 +1438,7 @@ def search_phrase_positional(
     d = g.select("docno", occ.alias("occurrences")).filter(
         F.col("occurrences") > 0
     )
-    w = Window.orderBy(F.desc("occurrences"), F.asc("docno"))
-    return (
-        d.orderBy(F.desc("occurrences"), F.asc("docno"))
-        .limit(top_k)
-        .select(
-            "docno",
-            "occurrences",
-            F.row_number().over(w).cast("long").alias("rank"),
-        )
-    )
+    return top_k_ranked(d, top_k, F.desc("occurrences"), F.asc("docno"))
 
 
 def duck_search_phrase_positional(phrase: str, *, top_k: int = TOP_K) -> str:

@@ -26,7 +26,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..caches import memo
 from ..sources.tables import table
-from . import QuerySpec
+from . import QuerySpec, top_k_ranked
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -841,8 +841,6 @@ def query_ivfpq_store(
     it — so a store written at a different PQ_M than today's constant
     serves correctly, and a geometry the query dimension cannot
     satisfy raises instead of mis-slicing the LUTs."""
-    from pyspark.sql import Window
-
     # probe planning (and the r17 empty/wrong-dim qvec guard) shared
     # with query_ivf_store — ONE definition, see probe_cells
     probes = probe_cells(spark, path, qvec, nprobe)
@@ -896,15 +894,7 @@ def query_ivfpq_store(
             F.round(_cos(F.col("embedding"), q), 6).alias("cos"),
         )
     )
-    w = Window.orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        rr.orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(top_k)
-        .select(
-            "vec_id", "adist", "cos",
-            F.row_number().over(w).cast("long").alias("rank"),
-        )
-    )
+    return top_k_ranked(rr, top_k, F.desc("cos"), F.asc("vec_id"))
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
@@ -1772,8 +1762,6 @@ def _warm_adc_index(spark: SparkSession, sf_dir: str):
 def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, adist, cos, rank): top-k by exact cosine over the
     ADC-shortlisted candidates of the query vector's probe cells."""
-    from pyspark.sql import Window
-
     emb, cells, codes, cents, seeds = _warm_adc_index(spark, sf_dir)
     pairs = _ivf_pairs(emb, cents)
     probes = (
@@ -1815,15 +1803,7 @@ def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(_cos(F.col("embedding"), F.col("qvec")), 6).alias("cos"),
         )
     )
-    w = Window.orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        rr.orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select(
-            "vec_id", "adist", "cos",
-            F.row_number().over(w).cast("long").alias("rank"),
-        )
-    )
+    return top_k_ranked(rr, TOP_K, F.desc("cos"), F.asc("vec_id"))
 
 
 def _duck_ivfpq_adc() -> str:

@@ -279,3 +279,35 @@ def test_cdc_chunks_shuffles_hashes_not_text(spark, sf_dir):
     plan = _physical(cdc_chunks(spark, sf_dir))
     ex = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
     assert ex and all("text" not in ln for ln in ex), plan[:4000]
+
+
+def test_dump_plans_normalize_masks_session_and_checkout_text():
+    """plans/dump_plans.py: one plan dumped from two sessions in two
+    checkouts normalizes to the same text, and a real plan difference
+    survives. Spark-free."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "plans" / "dump_plans.py"
+    spec = importlib.util.spec_from_file_location("dump_plans", path)
+    dump_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(dump_plans)
+
+    plan = (
+        "BroadcastHashJoin Inner {build} (3)\n"
+        "Arguments: [term#{a}], MapPartitionsRDD[{a}] at applySchemaToPythonRDD"
+        " at {site}:0, ExistingRDD, [plan_id={a}]\n"
+        "Condition : exists(toks#{a}, lambdafunction((lambda x_{a}#{a} = a),"
+        " lambda x_{a}#{a}, false))\n"
+        "Location: InMemoryFileIndex [file:{root}/spark-warehouse/roundtrip/"
+        "pid{a}/ivfpq_store_served/sf0.001/codes]\n"
+    )
+    one = plan.format(
+        build="BuildRight", a=293, site="NativeMethodAccessorImpl.java", root="/src/a"
+    )
+    two = plan.format(build="BuildRight", a=17, site="<unknown>", root="/work/b")
+    left = plan.format(build="BuildLeft", a=17, site="<unknown>", root="/work/b")
+    norm = dump_plans.normalize
+    assert norm(one, "/src/a") == norm(two, "/work/b/")
+    assert norm(left, "/work/b") != norm(two, "/work/b")
+    assert "/src/a" not in norm(one, "/src/a")

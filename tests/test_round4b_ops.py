@@ -1,16 +1,12 @@
-"""Property tests for the second round-4 operator batch: Dirichlet
-query-likelihood ranking, portable HLL and PII/identifier scrubbing.
-The value oracles run in tests/test_oracle_parity.py; these assert the
-SEMANTIC invariants the oracle hash can't express."""
+"""Property tests for the second round-4 operator batch: portable HLL
+and PII/identifier scrubbing. The value oracles run in
+tests/test_oracle_parity.py; these assert the SEMANTIC invariants the
+oracle hash can't express."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from simple_mapreduce_search_engine_information_retrieval__spark.plans.search import (
-    search_lm_dirichlet,
-    tokenize_query,
-)
 from simple_mapreduce_search_engine_information_retrieval__spark.plans.sketches_queries import (
     HLL_M,
     hll_registers,
@@ -18,31 +14,6 @@ from simple_mapreduce_search_engine_information_retrieval__spark.plans.sketches_
 from simple_mapreduce_search_engine_information_retrieval__spark.plans.textstats import (
     pii_scrub,
 )
-from simple_mapreduce_search_engine_information_retrieval__spark.sources.tables import (
-    table,
-)
-
-
-def test_lm_dirichlet_ranks_hit_docs(spark, sf_dir):
-    """Top docs must actually contain a query term, scores are log-probs
-    (negative), and the ranking is strictly ordered."""
-    res = search_lm_dirichlet(spark, sf_dir, "spark join").collect()
-    assert 0 < len(res) <= 10
-    assert all(r.score < 0 for r in res)
-    scores = [r.score for r in res]
-    assert scores == sorted(scores, reverse=True)
-    terms = set(tokenize_query("spark join"))
-    docs = table(spark, sf_dir, "documents")
-    hit_docs = {
-        r.doc_id
-        for r in docs.select("doc_id", "text").collect()
-        if terms & set(r.text.lower().split())
-    }
-    assert all(r.docno in hit_docs for r in res)
-
-
-def test_lm_dirichlet_empty_query_returns_empty(spark, sf_dir):
-    assert search_lm_dirichlet(spark, sf_dir, "the of and").count() == 0
 
 
 def test_hll_estimate_within_expected_error(spark, sf_dir):

@@ -1,12 +1,24 @@
 from __future__ import annotations
 
+import re
+
+from pyspark.sql import functions as F
+
+from conftest import physical_plan
+from simple_mapreduce_search_engine_information_retrieval__spark.plans import top_k_ranked
 from simple_mapreduce_search_engine_information_retrieval__spark.plans.search import (
+    search,
+    search_fidelity,
+    search_lm_dirichlet,
     tokenize_query,
     wildcard_terms,
 )
 from simple_mapreduce_search_engine_information_retrieval__spark.plans.views import (
     SEARCH_SQL_TEMPLATE,
     register_engine_views,
+)
+from simple_mapreduce_search_engine_information_retrieval__spark.sources.tables import (
+    table,
 )
 
 
@@ -233,3 +245,61 @@ def test_phrase_positional_n_term_matches_oracle(spark, sf_dir):
         assert want.get(d) == n
     if len(want) <= 10:
         assert got == want
+
+
+def test_lm_dirichlet_ranks_hit_docs(spark, sf_dir):
+    """Top docs must actually contain a query term, scores are log-probs
+    (negative), and the ranking is strictly ordered."""
+    res = search_lm_dirichlet(spark, sf_dir, "spark join").collect()
+    assert 0 < len(res) <= 10
+    assert all(r.score < 0 for r in res)
+    scores = [r.score for r in res]
+    assert scores == sorted(scores, reverse=True)
+    terms = set(tokenize_query("spark join"))
+    docs = table(spark, sf_dir, "documents")
+    hit_docs = {
+        r.doc_id
+        for r in docs.select("doc_id", "text").collect()
+        if terms & set(r.text.lower().split())
+    }
+    assert all(r.docno in hit_docs for r in res)
+
+
+def test_lm_dirichlet_empty_query_returns_empty(spark, sf_dir):
+    assert search_lm_dirichlet(spark, sf_dir, "the of and").count() == 0
+
+
+def test_top_k_ranked_cuts_ties_by_the_next_key(spark):
+    """Rows tied on the first key are ordered and cut by the next one;
+    a top_k past the row count keeps every row; an empty input keeps
+    its schema and gains a long rank."""
+    df = spark.createDataFrame(
+        [(3, 0.5), (2, 0.9), (1, 0.5), (4, 0.1)], "docno long, score double"
+    )
+    order = (F.desc("score"), F.asc("docno"))
+
+    def rows(out):
+        return sorted((tuple(r) for r in out.collect()), key=lambda r: r[2])
+
+    assert rows(top_k_ranked(df, 2, *order)) == [(2, 0.9, 1), (1, 0.5, 2)]
+    assert rows(top_k_ranked(df, 10, *order)) == [
+        (2, 0.9, 1), (1, 0.5, 2), (3, 0.5, 3), (4, 0.1, 4)
+    ]
+    empty = top_k_ranked(df.limit(0), 10, *order)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<docno:bigint,score:double,rank:bigint>"
+    )
+
+
+def test_fidelity_stats_join_builds_from_the_query_side(spark, sf_dir):
+    """search_fidelity broadcasts the query terms into its stats join,
+    never the stemmed dictionary, so its joins build from the same
+    sides as search's."""
+
+    def build_sides(df):
+        return re.findall(r"BroadcastHashJoin .*?(Build\w+)", physical_plan(df))
+
+    want = build_sides(search(spark, sf_dir, "spark join"))
+    assert want == ["BuildRight"] * 3
+    assert build_sides(search_fidelity(spark, sf_dir, "spark join")) == want
