@@ -40,8 +40,6 @@ def test_wildcard_infix_verify_kills_false_positives(spark, sf_dir):
 
 
 def test_sql_view_search_matches_plan(spark, sf_dir):
-    from simple_mapreduce_search_engine_information_retrieval__spark.plans.search import search
-
     register_engine_views(spark, sf_dir)
     via_sql = spark.sql(SEARCH_SQL_TEMPLATE.format(terms="'spark','join'", top_k=10))
     via_plan = search(spark, sf_dir, "spark join")
