@@ -115,33 +115,23 @@ def _latest_verdicts() -> dict[str, tuple[int, bool]]:
 # list each round.
 CHANGED_THIS_ROUND = frozenset(
     {
-        # The in-session tf-idf rankers share one ranker (_rank_tfidf)
-        # and one contribution expression (_tfidf).
-        "search_one_term",
-        "search_two_term",
-        "search_with_stopwords_and_miss",
-        "search_with_docids",
-        "search_compat_df1",
-        "search_phrase_2gram",
-        "search_phrase_warm",
-        "search_fidelity_stemmed",
-        "search_fidelity_warm",
-        "search_passages",
-        "search_batch_workload",
-        "search_eval_metrics",
-        "search_top_terms_per_doc",
-        "search_related_docs",
-        # Every global ranked tail goes through plans.top_k_ranked.
-        "search_prf_expanded",
-        "search_bm25",
-        "search_lm_dirichlet",
-        "search_rrf_fusion",
-        "search_hybrid_rrf",
-        "search_proximity_pair",
-        "search_phrase_positional",
-        "search_snippets",
-        "knn_ivfpq_store_roundtrip",
+        # The vector family scores through one query scorer and one
+        # cosine top-k tail, reads the query vector through one
+        # _query_vec, ingests through one frozen-codebook delta body and
+        # serves every IVF store layout through query_ivf_store.
+        "knn_cosine_brute_force",
+        "knn_brute_force_arrow",
+        "knn_ivf_bucketed",
+        "knn_ivf_trained",
+        "knn_ivf_filtered",
+        "knn_range_search",
+        "knn_diversified_topk",
+        "search_mmr_rerank",
         "knn_ivfpq_adc",
+        "knn_ivf_store_roundtrip",
+        "knn_ivfpq_store_roundtrip",
+        "knn_ivf_rebalanced_roundtrip",
+        "streaming_vector_ingest",
     }
 )
 
