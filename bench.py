@@ -40,6 +40,19 @@ CAPTURE_WINDOW = 2000
 N_SLOWEST = 25
 
 
+def bench_queries() -> dict:
+    """name -> query callable in bench order: HEADLINE first, then the
+    modules' registration order. The driver's order (``queries()``) puts
+    each round's failing and changed queries first, so timing in it would
+    reorder the session whenever a verdict or CHANGED_THIS_ROUND moves."""
+    import __spark_entry__ as e
+
+    registry = {name: spec.fn for name, spec in e._registered().items()}
+    names = [n for n in HEADLINE if n in registry]
+    names += [n for n in registry if n not in HEADLINE]
+    return {name: registry[name] for name in names}
+
+
 def render_headline(timings: dict[str, float], scalars: dict) -> str:
     """The ONE printed JSON line: every scalar plus only the N_SLOWEST
     slowest queries, so the line fits the driver's capture window no
@@ -207,14 +220,9 @@ def main() -> None:
     except ValueError:
         sf_val = None
 
-    import __spark_entry__ as e
-
-    registry = e.queries()
+    registry = bench_queries()
     spark = get_spark("smse-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    names = [n for n in HEADLINE if n in registry]
-    names += [n for n in registry if n not in HEADLINE]
 
     warm_engine(spark, sf_dir)
 
@@ -250,8 +258,7 @@ def main() -> None:
         print(f"# bench calibration failed: {exc!r}", file=sys.stderr)
 
     timings: dict[str, float] = {}
-    for name in names:
-        fn = registry[name]
+    for name, fn in registry.items():
         t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
@@ -283,26 +290,20 @@ def main() -> None:
             shutil.rmtree(d, ignore_errors=True)
 
     try:
-        from pyspark.sql import functions as F
-
         from simple_mapreduce_search_engine_information_retrieval__spark.plans.index_store import (
             build_index,
             search_indexed,
         )
         from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarity import (
             QUERY_VEC_ID,
+            _query_vec,
             query_ivf_store,
             query_ivfpq_store,
             write_ivf_store,
             write_ivfpq_store,
         )
 
-        qvec = list(
-            table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") == QUERY_VEC_ID)
-            .head()
-            .embedding
-        )
+        qvec = _query_vec(spark, sf_dir)
         _store_serving(
             "search_indexed_warm",
             "smse_bench_index_",

@@ -51,10 +51,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     name_filters = [a for a in sys.argv[1:] if not a.startswith("-")]
 
-    import __spark_entry__ as e
-    from bench import warm_engine
+    from bench import bench_queries, warm_engine
 
-    registry = e.queries()
+    registry = bench_queries()
     spark = _spark_with_ui()
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext

@@ -688,7 +688,7 @@ def append_bpe_store(
     rewritten. EXACTLY-ONCE: dynamic partition overwrite replaces this
     batch's single ingest partition, so a replayed batch rewrites itself
     (one partition per batch by construction — no orphan-sweep hazard;
-    contrast sweep_orphan_ingest_partitions, where a batch spreads over
+    contrast _ingest_delta's orphan sweep, where a batch spreads over
     data-dependent cell partitions). Symbols outside the frozen vocab
     encode as UNK_ID — frozen-tokenizer OOV semantics, disclosed and
     crafted-tested."""

@@ -638,43 +638,22 @@ def rebalance_ivf_store(
     return plan
 
 
-def query_rebalanced_store(
-    spark: SparkSession, path: str, qvec: list[float], *, where=None
-):
-    """query_ivf_store over the rebalanced layout: probe planning reads
-    the K-row codebook, the probed cells map to their serving units via
-    the K-row unit map (split cells expand to their shard list), and the
-    scan prunes on the static unit IN-list exactly as the cell layout
-    pruned on cells. Cell filtering stays (a merge unit holds >1 cell)."""
-    from .similarity import NPROBE, TOP_K, _cos, probe_cells
-
-    probes = probe_cells(spark, path, qvec, NPROBE)
-    q = F.array(*[F.lit(float(x)) for x in qvec])
+def _probed_units(spark: SparkSession, path: str, cells: list) -> list[str]:
+    """The serving units of a rebalanced layout that hold ``cells``,
+    sorted: the probed rows of the K-row unit map, a split cell expanded
+    to its shard list. query_ivf_store prunes its scan on them."""
     units: list[str] = []
     for r in (
         spark.read.parquet(f"{path}/units")
-        .filter(F.col("cell").isin(probes))
+        .filter(F.col("cell").isin(cells))
         .collect()  # bounded: <= NPROBE rows of the K-row unit map
     ):
         if r["action"] == "split":
             units += [f"{r['unit_base']}-{s}" for s in range(r["n_shards"])]
         else:
             units.append(r["unit_base"])
-    scan = spark.read.parquet(f"{path}/vectors").filter(
-        # sorted: collect() row order varies, and so would the plan text
-        F.col("unit").isin(sorted(units)) & F.col("cell").isin(probes)
-    )
-    if where is not None:
-        scan = scan.filter(where)
-    return (
-        scan.select(
-            "vec_id",
-            F.col("cell").cast("long").alias("cell"),
-            F.round(_cos(F.col("embedding"), q), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
+    # sorted: collect() row order varies, and so would the plan text
+    return sorted(units)
 
 
 def ivf_rebalanced_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -688,22 +667,24 @@ def ivf_rebalanced_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     point is value-equality with the ORIGINAL serving plan), covered by
     the documented family exemption in plans/similarity.py; a ppm twin
     would need its own oracle and lose that equivalence proof."""
-    from .similarity import QUERY_VEC_ID, write_ivf_store
+    from .similarity import (
+        QUERY_VEC_ID,
+        _query_vec,
+        query_ivf_store,
+        write_ivf_store,
+    )
     from .sinks_sources import _out_path
 
     store = _out_path("ivf_rebal_base", sf_dir)
     out = _out_path("ivf_rebal_out", sf_dir)
     write_ivf_store(spark, sf_dir, store)
     rebalance_ivf_store(spark, store, out)
-    qvec = [
-        float(x)
-        for x in table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == QUERY_VEC_ID)
-        .head()
-        .embedding
-    ]
-    return query_rebalanced_store(
-        spark, out, qvec, where=F.col("vec_id") != QUERY_VEC_ID
+    return query_ivf_store(
+        spark,
+        out,
+        _query_vec(spark, sf_dir),
+        where=F.col("vec_id") != QUERY_VEC_ID,
+        with_cell=True,
     )
 
 

@@ -15,6 +15,19 @@ Scale notes (100 TB of embeddings):
 - for >512-dim vectors a mapInPandas/numpy (BLAS) kernel beats per-element
   codegen; the operator contract (vec_id, score) stays identical. Left as
   the documented swap-in; 64-dim fixtures don't need it.
+
+One definition per concern:
+- scoring: ``_scored`` is the one query scorer (each row's rounded cosine
+  to the query vector, from the 1-row ``_qvec`` relation in session or a
+  literal array in a store serve) and ``_top_cos`` the one cosine top-k
+  tail; ``_query_vec`` is the one driver-side query vector;
+- ingest: ``_ingest_delta`` is the one frozen-codebook delta ingest
+  (strict assignment, dynamic (cell, ingest) overwrite, post-commit orphan
+  sweep) behind ``append_ivf_store`` and the streaming
+  ``incremental_vector_ingest``;
+- serving: ``query_ivf_store`` serves every IVF store layout; a
+  rebalanced layout (vectors partitioned by ``unit``) adds its unit
+  pruning on its own.
 """
 
 from __future__ import annotations
@@ -72,6 +85,47 @@ def _cos(a: Column, b: Column) -> Column:
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
+def _query_side(emb: DataFrame) -> DataFrame:
+    """QUERY_VEC_ID's row of ``emb``: the 1-row query side of every
+    in-session ranker and probe planner."""
+    return emb.filter(F.col("vec_id") == QUERY_VEC_ID)
+
+
+def _qvec(emb: DataFrame) -> DataFrame:
+    """The query vector as the 1-row ``qvec`` relation."""
+    return _query_side(emb).select(F.col("embedding").alias("qvec"))
+
+
+def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
+    """The query vector collected driver-side, as a store serve takes
+    it. Reads the plain fixture table: a 1-row head() needs no cache
+    fill."""
+    row = _query_side(table(spark, sf_dir, "embeddings")).head()
+    return [float(x) for x in row.embedding]
+
+
+def _cos6(cos: Column) -> Column:
+    return F.round(cos, 6).alias("cos")
+
+
+def _scored(rows: DataFrame, q: DataFrame | Column, *cols, score=_cos6):
+    """``cols`` of ``rows`` plus each row's embedding's cosine to the
+    query vector, rendered by ``score`` (``round(cos, 6) AS cos`` unless
+    given). ``q`` is the 1-row ``qvec`` relation, broadcast against the
+    rows, or the query vector as a literal array (store serves). The one
+    query scorer of the vector family."""
+    if isinstance(q, DataFrame):
+        # bounded: 1-row query vector
+        rows, q = rows.crossJoin(F.broadcast(q)), F.col("qvec")
+    return rows.select(*cols, score(_cos(F.col("embedding"), q)))
+
+
+def _top_cos(df: DataFrame, k: int = TOP_K, by: str = "cos") -> DataFrame:
+    """The cosine top-k tail: the first ``k`` rows by ``by`` descending,
+    ties to the smallest vec_id."""
+    return df.orderBy(F.desc(by), F.asc("vec_id")).limit(k)
+
+
 def knn_brute_force(
     spark: SparkSession, sf_dir: str, *, top_k: int = TOP_K
 ) -> DataFrame:
@@ -79,18 +133,8 @@ def knn_brute_force(
     (vec_id, cos) — the correctness baseline every ANN variant is
     measured against."""
     emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
-    )
-    return (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", F.round(_cos(F.col("embedding"), F.col("qvec")), 6).alias("cos")
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(top_k)
-    )
+    rows = emb.filter(F.col("vec_id") != QUERY_VEC_ID)
+    return _top_cos(_scored(rows, _qvec(emb), "vec_id"), top_k)
 
 
 def duck_knn_brute(top_k: int = TOP_K) -> str:
@@ -129,8 +173,7 @@ def knn_brute_force_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     emb = table(spark, sf_dir, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == QUERY_VEC_ID).head()
-    qv = np.asarray(qrow.embedding, dtype=np.float64)
+    qv = np.asarray(_query_vec(spark, sf_dir), dtype=np.float64)
     qn = float(np.sqrt(qv @ qv))
 
     def kernel(batches):
@@ -143,13 +186,11 @@ def knn_brute_force_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             cos = (mat @ qv) / (np.sqrt((mat * mat).sum(axis=1)) * qn)
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "cos": cos})
 
-    return (
+    return _top_cos(
         emb.filter(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", "embedding")
         .mapInPandas(kernel, "vec_id long, cos double")
-        .select("vec_id", F.round("cos", 6).alias("cos"))
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(TOP_K)
+        .select("vec_id", _cos6(F.col("cos")))
     )
 
 
@@ -221,8 +262,8 @@ def _ivf_cells(pairs: DataFrame, *, strict: bool = False) -> DataFrame:
     (max over struct(sim, -cent_id) — identical lexicographic struct
     comparison in Spark and DuckDB, so assignments match the oracle).
 
-    ``strict=True`` (the WRITE arms — append_ivf_store and the
-    streaming ingest twin, r16 verdict #7 audit, closed r17) raises at
+    ``strict=True`` (the WRITE arm — _ingest_delta, which the batch and
+    streaming ingests share; r16 verdict #7 audit, closed r17) raises at
     execution time if any vector's best sim is NULL. A wrong-dimension
     embedding yields NULL sim against every centroid (zip_with
     null-padding), and the struct max then ties entirely on -cent_id —
@@ -255,36 +296,29 @@ def _ivf_cells(pairs: DataFrame, *, strict: bool = False) -> DataFrame:
     )
 
 
+def _nearest_cells(ranking: DataFrame) -> DataFrame:
+    """(cell): the NPROBE codebook cells of a (cent_id, sim) ranking
+    nearest the query, ties to the smallest cent_id."""
+    return (
+        ranking.orderBy(F.desc("sim"), F.asc("cent_id"))
+        .limit(NPROBE)
+        .select(F.col("cent_id").alias("cell"))
+    )
+
+
 def _ivf_serve(emb: DataFrame, cents: DataFrame, cells: DataFrame) -> DataFrame:
     """The multi-probe IVF serving plan shared by the sampled and
     trained codebooks: probe planning touches only the 1-row query x
     K-row codebook, then the scored scan reads only the probed cells.
     One definition so tie-breaking/rounding cannot diverge between the
     two variants (each holds its own value oracle)."""
-    probes = (
-        emb.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .crossJoin(F.broadcast(cents))
-        .select("cent_id", _cos(F.col("embedding"), F.col("cvec")).alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("cent_id"))
-        .limit(NPROBE)
-        .select(F.col("cent_id").alias("cell"))
-    )
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
-    )
-    return (
+    probes = _nearest_cells(_ivf_pairs(_query_side(emb), cents))
+    rows = (
         emb.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(cells, "vec_id")
         .join(F.broadcast(probes), "cell")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "cell",
-            F.round(_cos(F.col("embedding"), F.col("qvec")), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(TOP_K)
     )
+    return _top_cos(_scored(rows, _qvec(emb), "vec_id", "cell"))
 
 
 def knn_ivf_bucketed(
@@ -451,9 +485,7 @@ def knn_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ranked = (
-        emb.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .crossJoin(F.broadcast(cents))
-        .select("cent_id", _cos(F.col("embedding"), F.col("cvec")).alias("sim"))
+        _ivf_pairs(_query_side(emb), cents)
         .withColumn(
             "rk",
             F.row_number().over(
@@ -467,25 +499,15 @@ def knn_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= F.col("npf"))
         .select(F.col("cent_id").alias("cell"))
     )
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
-    )
-    return (
+    rows = (
         emb.filter(
             (F.col("vec_id") != QUERY_VEC_ID)
             & (F.col("label") == FILTER_LABEL)
         )
         .join(cells, "vec_id")
         .join(F.broadcast(probes), "cell")  # bounded: <=K probed cells
-        .crossJoin(F.broadcast(q))  # bounded: 1-row query vector
-        .select(
-            "vec_id",
-            "cell",
-            F.round(_cos(F.col("embedding"), F.col("qvec")), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(TOP_K)
     )
+    return _top_cos(_scored(rows, _qvec(emb), "vec_id", "cell"))
 
 
 DUCK_KNN_IVF_FILTERED = f"""
@@ -573,10 +595,10 @@ def probe_cells(
     """Probe planning over a persisted store's K-row codebook: the
     query's nprobe nearest cell ids, collected driver-side so the scan
     filter is a static IN-list (partition pruning, not a runtime join).
-    ONE definition shared by query_ivf_store, query_ivfpq_store and the
-    rebalanced-layout reader (plans/layout.py) so the probe tiebreak —
-    and the input guard below — cannot drift between serving paths
-    (r8 review; r16 audit).
+    ONE definition shared by query_ivf_store (cell and rebalanced
+    layouts) and query_ivfpq_store so the probe tiebreak — and the
+    input guard below — cannot drift between serving paths (r8 review;
+    r16 audit).
 
     Input guard (r16 audit, closed r17): an empty or wrong-dimension
     ``qvec`` RAISES ValueError instead of silently serving top_k rows
@@ -634,22 +656,29 @@ def query_ivf_store(
     cell to the output (cast long — partition-column type inference
     reads the directory value as int32), matching knn_ivf_bucketed's
     (vec_id, cell, cos) shape so the store-served path can share its
-    value oracle (r12 verdict #2)."""
+    value oracle (r12 verdict #2).
+
+    The layout describes itself: a store whose vectors part is
+    partitioned by ``unit`` is a rebalanced layout
+    (plans/layout.py::rebalance_ivf_store), and the scan then also
+    prunes on the static IN-list of the serving units that hold the
+    probed cells. The cell filter stays, since a merge unit holds more
+    than one cell."""
     probes = probe_cells(spark, path, qvec, nprobe)
     q = F.array(*[F.lit(float(x)) for x in qvec])
-    scan = spark.read.parquet(f"{path}/vectors").filter(
-        F.col("cell").isin(probes)
-    )
+    scan = spark.read.parquet(f"{path}/vectors")
+    keep = F.col("cell").isin(probes)
+    if "unit" in scan.columns:
+        from .layout import _probed_units
+
+        keep = F.col("unit").isin(_probed_units(spark, path, probes)) & keep
+    scan = scan.filter(keep)
     if where is not None:
         scan = scan.filter(where)
     cols = ["vec_id"] + (
         [F.col("cell").cast("long").alias("cell")] if with_cell else []
     )
-    return (
-        scan.select(*cols, F.round(_cos(F.col("embedding"), q), 6).alias("cos"))
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(top_k)
-    )
+    return _top_cos(_scored(scan, q, *cols), top_k)
 
 
 # --- incremental IVF ingest ----------------------------------------------
@@ -695,69 +724,58 @@ FROM pairs GROUP BY vec_id
 def append_ivf_store(
     spark: SparkSession, sf_dir: str, out_path: str, *, batch_id: int = 1
 ) -> None:
-    """Ingest the delta batch into an existing `write_ivf_store` layout:
-    assign against the PERSISTED codebook (frozen — never recomputed
-    from the combined corpus) and land the delta rows under their
-    (cell, ingest=batch_id) partitions. Base files are untouched.
-    EXACTLY-ONCE: dynamic partition overwrite replaces this batch's
-    ingest partitions, and AFTER the write commits, any `ingest=
-    batch_id` partition this attempt did not write (left by an earlier
-    attempt whose source/codebook assigned rows to different cells) is
-    swept — the sweep lists #cells directories, no data read. Ordering
-    matters (r7 review): sweeping BEFORE the write would open a crash
-    window in which the previous attempt's committed data is deleted
-    and nothing replaces it. With the post-write sweep the worst crash
-    leaves stale extra partitions that the NEXT retry removes — rows
-    are never lost, and a completed call always converges to exactly
-    this attempt's rows (the blind-append hazard the streaming LSM
-    band store also guards against)."""
+    """Ingest the delta batch into an existing `write_ivf_store` layout
+    under ingest=batch_id, through the one frozen-codebook ingest body
+    (_ingest_delta). Base files are untouched."""
     if int(batch_id) == 0:
         raise ValueError("batch_id 0 is reserved for the base build")
-    emb = table(spark, sf_dir, "embeddings")
-    delta = emb.filter(F.col("vec_id") % DELTA_MOD == 0)
-    cents = spark.read.parquet(f"{out_path}/centroids")
-    # strict: a wrong-dim delta vector raises instead of silently
-    # assigning to the smallest cent_id and poisoning the store (r17)
-    cells = _ivf_cells(_ivf_pairs(delta, cents), strict=True)
+    delta = table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") % DELTA_MOD == 0
+    )
+    _ingest_delta(spark, out_path, delta, int(batch_id))
+
+
+def _ingest_delta(
+    spark: SparkSession, store_path: str, delta: DataFrame, ingest_id: int
+) -> None:
+    """The frozen-codebook delta ingest shared by append_ivf_store and
+    the streaming twin (streaming/jobs.py::incremental_vector_ingest):
+    assign ``delta`` against the PERSISTED codebook (never recomputed
+    from the combined corpus) and land its rows under their
+    (cell, ingest=ingest_id) partitions.
+
+    The assignment is strict (a wrong-dim vector raises instead of
+    silently assigning to the smallest cent_id and poisoning the store)
+    and checkpointed, so the N x K pass runs once for both the write and
+    the written-cells collect.
+
+    EXACTLY-ONCE: dynamic partition overwrite replaces this ingest's
+    partitions, and AFTER the write commits, any ingest=<ingest_id>
+    partition this attempt did not write (left by an earlier attempt
+    whose source/codebook assigned rows to different cells) is swept.
+    Ordering matters (r7 review): sweeping BEFORE the write would open
+    a crash window in which the previous attempt's committed data is
+    deleted and nothing replaces it. With the post-write sweep the worst
+    crash leaves stale extra partitions that the NEXT retry removes —
+    rows are never lost, and a completed call converges to exactly this
+    attempt's rows. The sweep is one directory glob, no data read."""
+    cents = spark.read.parquet(f"{store_path}/centroids")
+    cells = _ivf_cells(_ivf_pairs(delta, cents), strict=True).localCheckpoint()
     (
         delta.join(cells, "vec_id")
-        .withColumn("ingest", F.lit(int(batch_id)))
+        .withColumn("ingest", F.lit(ingest_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell", "ingest")
-        .parquet(f"{out_path}/vectors")
+        .parquet(f"{store_path}/vectors")
     )
-    # post-commit sweep of orphaned ingest=<batch_id> partitions from
-    # prior attempts: bounded — one distinct over the K-cell assignment
-    # (already computed this call) + one directory glob
-    written = {
-        int(r.cell) for r in cells.select("cell").distinct().collect()
-    }
-    sweep_orphan_ingest_partitions(spark, out_path, int(batch_id), written)
-
-
-def sweep_orphan_ingest_partitions(
-    spark: SparkSession, store_path: str, ingest_id: int, written_cells: set
-) -> None:
-    """Delete ingest=<ingest_id> partitions under cells this attempt did
-    NOT write — the post-commit orphan sweep shared by append_ivf_store
-    and the streaming twin (streaming/jobs.py::incremental_vector_ingest,
-    r7 ADVICE): a replayed ingest whose cell assignment differs from a
-    prior partially-committed attempt would otherwise leave stale
-    (cell, ingest) partitions that dynamic overwrite never touches.
-    MUST run AFTER the write commits (sweeping first opens a crash
-    window where the prior attempt's data is gone and nothing replaced
-    it). Bounded: one directory glob over #cells entries, no data read."""
-    jvm = spark._jvm
-    glob = jvm.org.apache.hadoop.fs.Path(
-        f"{store_path}/vectors/cell=*/ingest={ingest_id}"
-    )
-    fs = jvm.org.apache.hadoop.fs.Path(f"{store_path}/vectors").getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    for st in fs.globStatus(glob) or []:
+    written = {int(r.cell) for r in cells.select("cell").distinct().collect()}
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = path(store_path).getFileSystem(spark._jsc.hadoopConfiguration())
+    stale = path(f"{store_path}/vectors/cell=*/ingest={ingest_id}")
+    for st in fs.globStatus(stale) or []:
         cell_dir = st.getPath().getParent().getName()  # "cell=<n>"
-        if int(cell_dir.split("=", 1)[1]) not in written_cells:
+        if int(cell_dir.split("=", 1)[1]) not in written:
             fs.delete(st.getPath(), True)
 
 
@@ -884,30 +902,14 @@ def query_ivfpq_store(
     vecs = spark.read.parquet(f"{path}/vectors").filter(
         F.col("cell").isin(probes)
     )
-    rr = (
+    rr = _scored(
         # bounded: the ADC shortlist is ADC_RERANK rows by construction
-        F.broadcast(shortlist)
-        .join(vecs, "vec_id")
-        .select(
-            "vec_id",
-            F.round("adist", 6).alias("adist"),
-            F.round(_cos(F.col("embedding"), q), 6).alias("cos"),
-        )
+        F.broadcast(shortlist).join(vecs, "vec_id"),
+        q,
+        "vec_id",
+        F.round("adist", 6).alias("adist"),
     )
     return top_k_ranked(rr, top_k, F.desc("cos"), F.asc("vec_id"))
-
-
-def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
-    """QUERY_VEC_ID's embedding collected driver-side — a 1-row probe-
-    planning input (the codebook-read discipline), exactly what a real
-    serving caller hands query_ivf_store/query_ivfpq_store."""
-    return [
-        float(x)
-        for x in _emb_cached(spark, sf_dir)
-        .filter(F.col("vec_id") == QUERY_VEC_ID)
-        .head()
-        .embedding
-    ]
 
 
 def knn_ivf_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1763,16 +1765,8 @@ def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, adist, cos, rank): top-k by exact cosine over the
     ADC-shortlisted candidates of the query vector's probe cells."""
     emb, cells, codes, cents, seeds = _warm_adc_index(spark, sf_dir)
-    pairs = _ivf_pairs(emb, cents)
-    probes = (
-        pairs.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .orderBy(F.desc("sim"), F.asc("cent_id"))
-        .limit(NPROBE)
-        .select(F.col("cent_id").alias("cell"))
-    )
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
-    )
+    probes = _nearest_cells(_ivf_pairs(_query_side(emb), cents))
+    q = _qvec(emb)
     cand = (
         codes
         .join(cells, "vec_id")
@@ -1794,14 +1788,11 @@ def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.asc("adist"), F.asc("vec_id"))
         .limit(ADC_RERANK)
     )
-    rr = (
-        shortlist.join(emb, "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round("adist", 6).alias("adist"),
-            F.round(_cos(F.col("embedding"), F.col("qvec")), 6).alias("cos"),
-        )
+    rr = _scored(
+        shortlist.join(emb, "vec_id"),
+        q,
+        "vec_id",
+        F.round("adist", 6).alias("adist"),
     )
     return top_k_ranked(rr, TOP_K, F.desc("cos"), F.asc("vec_id"))
 
@@ -1928,19 +1919,8 @@ def knn_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row query broadcast — embarrassingly parallel; the IVF variants
     prune the same scan by probed cell when an index exists."""
     emb = _emb_cached(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
-    )
-    # bounded: 1-row query vector
-    return (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cos(F.col("embedding"), F.col("qvec")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= RANGE_TAU)
-    )
+    rows = emb.filter(F.col("vec_id") != QUERY_VEC_ID)
+    return _scored(rows, _qvec(emb), "vec_id").filter(F.col("cos") >= RANGE_TAU)
 
 
 DUCK_RANGE_SEARCH = f"""
@@ -1964,28 +1944,17 @@ def knn_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = _emb_cached(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
-    )
-    # bounded: 1-row query vector
-    scored = (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cos(F.col("embedding"), F.col("qvec")), 6).alias("cos"),
-        )
+    scored = _scored(
+        emb.filter(F.col("vec_id") != QUERY_VEC_ID), _qvec(emb), "vec_id"
     )
     clustered = scored.join(kmeans_clusters(spark, sf_dir), "vec_id")
     w = Window.partitionBy("cluster").orderBy(
         F.desc("cos"), F.asc("vec_id")
     )
-    return (
+    return _top_cos(
         clustered.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= DIVERSE_PER_CLUSTER)
         .select("vec_id", "cluster", "cos")
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(TOP_K)
     )
 
 
@@ -2105,22 +2074,14 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — integer compares, no float re-derivation — for 2 jobs
     instead of ~75 (measured 2.9 s -> ~0.4 s at sf0.1)."""
     emb = _emb_cached(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
+    scored = _scored(
+        emb.filter(F.col("vec_id") != QUERY_VEC_ID),
+        _qvec(emb),
+        "vec_id",
+        "embedding",
+        score=lambda cos: _micro(cos).alias("cm"),
     )
-    # bounded: 1-row query vector
-    cand = (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "embedding",
-            _micro(_cos(F.col("embedding"), F.col("qvec"))).alias("cm"),
-        )
-        .orderBy(F.desc("cm"), F.asc("vec_id"))
-        .limit(MMR_POOL)
-        .localCheckpoint()
-    )
+    cand = _top_cos(scored, MMR_POOL, "cm").localCheckpoint()
     a = cand.select(F.col("vec_id").alias("da"), F.col("embedding").alias("va"))
     b = cand.select(F.col("vec_id").alias("db"), F.col("embedding").alias("vb"))
     # bounded: POOL x POOL pairwise sims of the shortlist

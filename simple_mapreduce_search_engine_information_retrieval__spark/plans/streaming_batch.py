@@ -254,6 +254,7 @@ def streaming_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import (
         DELTA_MOD,
         QUERY_VEC_ID,
+        _query_vec,
         query_ivf_store,
         write_ivf_store,
     )
@@ -279,12 +280,11 @@ def streaming_vector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(split)
     )
     incremental_vector_ingest(spark, emb_stream, store)
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == QUERY_VEC_ID).head().embedding
-    ]
     return query_ivf_store(
-        spark, store, qvec, where=F.col("vec_id") != QUERY_VEC_ID
+        spark,
+        store,
+        _query_vec(spark, sf_dir),
+        where=F.col("vec_id") != QUERY_VEC_ID,
     )
 
 

@@ -324,41 +324,17 @@ def incremental_vector_ingest(
     dynamic partition overwrite rewrites that epoch's partitions
     instead of duplicating them (epoch+1 keeps ingest=0 reserved for
     the base build). Base partitions are never read or rewritten.
-    Like the batch twin, each epoch ends with the post-commit orphan
-    sweep (r7 ADVICE): deterministic assignment against the frozen
-    codebook makes a replay normally land on the same cells, but a
-    codebook file swapped between attempts would re-cell the epoch and
-    strand the first attempt's partitions — the sweep closes that the
-    same way append_ivf_store does, and ordering (sweep AFTER commit)
-    carries the same crash-window argument."""
-    from ..plans.similarity import (
-        _ivf_cells,
-        _ivf_pairs,
-        sweep_orphan_ingest_partitions,
-    )
+    Each epoch runs the batch twin's ingest body (_ingest_delta), so
+    the strict assignment, the checkpointed N x K pass and the
+    post-commit orphan sweep are one definition: deterministic
+    assignment against the frozen codebook makes a replay normally land
+    on the same cells, but a codebook file swapped between attempts
+    would re-cell the epoch and strand the first attempt's partitions,
+    which the sweep removes."""
+    from ..plans.similarity import _ingest_delta
 
     def upsert(batch: DataFrame, epoch_id: int) -> None:
-        cents = spark.read.parquet(f"{store_path}/centroids")
-        # strict: a wrong-dim streamed vector fails the epoch (and the
-        # checkpoint replays it) instead of silently poisoning the
-        # store under the smallest cent_id (r17, same as the batch twin)
-        cells = _ivf_cells(
-            _ivf_pairs(batch, cents), strict=True
-        ).localCheckpoint()
-        (
-            batch.join(cells, "vec_id")
-            .withColumn("ingest", F.lit(int(epoch_id) + 1))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "ingest")
-            .parquet(f"{store_path}/vectors")
-        )
-        written = {
-            int(r.cell) for r in cells.select("cell").distinct().collect()
-        }
-        sweep_orphan_ingest_partitions(
-            spark, store_path, int(epoch_id) + 1, written
-        )
+        _ingest_delta(spark, store_path, batch, int(epoch_id) + 1)
 
     q = (
         emb_stream.writeStream.foreachBatch(upsert)

@@ -222,15 +222,15 @@ def test_rebalance_empty_census_raises_descriptively():
 
 
 def test_rebalance_execution_serves_identically(spark, sf_dir, tmp_path):
-    """The r8 execution contract: served top-k from the REBALANCED
-    layout equals query_ivf_store over the ORIGINAL cell layout,
+    """The r8 execution contract: query_ivf_store over the REBALANCED
+    layout serves what it serves over the ORIGINAL cell layout,
     row-for-row (vec_id, cos)."""
     from simple_mapreduce_search_engine_information_retrieval__spark.plans.layout import (
-        query_rebalanced_store,
         rebalance_ivf_store,
     )
     from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarity import (
         QUERY_VEC_ID,
+        _query_vec,
         query_ivf_store,
         write_ivf_store,
     )
@@ -239,13 +239,7 @@ def test_rebalance_execution_serves_identically(spark, sf_dir, tmp_path):
     out = str(tmp_path / "rebal")
     write_ivf_store(spark, sf_dir, store)
     rebalance_ivf_store(spark, store, out)
-    qvec = [
-        float(x)
-        for x in table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == QUERY_VEC_ID)
-        .head()
-        .embedding
-    ]
+    qvec = _query_vec(spark, sf_dir)
     pre = [
         (r["vec_id"], r["cos"])
         for r in query_ivf_store(
@@ -254,7 +248,7 @@ def test_rebalance_execution_serves_identically(spark, sf_dir, tmp_path):
     ]
     post = [
         (r["vec_id"], r["cos"])
-        for r in query_rebalanced_store(
+        for r in query_ivf_store(
             spark, out, qvec, where=F.col("vec_id") != QUERY_VEC_ID
         ).collect()
     ]
@@ -271,7 +265,6 @@ def test_rebalance_execution_all_arms_on_skewed_store(spark, sf_dir, tmp_path):
     from collections import Counter
 
     from simple_mapreduce_search_engine_information_retrieval__spark.plans.layout import (
-        query_rebalanced_store,
         rebalance_ivf_store,
     )
     from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarity import (
@@ -336,6 +329,6 @@ def test_rebalance_execution_all_arms_on_skewed_store(spark, sf_dir, tmp_path):
     ]
     post = [
         (r["vec_id"], r["cos"])
-        for r in query_rebalanced_store(spark, out, qvec).collect()
+        for r in query_ivf_store(spark, out, qvec).collect()
     ]
     assert pre == post and len(pre) > 0

@@ -2,15 +2,10 @@
 
 Each optimization that changed an operator's INTERNALS gets a focused
 pin here (round rule): the cached stopword IN-list must stay
-semantically identical to the per-call isin it replaced, and the
-cell-clustered store writes must actually produce the one-file-per-
-cell layout they exist for.
+semantically identical to the per-call isin it replaced.
 """
 
 from __future__ import annotations
-
-import glob
-import os
 
 from pyspark.sql import functions as F
 
@@ -51,24 +46,3 @@ def test_stopword_member_seq_is_cached(spark):
     seq_before = tokenize._stop_seq_cache[key]
     tokenize.stopword_member(F.lit("other"))
     assert tokenize._stop_seq_cache[key] is seq_before
-
-
-def test_ivfpq_store_single_file_per_cell(spark, sf_dir, tmp_path):
-    """write_ivfpq_store's cell-clustered writes: one data file per
-    cell= directory in both the vectors and codes parts."""
-    from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarity import (
-        write_ivfpq_store,
-    )
-
-    out = str(tmp_path / "ivfpq")
-    write_ivfpq_store(spark, sf_dir, out)
-    for part in ("vectors", "codes"):
-        cells = glob.glob(os.path.join(out, part, "cell=*"))
-        assert cells, part
-        for c in cells:
-            files = [
-                p
-                for p in glob.glob(os.path.join(c, "*"))
-                if os.path.basename(p).startswith("part-")
-            ]
-            assert len(files) == 1, (c, files)

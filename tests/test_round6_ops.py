@@ -167,77 +167,6 @@ def test_mmr_rerank_greedy_invariants(spark, sf_dir):
     assert ms == sorted(ms, reverse=True)
 
 
-def test_ivf_incremental_append_store(spark, sf_dir, tmp_path):
-    """Base-only store + append_ivf_store(delta) must serve the same
-    top-k as the in-session plan built from the SAME frozen base
-    codebook over the combined corpus — proving the ingest path (frozen
-    codebook, append-only cell partitions, base files untouched) loses
-    nothing vs a monolithic rebuild with that codebook."""
-    from pyspark.sql import functions as F
-
-    from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarity import (
-        DELTA_MOD,
-        QUERY_VEC_ID,
-        _ivf_cells,
-        _ivf_centroids,
-        _ivf_pairs,
-        _ivf_serve,
-        append_ivf_store,
-        query_ivf_store,
-        write_ivf_store,
-    )
-    from simple_mapreduce_search_engine_information_retrieval__spark.sources.tables import (
-        table,
-    )
-
-    path = str(tmp_path / "ivf_base")
-    write_ivf_store(
-        spark, sf_dir, path, where=F.col("vec_id") % DELTA_MOD != 0
-    )
-    append_ivf_store(spark, sf_dir, path)
-    # EXACTLY-ONCE: a crash-and-retry of the same batch overwrites its
-    # ingest partitions instead of duplicating rows (r6 code review
-    # caught the blind-append hazard). Harden per r6 ADVICE: seed a
-    # STALE partition from a hypothetical earlier attempt whose cell
-    # assignment no longer exists — the retry must sweep it, not leave
-    # it as a duplicate source for readers.
-    import pathlib
-
-    stale = pathlib.Path(path) / "vectors" / "cell=999" / "ingest=1"
-    stale.mkdir(parents=True)
-    spark.range(1).selectExpr(
-        "CAST(123456789 AS BIGINT) AS vec_id",
-        "array(CAST(0.0 AS FLOAT)) AS embedding",
-        "CAST(0 AS BIGINT) AS label",
-    ).write.mode("overwrite").parquet(str(stale))
-    append_ivf_store(spark, sf_dir, path)
-    assert not stale.exists(), "stale ingest=1 partition survived retry"
-
-    emb = table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == QUERY_VEC_ID).head().embedding
-    ]
-    # the store includes the query vector itself (cos 1.0, always first):
-    # over-fetch one, drop it, and the remainder must match exactly
-    from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarity import (
-        TOP_K,
-    )
-
-    got = [
-        (r.vec_id, r.cos)
-        for r in query_ivf_store(spark, path, qvec, top_k=TOP_K + 1).collect()
-        if r.vec_id != QUERY_VEC_ID
-    ][:TOP_K]
-
-    base_cents = _ivf_centroids(emb.filter(F.col("vec_id") % DELTA_MOD != 0))
-    all_cells = _ivf_cells(_ivf_pairs(emb, base_cents))
-    want = [
-        (r.vec_id, r.cos)
-        for r in _ivf_serve(emb, base_cents, all_cells).collect()
-    ]
-    assert got == want
-
 
 def test_contrastive_pairs_labels(spark, sf_dir):
     from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarity import (
