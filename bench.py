@@ -42,9 +42,10 @@ N_SLOWEST = 25
 
 def bench_queries() -> dict:
     """name -> query callable in bench order: HEADLINE first, then the
-    modules' registration order. The driver's order (``queries()``) puts
-    each round's failing and changed queries first, so timing in it would
-    reorder the session whenever a verdict or CHANGED_THIS_ROUND moves."""
+    modules' registration order. The check-priority order of ``queries()``
+    puts each round's failing and changed queries first, so timing in it
+    would reorder the session whenever a verdict or CHANGED_THIS_ROUND
+    moves."""
     import __spark_entry__ as e
 
     registry = {name: spec.fn for name, spec in e._registered().items()}

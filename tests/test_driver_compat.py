@@ -90,22 +90,22 @@ def test_changed_this_round_names_exist():
 
 def test_bench_order_ignores_changed_this_round(monkeypatch):
     """bench.py times queries in registration order. A CHANGED_THIS_ROUND
-    refresh reorders the driver's queries() but must leave the bench
-    session's order as it was."""
+    refresh reorders the check-priority order of queries() but must leave
+    the bench session's order as it was."""
     import bench
     import __spark_entry__ as e
 
-    bench_before, driver_before = list(bench.bench_queries()), list(e.queries())
+    bench_before, check_before = list(bench.bench_queries()), list(e.queries())
     latest = e._latest_verdicts()
-    # the last green query in driver order jumps ahead once it is "changed"
+    # the last green query in check order jumps ahead once it is "changed"
     moved = [
-        n for n in driver_before
+        n for n in check_before
         if n in latest and latest[n][1] and n not in e.CHANGED_THIS_ROUND
     ][-1]
     monkeypatch.setattr(e, "CHANGED_THIS_ROUND", frozenset({moved}))
-    assert list(e.queries()) != driver_before
+    assert list(e.queries()) != check_before
     assert list(bench.bench_queries()) == bench_before
-    assert sorted(bench_before) == sorted(driver_before)
+    assert sorted(bench_before) == sorted(check_before)
 
 
 def test_vanilla_session_runs_contract():

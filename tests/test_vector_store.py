@@ -19,6 +19,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF_SMALL as SF
 from conftest import physical_plan as _physical
 from simple_mapreduce_search_engine_information_retrieval__spark.plans.layout import (
     rebalance_ivf_store,
@@ -32,8 +33,6 @@ from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarit
     write_ivf_store,
     write_ivfpq_store,
 )
-
-SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
