@@ -3,11 +3,19 @@ the right plan shape."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from simple_mapreduce_search_engine_information_retrieval__spark.plans.indexing import (
     postings_arrays,
     postings_arrays_salted,
+)
+from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarity import (
+    QUERY_VEC_ID,
+    knn_ivf_bucketed,
+    query_ivf_store,
+    write_ivf_store,
 )
 from simple_mapreduce_search_engine_information_retrieval__spark.sources.tables import table
 
@@ -18,6 +26,26 @@ def test_salted_arrays_equal_plain(spark, sf_dir):
     a = {(r.term, r.df, tuple((p.tf, p.docno) for p in r.postings)) for r in plain.collect()}
     b = {(r.term, r.df, tuple((p.tf, p.docno) for p in r.postings)) for r in salted.collect()}
     assert a == b
+
+
+def test_ivf_store_partition_pruning(spark, sf_dir, tmp_path):
+    path = str(tmp_path / "ivf")
+    write_ivf_store(spark, sf_dir, path)
+    emb = table(spark, sf_dir, "embeddings")
+    qrow = emb.filter(F.col("vec_id") == QUERY_VEC_ID).collect()[0]
+    qvec = list(qrow.embedding)
+    df = query_ivf_store(spark, path, qvec)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"PartitionFilters: \[.{0,200}", plan)
+    assert m and "cell" in m.group(0), plan[:2000]
+    # pruned path must agree with the in-memory multi-probe IVF query
+    # modulo the self-vector which the in-memory variant excludes
+    got = {r.vec_id: r.cos for r in df.collect() if r.vec_id != QUERY_VEC_ID}
+    want = {r.vec_id: r.cos for r in knn_ivf_bucketed(spark, sf_dir).collect()}
+    for vid, cos in want.items():
+        if vid in got:
+            assert got[vid] == cos
+    assert len(set(got) & set(want)) >= len(want) - 1
 
 
 def test_sharded_unsplittable_sources_layout(spark, sf_dir):

@@ -27,7 +27,6 @@ from simple_mapreduce_search_engine_information_retrieval__spark.plans.layout im
 from simple_mapreduce_search_engine_information_retrieval__spark.plans.similarity import (
     QUERY_VEC_ID,
     _query_vec,
-    knn_ivf_bucketed,
     query_ivf_store,
     query_ivfpq_store,
     write_ivf_store,
@@ -116,28 +115,6 @@ def test_correct_dim_serve_values_unchanged(spark, ivf_store, ivfpq_store):
     ).collect()
     assert pq and all(r.cos is not None for r in pq)
     assert all(r.vec_id != QUERY_VEC_ID for r in pq)
-
-
-def test_ivf_store_serving_scan_is_partition_pruned(spark, ivf_store):
-    """The store-served ANN query's scan must read only the probed
-    cells' partitions — the PartitionFilters line carries the static
-    cell IN-list, and with_cell returns the partition value cast long.
-    The pruned serve agrees with the in-session multi-probe IVF query,
-    modulo the self-vector which the in-session variant excludes."""
-    df = query_ivf_store(spark, ivf_store, _query_vec(spark, SF), with_cell=True)
-    assert [f.name for f in df.schema.fields] == ["vec_id", "cell", "cos"]
-    assert dict(df.dtypes)["cell"] == "bigint"
-    plan = _physical(df)
-    assert "PartitionFilters" in plan
-    assert "cell" in _partition_filters(plan)  # the probe IN-list prunes cell=
-    rows = df.collect()
-    assert rows
-    got = {r.vec_id: r.cos for r in rows if r.vec_id != QUERY_VEC_ID}
-    want = {r.vec_id: r.cos for r in knn_ivf_bucketed(spark, SF).collect()}
-    for vid, cos in want.items():
-        if vid in got:
-            assert got[vid] == cos
-    assert len(set(got) & set(want)) >= len(want) - 1
 
 
 def test_write_arm_strict_assignment_rejects_wrong_dim(spark, ivf_store):
