@@ -121,23 +121,21 @@ def _latest_verdicts() -> dict[str, tuple[int, bool]]:
 # list each round.
 CHANGED_THIS_ROUND = frozenset(
     {
-        # The vector family scores through one query scorer and one
-        # cosine top-k tail, reads the query vector through one
-        # _query_vec, ingests through one frozen-codebook delta body and
-        # serves every IVF store layout through query_ivf_store.
-        "knn_cosine_brute_force",
-        "knn_brute_force_arrow",
-        "knn_ivf_bucketed",
-        "knn_ivf_trained",
-        "knn_ivf_filtered",
-        "knn_range_search",
-        "knn_diversified_topk",
-        "search_mmr_rerank",
-        "knn_ivfpq_adc",
-        "knn_ivf_store_roundtrip",
-        "knn_ivfpq_store_roundtrip",
-        "knn_ivf_rebalanced_roundtrip",
-        "streaming_vector_ingest",
+        # The BPE family learns through one merge learner (exact greedy
+        # is its batch of one), encodes through one composition, counts
+        # UNKs through the encoder's own n_unk and reads each sidecar
+        # through one loader; every BPE query runs the changed code.
+        "text_tokenizer_fertility",
+        "text_tokenizer_fertility_lang",
+        "text_bpe_merges",
+        "text_tokenize_ids",
+        "text_bpe_store_roundtrip",
+        "text_tokenizer_oov_rate",
+        "text_bpe_export_roundtrip",
+        "text_bpe_export_hf_roundtrip",
+        "text_bpe_import_bytelevel",
+        "text_bpe_store_unk_rate",
+        "text_tokenize_ids_incremental",
     }
 )
 

@@ -12,13 +12,15 @@ Algorithm (Sennrich et al. 2016, "Neural Machine Translation of Rare
 Words with Subword Units", public ACL): merges are learned over the
 piece VOCABULARY weighted by corpus counts, not the raw token stream,
 so after the one corpus-sized piece-count aggregate every iteration is
-vocabulary-sized work. Each of the N_MERGES iterations is one
-pair-count aggregate + a deterministic argmax (integer counts,
-(count DESC, lhs, rhs) lexicographic tiebreak — the
-``graph_pagerank_terms`` fixed-iteration-with-exact-oracle pattern).
-The winning pair is a bounded 1-row driver round trip per iteration
-(the k-means/codebook-probe discipline, see plans/similarity.py) —
-never a corpus collect.
+vocabulary-sized work. One learner (``learn_merges_batched``) serves
+every merge budget: each round is one pair-count aggregate + a
+deterministic pick (integer counts, (count DESC, lhs, rhs)
+lexicographic tiebreak — the ``graph_pagerank_terms``
+fixed-iteration-with-exact-oracle pattern). At the canon budget a
+round picks ONE pair, which is exact greedy BPE; above BATCHED_ABOVE
+a round picks up to 16 symbol-disjoint pairs. The candidates are a
+bounded driver round trip per round (the k-means/codebook-probe
+discipline, see plans/similarity.py) — never a corpus collect.
 
 Symbolization is a SEP-wrapped string — every symbol wrapped as
 SEP+sym+SEP, wraps concatenated — because one greedy merge pass is then
@@ -42,8 +44,8 @@ framing guard, not a semantic choice; disclosed).
 
 Scale shape: piece counting is the only corpus pass in learning; the
 N_MERGES pair-count aggregates shuffle vocabulary-sized data. Lineage
-is truncated every CKPT_EVERY merges (localCheckpoint) so iteration i
-re-evaluates at most CKPT_EVERY replace passes, not i — without it
+is truncated every CKPT_EVERY merges (localCheckpoint) so a round
+re-evaluates a bounded number of replace passes, not i — without it
 total learning work is O(N_MERGES^2) replace passes over the
 vocabulary, a quadratic cliff at a production merge budget (r8 ADVICE;
 the 16/64/256 measurements behind the 32k extrapolation live in
@@ -92,16 +94,16 @@ from .textstats import _BPE_SQL_LIT, BPE_PATTERN
 SEP = "\x1f"  # U+001F unit separator — the wrap framing character
 N_MERGES = 16  # fixed-iteration budget (unrolled in the oracle)
 CKPT_EVERY = 8  # merge-loop lineage-truncation cadence (see module doc)
-# Merge budget above which ``learn`` routes to the batched learner (r9
-# verdict, Next-round #3). Rationale (SCALE.md "BPE at a production
-# merge count"): exact learning is barrier-bound at ~165-190 ms/merge
+# Merge budget above which ``learn`` batches its rounds (r9 verdict,
+# Next-round #3). Rationale (SCALE.md "BPE at a production merge
+# count"): exact learning is barrier-bound at ~165-190 ms/merge
 # regardless of cluster width, so 256 merges ≈ 45-50 s of pure driver
 # barriers — the point where barrier latency starts dominating any
 # corpus-side work and exactness stops being worth the wall-clock. At or
-# below the threshold exact greedy costs under a minute and its
-# determinism is what the unrolled oracles pin; above it the batched
-# learner's ~batch_m-fold barrier economy wins (6.0x wall measured at
-# sf0.1) at the disclosed cost of emergent pairs competing a round late.
+# below the threshold exact greedy (one pair per round) costs under a
+# minute and its determinism is what the unrolled oracles pin; above it
+# a ~batch_m-fold barrier economy wins (6.0x wall measured at sf0.1) at
+# the disclosed cost of emergent pairs competing a round late.
 BATCHED_ABOVE = 256
 DOC_DELTA_MOD = 10  # doc_id % 10 == 0 plays the newly-arrived doc batch
 UNK_ID = -1  # frozen-vocab OOV id (LEFT-JOIN coalesce in the oracle)
@@ -127,6 +129,34 @@ def _pieces_of(docs: DataFrame) -> DataFrame:
 
 def _pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pieces_of(table(spark, sf_dir, "documents"))
+
+
+def _is_delta() -> F.Column:
+    """doc_id % DOC_DELTA_MOD == 0: the docs playing the new batch."""
+    return F.col("doc_id") % DOC_DELTA_MOD == 0
+
+
+def _seeded(docs: DataFrame) -> DataFrame:
+    """docs with ' '+OOV_SEED appended to each delta doc — the one
+    seeding of the UNK monitors and the byte-level import roundtrip,
+    mirrored as a CASE WHEN in their oracles."""
+    return docs.withColumn(
+        "text",
+        F.when(
+            _is_delta(), F.concat(F.col("text"), F.lit(" " + OOV_SEED))
+        ).otherwise(F.col("text")),
+    )
+
+
+def _ppm(num: F.Column, den: F.Column) -> F.Column:
+    """Divide-FIRST parts per million, rounded half up (the pipeline.py
+    precedent): a long num*1e6 product overflows int64 past ~9.2e12 —
+    UNK hits or text bytes per source, exactly the design point. Both
+    engines run the identical double divide-then-multiply, and the
+    sums stay exact in double far past 100 TB (<2^53)."""
+    return F.floor(
+        num.cast("double") / den * F.lit(1_000_000.0) + F.lit(0.5)
+    ).cast("long")
 
 
 def _wrap(piece_col) -> F.Column:
@@ -185,9 +215,7 @@ def _piece_vocab(spark: SparkSession, pieces: DataFrame) -> DataFrame:
     width: coalescing to a handful of fuller partitions halved the cold
     learning run at sf0.1 (9.0 -> 4.0 s; warm ~3.5 s either way).
     Scaled off defaultParallelism so a cluster still gets map-side
-    width proportional to its size. ONE definition shared by the exact
-    and batched learners so this tuning cannot drift between them
-    (r9 review)."""
+    width proportional to its size."""
     n_parts = max(4, spark.sparkContext.defaultParallelism // 8)
     return (
         pieces.groupBy("piece")
@@ -199,47 +227,9 @@ def _piece_vocab(spark: SparkSession, pieces: DataFrame) -> DataFrame:
 
 
 # the merge loop's vocabulary cache is deliberately coalesced to a
-# handful of FULLER partitions (measured optimum for the per-merge
+# handful of FULLER partitions (measured optimum for the per-round
 # census barriers) — pin AQE's cached-plan re-partitioning off around
-# the loops and cache fills (r17); one shared definition in caches.py
-def _learn_merges(
-    spark: SparkSession, pieces: DataFrame, n_merges: int
-) -> list[tuple]:
-    """[(merge_rank, lhs, rhs, n_occ)] learned from a piece stream —
-    exact greedy, one barrier per merge over the shared _piece_vocab
-    relation. Lineage: `cur` is lazy — iteration i
-    would otherwise re-run all i replace passes from v0 (O(n^2) total,
-    r8 ADVICE) — so every CKPT_EVERY merges the current vocabulary is
-    localCheckpoint-ed, bounding re-evaluation per iteration to
-    CKPT_EVERY replaces."""
-    with pinned_cache_partitioning(spark):
-        v0 = _piece_vocab(spark, pieces)
-        merges: list[tuple] = []
-        cur = v0
-        for rank in range(1, n_merges + 1):
-            top = (
-                _pair_counts(cur)
-                .orderBy(F.desc("n_occ"), F.asc("lhs"), F.asc("rhs"))
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                # below-fixture-scale corpora only; surfacing loudly beats
-                # silently diverging from the N-merge oracle
-                raise RuntimeError(
-                    f"BPE pair supply exhausted at merge {rank}"
-                )
-            lhs, rhs, n = top[0]["lhs"], top[0]["rhs"], top[0]["n_occ"]
-            merges.append((rank, lhs, rhs, int(n)))
-            cur = cur.select(
-                _apply_merge(F.col("r"), lhs, rhs).alias("r"), "cnt"
-            )
-            if rank % CKPT_EVERY == 0 and rank < n_merges:
-                cur = cur.localCheckpoint()
-        v0.unpersist()
-        return merges
-
-
+# the loop and cache fills (r17); one shared definition in caches.py
 def learn_merges_batched(
     spark: SparkSession,
     pieces: DataFrame,
@@ -247,32 +237,40 @@ def learn_merges_batched(
     *,
     batch_m: int = 16,
 ) -> tuple[list[tuple], list[int]]:
-    """Batched BPE learning — the production-merge-budget path (r8
-    verdict, Next-round #2). Exact greedy learning is inherently
-    sequential: one driver-synchronized barrier PER MERGE, so a 32k-
-    merge vocabulary is 32k round trips no matter how wide the cluster
-    (the arithmetic lives in SCALE.md, "BPE at a production merge
-    count"). The standard batched variant (as in public BPE trainers'
-    frequency-threshold batching) selects up to ``batch_m`` pairwise
-    symbol-DISJOINT top pairs per round from ONE pair-count aggregate:
-    merging (a,b) only perturbs counts of pairs touching a or b, so
-    disjoint picks all carry their true pre-round counts and their
-    replaces commute — barriers drop n_merges -> ~n_merges/batch_m.
+    """The one BPE merge learner: (merges, round_sizes), merges as
+    [(merge_rank, lhs, rhs, n_occ)]. Each round is one pair-count
+    aggregate over the shared _piece_vocab relation and one bounded
+    collect, from which up to ``batch_m`` pairwise symbol-DISJOINT top
+    pairs are merged: merging (a,b) only perturbs counts of pairs
+    touching a or b, so disjoint picks all carry their true pre-round
+    counts and their replaces commute.
 
-    DIVERGENCE from exact greedy, disclosed: a round cannot see pairs
-    EMERGING from its own merges (e.g. ("th","e") only exists after
-    ("t","h")), so an emergent pair competes one round late and round
-    boundaries can reorder the tail of the merge table. The canon
-    queries therefore stay on the exact learner at N_MERGES=16 (their
-    unrolled oracles ARE the exact loop); this learner is for merge
-    budgets where 1-barrier-per-merge is the bottleneck. Fixture
-    agreement and the measured speedup are recorded in SCALE.md;
-    construction invariants are pinned in tests/test_bpe_scale.py.
+    batch_m=1 IS exact greedy BPE: a fresh round's first candidate
+    always passes and the census is ordered (n_occ DESC, lhs, rhs), so
+    every round merges the exact argmax — one driver barrier per merge,
+    the loop the unrolled oracles replay. A larger batch_m (``learn``
+    picks it above BATCHED_ABOVE) drops the barriers n_merges ->
+    ~n_merges/batch_m, as in public BPE trainers' frequency-threshold
+    batching; a 32k-merge vocabulary is otherwise 32k round trips no
+    matter how wide the cluster (SCALE.md, "BPE at a production merge
+    count"). DIVERGENCE from exact greedy at batch_m > 1, disclosed: a
+    round cannot see pairs EMERGING from its own merges (e.g.
+    ("th","e") only exists after ("t","h")), so an emergent pair
+    competes one round late and round boundaries can reorder the tail
+    of the merge table. Construction invariants are pinned in
+    tests/test_bpe_scale.py.
 
-    Returns (merges, round_sizes) — len(round_sizes) is the driver-
-    barrier count the batching is buying down; the sizes let tests pin
-    the per-round disjointness invariant on exact round boundaries."""
-    with pinned_cache_partitioning(spark):  # see _learn_merges (r17)
+    Lineage: `cur` is lazy — round i would otherwise re-run every
+    earlier replace pass from v0 (O(n^2) total, r8 ADVICE) — so the
+    current vocabulary is localCheckpoint-ed after a round that crosses
+    a CKPT_EVERY multiple while merges remain, bounding re-evaluation to
+    fewer than CKPT_EVERY + batch_m replaces (the canon 16-merge run
+    checkpoints once, after merge 8).
+
+    round_sizes: len(round_sizes) is the driver-barrier count the
+    batching buys down; the sizes let tests pin the per-round
+    disjointness invariant on exact round boundaries."""
+    with pinned_cache_partitioning(spark):
         v0 = _piece_vocab(spark, pieces)
         merges: list[tuple] = []
         round_sizes: list[int] = []
@@ -303,6 +301,8 @@ def learn_merges_batched(
                     .collect()
                 )
                 if not cand:
+                    # below-fixture-scale corpora only; surfacing loudly
+                    # beats silently diverging from the N-merge oracle
                     raise RuntimeError(
                         f"BPE pair supply exhausted at merge {len(merges) + 1}"
                     )
@@ -333,43 +333,37 @@ def learn_merges_batched(
                 pc.unpersist()
             # the first candidate always passes (used starts empty), so
             # every round makes progress and picked is never empty
+            done = len(merges)
             for lhs, rhs, n in picked:
                 merges.append((len(merges) + 1, lhs, rhs, n))
                 cur = cur.select(
                     _apply_merge(F.col("r"), lhs, rhs).alias("r"), "cnt"
                 )
             round_sizes.append(len(picked))
-            if len(merges) < n_merges:
-                # lineage bound: <= batch_m replaces re-evaluate per round
+            if (
+                len(merges) // CKPT_EVERY > done // CKPT_EVERY
+                and len(merges) < n_merges
+            ):
                 cur = cur.localCheckpoint()
         v0.unpersist()
         return merges, round_sizes
 
 
 def learn(
-    spark: SparkSession,
-    pieces: DataFrame,
-    n_merges: int,
-    *,
-    batched_above: int = BATCHED_ABOVE,
-    batch_m: int = 16,
+    spark: SparkSession, pieces: DataFrame, n_merges: int
 ) -> list[tuple]:
-    """The public merge-learning entry point — SELECTS the learner by
-    merge budget (r9 verdict, Next-round #3): exact greedy at or below
-    ``batched_above`` (one barrier per merge, deterministic, what the
-    unrolled oracles pin), the symbol-disjoint batched learner above it
-    (~batch_m-fold fewer barriers; divergence disclosed on
-    learn_merges_batched). Every in-repo caller passes N_MERGES=16 and
-    stays on the exact path — the canon oracles do not change — but a
-    caller asking for a production budget (32k) now gets the scalable
-    learner without having to know it exists. The flip is exercised by
+    """The public merge-learning entry point — one learner, the batch
+    size picked by merge budget (r9 verdict, Next-round #3): exact
+    greedy (batch_m=1, deterministic, what the unrolled oracles pin) at
+    or below BATCHED_ABOVE, the learner's default symbol-disjoint batch
+    above it (divergence disclosed on learn_merges_batched). Every
+    in-repo caller passes N_MERGES=16 and stays exact, but a caller
+    asking for a production budget (32k) gets the scalable batch
+    without having to know it exists. Both routes are exercised by
     tests/test_bpe_scale.py::test_learn_selector_routes_by_budget."""
-    if n_merges > batched_above:
-        merges, _round_sizes = learn_merges_batched(
-            spark, pieces, n_merges, batch_m=batch_m
-        )
-        return merges
-    return _learn_merges(spark, pieces, n_merges)
+    if n_merges <= BATCHED_ABOVE:
+        return learn_merges_batched(spark, pieces, n_merges, batch_m=1)[0]
+    return learn_merges_batched(spark, pieces, n_merges)[0]
 
 
 @memo
@@ -377,8 +371,9 @@ def learned_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """[(merge_rank, lhs, rhs, n_occ)] — the learned merge table,
     memoized per (session, corpus) so text_bpe_merges, text_tokenize_ids
     and the store build share one learning run. Routes through the
-    ``learn`` selector: N_MERGES=16 <= BATCHED_ABOVE, so the canon
-    queries stay on the exact learner their unrolled oracles replay."""
+    ``learn`` entry point: N_MERGES=16 <= BATCHED_ABOVE, so the canon
+    queries learn exact greedy (batch_m=1), the loop their unrolled
+    oracles replay."""
     return learn(spark, _pieces(spark, sf_dir), N_MERGES)
 
 
@@ -405,29 +400,51 @@ def _merges_df(spark: SparkSession, merges: list[tuple]) -> DataFrame:
 # doc_id + two longs + one md5).
 
 
-def _encode_under(pieces: DataFrame, merges: list[tuple]):
-    """(symbols, encoded_df): strict encode of a piece stream under the
-    given merges, vocab derived from these very pieces (total coverage
-    by construction — the strict lookup still guards it loudly). ONE
-    composition shared by the session memo and the store build so the
-    encode stages cannot drift between them (r9 review)."""
+def _encode(
+    pieces: DataFrame,
+    merges: list[tuple],
+    id_pairs: list[tuple[str, int]] | None = None,
+    *,
+    unk: int | None = None,
+):
+    """(symbols, encoded_df): the one encode composition — merges
+    replayed once per distinct piece (_merged_symbolization), symbols
+    looked up (_piece_encoding), docs reassembled (_assemble_docs) — so
+    the session memos, the store build and append, and the sidecar
+    serves cannot drift apart (r9 review). id_pairs=None derives the
+    vocabulary from these very pieces — sorted distinct symbols, id =
+    list index, returned as ``symbols`` — and encodes strictly (total
+    coverage by construction; the strict lookup still guards it
+    loudly). A given id_pairs is a frozen or imported vocabulary
+    (``symbols`` is then None), looked up strictly or, with ``unk``,
+    under frozen-vocab OOV semantics."""
     es = _merged_symbolization(pieces, merges)
-    symbols = _vocab_symbols(es)
-    pe = _piece_encoding(es, [(s, i) for i, s in enumerate(symbols)])
-    return symbols, _assemble_docs(pieces, pe)
+    symbols = None
+    if id_pairs is None:
+        symbols = _vocab_symbols(es)
+        id_pairs = [(s, i) for i, s in enumerate(symbols)]
+    return symbols, _assemble_docs(
+        pieces, _piece_encoding(es, id_pairs, unk=unk)
+    )
+
+
+def _served(enc: DataFrame) -> DataFrame:
+    """The served encode projection (doc_id, n_ids, sum_ids, ids_hash):
+    n_unk stays in the store, not in the serving relation."""
+    return enc.select("doc_id", "n_ids", "sum_ids", "ids_hash")
 
 
 @memo
 def _corpus_encoding(spark: SparkSession, sf_dir: str):
     """(symbols, encoded_df) under the full-corpus learned merges."""
-    # pinned like the learners (r17): the encode chain's distinct-
+    # pinned like the learner (r17): the encode chain's distinct-
     # piece scan + N-replace chain + persisted assembly are
     # vocabulary-sized iterative relations whose caches AQE's
     # byte-based cached-plan re-partitioning destabilizes (measured
     # encode 1.65 -> 2.8-9.8 s under the session-wide conf)
     with pinned_cache_partitioning(spark):
         merges = learned_merges(spark, sf_dir)
-        symbols, enc = _encode_under(_pieces(spark, sf_dir), merges)
+        symbols, enc = _encode(_pieces(spark, sf_dir), merges)
         enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
         enc.count()  # materialize under the pin, not at first consumer
     return symbols, enc
@@ -446,9 +463,7 @@ def tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic in both engines. Served from the encoded-corpus memo
     (which since r10 also carries n_unk for the store — projected away
     here: this is the strict-encode path, where it is identically 0)."""
-    return encoded_docs(spark, sf_dir).select(
-        "doc_id", "n_ids", "sum_ids", "ids_hash"
-    )
+    return _served(encoded_docs(spark, sf_dir))
 
 
 def _merged_symbolization(pieces: DataFrame, merges: list[tuple]) -> DataFrame:
@@ -487,7 +502,9 @@ def _piece_encoding(
     carried into the store so a rollout can read a batch's UNK rate off
     the persisted encoded/ partitions without re-encoding (r9 verdict,
     Next-round #6). On the strict path n_unk is literally 0."""
-    id_map = _id_map(id_pairs)
+    id_map = F.create_map(
+        *[c for s, i in id_pairs for c in (F.lit(s), F.lit(int(i)))]
+    )
 
     def lookup(sym):
         # coalesce short-circuits, so both paths scan the literal map
@@ -533,14 +550,6 @@ def _piece_encoding(
             "csv"
         ),
         n_unk.alias("n_unk"),
-    )
-
-
-def _id_map(id_pairs: list[tuple[str, int]]) -> F.Column:
-    """The bounded literal sym->id map — one construction shared by the
-    encoder and the OOV monitor so the idiom cannot drift."""
-    return F.create_map(
-        *[c for s, i in id_pairs for c in (F.lit(s), F.lit(int(i)))]
     )
 
 
@@ -599,10 +608,10 @@ def write_bpe_store(
         # learn/vocab/assemble passes instead re-scan the pruned
         # (doc_id, text) columns, the same trade the session memo path
         # makes; what IS persisted is the vocabulary-sized v0 inside
-        # _learn_merges
+        # learn_merges_batched
         pieces = _pieces_of(docs)
         merges = learn(spark, pieces, N_MERGES)
-        symbols, enc = _encode_under(pieces, merges)
+        symbols, enc = _encode(pieces, merges)
     else:
         merges = learned_merges(spark, sf_dir)
         symbols, enc = _corpus_encoding(spark, sf_dir)
@@ -654,12 +663,10 @@ def _base_artifacts(spark: SparkSession, sf_dir: str):
     # pinned for the same reason as _corpus_encoding (r17)
     with pinned_cache_partitioning(spark):
         pieces = _pieces_of(
-            table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % DOC_DELTA_MOD != 0
-            )
+            table(spark, sf_dir, "documents").filter(~_is_delta())
         )
         merges = learn(spark, pieces, N_MERGES)
-        symbols, enc = _encode_under(pieces, merges)
+        symbols, enc = _encode(pieces, merges)
         enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
         enc.count()  # materialize under the pin
     return merges, symbols, enc
@@ -694,18 +701,12 @@ def append_bpe_store(
     crafted-tested."""
     if int(batch_id) == 0:
         raise ValueError("batch_id 0 is reserved for the store build")
-    merges = read_bpe_merges(spark, store_path)
-    id_pairs = [
-        (r["sym"], int(r["id"]))
-        for r in spark.read.parquet(f"{store_path}/vocab").collect()
-        # bounded: the frozen symbol vocab (<= alphabet + N_MERGES)
-    ]
-    pieces = _pieces_of(docs)
-    es = _merged_symbolization(pieces, merges)
-    pe = _piece_encoding(es, id_pairs, unk=UNK_ID)
+    merges, vocab = _read_store_artifact(spark, store_path)
+    _, enc = _encode(
+        _pieces_of(docs), merges, [(s, i) for i, s in vocab], unk=UNK_ID
+    )
     (
-        _assemble_docs(pieces, pe)
-        .withColumn("ingest", F.lit(int(batch_id)))
+        enc.withColumn("ingest", F.lit(int(batch_id)))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("ingest")
@@ -716,9 +717,7 @@ def append_bpe_store(
 def read_bpe_store(spark: SparkSession, store_path: str) -> DataFrame:
     """(doc_id, n_ids, sum_ids, ids_hash) served from the store — all
     ingest generations."""
-    return spark.read.parquet(f"{store_path}/encoded").select(
-        "doc_id", "n_ids", "sum_ids", "ids_hash"
-    )
+    return _served(spark.read.parquet(f"{store_path}/encoded"))
 
 
 def bpe_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -757,6 +756,31 @@ def _read_store_artifact(spark: SparkSession, store_path: str):
         # bounded: the frozen symbol vocab (<= alphabet + N_MERGES)
     )
     return merges, vocab
+
+
+def _load_sidecar(sidecar_path: str):
+    """The parsed JSON document — the one sidecar read of all three
+    importers. UTF-8 (r11 review): REAL tokenizer.json files ship raw
+    multibyte 'Ġ' bytes, not \\u escapes, and a third party's
+    ensure_ascii=False rendering of a valid private sidecar must load
+    too; our own ensure_ascii exports are a strict subset."""
+    with open(sidecar_path, encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+def _unique_vocab(id_pairs: list[tuple[str, int]], sidecar_path: str):
+    """id_pairs, refused with the advertised ValueError when the vocab
+    gives one symbol two ids or two symbols one id: the REPL's dict
+    lookup would silently keep the last entry, and the distributed
+    literal map fails at execution with a duplicate-map-key error."""
+    if len({s for s, _ in id_pairs}) < len(id_pairs) or len(
+        {i for _, i in id_pairs}
+    ) < len(id_pairs):
+        raise ValueError(
+            "vocab maps a symbol to two ids or an id to two symbols: "
+            f"{sidecar_path}"
+        )
+    return id_pairs
 
 
 def _render_sidecar(doc: dict, sidecar_path: str) -> str:
@@ -813,14 +837,9 @@ def import_bpe_json(sidecar_path: str):
     """(merges, id_pairs) from a sidecar — everything serving needs:
     merges as (rank, lhs, rhs, 0) tuples (rank = list position; the
     dropped n_occ slot is zero-filled so the serving helpers' 4-tuple
-    shape is uniform) and the frozen sym->id vocab. UTF-8 read (r11
-    review pass 2: the auto importer already read the same format as
-    UTF-8, so the two entry points disagreed on which files load; our
-    own exports are ensure_ascii and unaffected, a third party's
-    ensure_ascii=False rendering of a valid document now loads)."""
-    with open(sidecar_path, encoding="utf-8") as fh:
-        doc = json.load(fh)
-    return _convert_sidecar_doc(doc, sidecar_path)
+    shape is uniform) and the frozen sym->id vocab (see
+    _load_sidecar for the read)."""
+    return _convert_sidecar_doc(_load_sidecar(sidecar_path), sidecar_path)
 
 
 def _convert_sidecar_doc(doc, sidecar_path: str):
@@ -828,7 +847,8 @@ def _convert_sidecar_doc(doc, sidecar_path: str):
     # (r10 review, both passes): a non-dict top level, a header-only
     # file, or a malformed merges/vocab entry must all fail with the
     # advertised ValueError, never an AttributeError/KeyError/TypeError
-    # from deep inside the unpacking
+    # from deep inside the unpacking; a vocab entry that repeats a
+    # symbol or an id refuses too (_unique_vocab)
     if (
         not isinstance(doc, dict)
         or doc.get("format") != SIDECAR_FORMAT
@@ -861,7 +881,7 @@ def _convert_sidecar_doc(doc, sidecar_path: str):
         for rank, (lhs, rhs) in enumerate(doc["merges"], start=1)
     ]
     id_pairs = [(sym, int(i)) for sym, i in doc["vocab"]]
-    return merges, id_pairs
+    return merges, _unique_vocab(id_pairs, sidecar_path)
 
 
 # --- Hugging Face `tokenizers` format adapter (round 11, full byte
@@ -958,6 +978,20 @@ class _ByteFragment(ValueError):
     is unchanged for callers of _hf_unsym itself."""
 
 
+def _hf_raw(sym: str) -> bytes:
+    """A rendered symbol's bytes through the ByteLevel char->byte
+    back-map — shared by both carriages (_hf_unsym, _hf_unsym_bytes).
+    ValueError on a char outside the 256-entry alphabet: the file is
+    not a ByteLevel-rendered artifact."""
+    try:
+        return bytes(_HF_CHAR_TO_BYTE[ch] for ch in sym)
+    except KeyError as exc:
+        raise ValueError(
+            f"symbol char {exc.args[0]!r} is outside the ByteLevel "
+            f"alphabet (not a ByteLevel-rendered artifact): {sym!r}"
+        ) from None
+
+
 def _hf_unsym(sym: str) -> str:
     """Invert _hf_sym: rendered chars -> bytes -> UTF-8 characters.
     ValueError (a) on a char outside the 256-entry ByteLevel alphabet —
@@ -969,13 +1003,7 @@ def _hf_unsym(sym: str) -> str:
     defined: char->byte is a bijection and UTF-8 decoding is
     one-to-one, so two distinct file symbols can never back-map to one
     engine symbol."""
-    try:
-        raw = bytes(_HF_CHAR_TO_BYTE[ch] for ch in sym)
-    except KeyError as exc:
-        raise ValueError(
-            f"symbol char {exc.args[0]!r} is outside the ByteLevel "
-            f"alphabet (not a ByteLevel-rendered artifact): {sym!r}"
-        ) from None
+    raw = _hf_raw(sym)
     try:
         return raw.decode("utf-8")
     except UnicodeDecodeError:
@@ -995,14 +1023,7 @@ def _hf_unsym_bytes(sym: str) -> str:
     the latin-1 bijection); ASCII symbols come out byte-for-byte equal
     to their character back-mapping, so a pure-ASCII artifact encodes
     identically under either alphabet."""
-    try:
-        raw = bytes(_HF_CHAR_TO_BYTE[ch] for ch in sym)
-    except KeyError as exc:
-        raise ValueError(
-            f"symbol char {exc.args[0]!r} is outside the ByteLevel "
-            f"alphabet (not a ByteLevel-rendered artifact): {sym!r}"
-        ) from None
-    return raw.decode("latin-1")
+    return _hf_raw(sym).decode("latin-1")
 
 
 def hf_byte_faithful_col(col) -> F.Column:
@@ -1055,6 +1076,16 @@ def export_bpe_json_hf(
         if artifact is not None
         else _read_store_artifact(spark, store_path)
     )
+    return _render_hf(
+        {_hf_sym(sym): i for i, sym in vocab}, merges, sidecar_path
+    )
+
+
+def _render_hf(vocab: dict[str, int], merges: list[tuple], sidecar_path: str):
+    """The one `tokenizers` tokenizer.json document: the rendered vocab
+    as given, the merges rendered and space-joined, and the ByteLevel
+    pre_tokenizer/decoder sections — shared by export_bpe_json_hf and
+    the GPT-2-shaped artifact of bpe_import_bytelevel_roundtrip."""
     byte_level = {
         "type": "ByteLevel",
         "add_prefix_space": False,
@@ -1070,7 +1101,7 @@ def export_bpe_json_hf(
             "model": {
                 "type": "BPE",
                 "unk_token": None,
-                "vocab": {_hf_sym(sym): i for i, sym in vocab},
+                "vocab": vocab,
                 "merges": [
                     f"{_hf_sym(lhs)} {_hf_sym(rhs)}"
                     for _rank, lhs, rhs, _n in merges
@@ -1086,18 +1117,16 @@ def import_bpe_json_hf(sidecar_path: str):
     import_bpe_json contract for the public shape: merges as (rank, lhs,
     rhs, 0) tuples, the frozen sym->id vocab, every symbol back-mapped
     through the full GPT-2 ByteLevel table (r12: 'Ġ' -> ' ', 'Ċ' ->
-    newline, multibyte runs reassembled — see _hf_unsym). UTF-8 read
-    (r11 review): REAL tokenizer.json files ship raw multibyte 'Ġ'
-    bytes, not \\u escapes — an ascii read would reject every genuine
-    public artifact with UnicodeDecodeError; our own ensure_ascii
-    exports are a strict subset and load the same. BOTH public merge
+    newline, multibyte runs reassembled — see _hf_unsym; UTF-8 read,
+    see _load_sidecar). BOTH public merge
     renderings accepted (r11 review pass 2): the classic "lhs rhs"
     strings and the [lhs, rhs] pairs `tokenizers` >= 0.20 writes by
     default. Element-level validation per the private importer's
     discipline: every malformed shape — wrong model type, a merge entry
     that is not exactly two symbols, a bool id, a raw space inside a
     symbol (space is not a ByteLevel-alphabet char; the public format
-    never emits it), a char outside the ByteLevel alphabet — fails
+    never emits it), a char outside the ByteLevel alphabet, two symbols
+    sharing one id — fails
     with the advertised ValueError. A byte-FRAGMENT token (the
     signature of a byte-level-LEARNED vocab, e.g. GPT-2's own lone
     continuation bytes) no longer refuses (r12 verdict #3): the whole
@@ -1105,9 +1134,7 @@ def import_bpe_json_hf(sidecar_path: str):
     per BYTE, the returned HFImport is tagged byte_level=True, and
     encode input pairs with hf_byte_faithful_col (distributed) or the
     REPL's per-piece byte expansion."""
-    with open(sidecar_path, encoding="utf-8") as fh:
-        doc = json.load(fh)
-    return _convert_hf_doc(doc, sidecar_path)
+    return _convert_hf_doc(_load_sidecar(sidecar_path), sidecar_path)
 
 
 def _convert_hf_doc(doc, sidecar_path: str):
@@ -1180,7 +1207,7 @@ def _convert_hf_doc(doc, sidecar_path: str):
         for rank, (lhs, rhs) in enumerate(pairs, start=1)
     ]
     id_pairs = [(unsym[s], int(i)) for s, i in model["vocab"].items()]
-    return HFImport(merges, id_pairs, byte_level)
+    return HFImport(merges, _unique_vocab(id_pairs, sidecar_path), byte_level)
 
 
 def import_bpe_json_auto(sidecar_path: str):
@@ -1189,8 +1216,7 @@ def import_bpe_json_auto(sidecar_path: str):
     previously parsed the file twice — once to sniff, once inside the
     importer): the public `tokenizers` file carries a "model" object,
     the private format a "format" tag."""
-    with open(sidecar_path, encoding="utf-8") as fh:
-        doc = json.load(fh)
+    doc = _load_sidecar(sidecar_path)
     # dispatch on the KEY, not the value's type (r11 review pass 2): a
     # malformed HF file with "model": null must route to the HF
     # converter and get ITS error message, not the private format's
@@ -1228,12 +1254,7 @@ def _sidecar_roundtrip(
         artifact=(built_merges, [(i, s) for i, s in enumerate(symbols)]),
     )
     merges, id_pairs = importer(sidecar)
-    pieces = _pieces(spark, sf_dir)
-    es = _merged_symbolization(pieces, merges)
-    pe = _piece_encoding(es, id_pairs)
-    return _assemble_docs(pieces, pe).select(
-        "doc_id", "n_ids", "sum_ids", "ids_hash"
-    )
+    return _served(_encode(_pieces(spark, sf_dir), merges, id_pairs)[1])
 
 
 def bpe_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1302,44 +1323,18 @@ def bpe_import_bytelevel_roundtrip(
     # make the seeded multibyte piece strictly encodable
     for b in OOV_SEED.encode("utf-8"):
         vocab[_HF_BYTE_TO_CHAR[b]] = len(vocab)
-    sidecar = _render_sidecar(
-        {
-            "version": HF_VERSION,
-            "added_tokens": [],
-            "model": {
-                "type": "BPE",
-                "unk_token": None,
-                "vocab": vocab,
-                "merges": [
-                    f"{_hf_sym(lhs)} {_hf_sym(rhs)}"
-                    for _rank, lhs, rhs, _n in merges
-                ],
-            },
-        },
-        os.path.join(out, "tokenizer_bytelevel.json"),
+    sidecar = _render_hf(
+        vocab, merges, os.path.join(out, "tokenizer_bytelevel.json")
     )
     imp = import_bpe_json_hf(sidecar)
     if not imp.byte_level:  # the fragment token must flip the carriage
         raise AssertionError("byte-level artifact imported as characters")
     merges_i, id_pairs = imp
-    # seed the delta docs (the tokenizer_oov_rate seeding shape — kept
-    # inline so that query's implementation is untouched this round)
-    docs = table(spark, sf_dir, "documents")
-    seeded = docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % DOC_DELTA_MOD == 0,
-            F.concat(F.col("text"), F.lit(" " + OOV_SEED)),
-        ).otherwise(F.col("text")),
-    )
-    pieces = _pieces_of(seeded).withColumn(
+    pieces = _pieces_of(_seeded(table(spark, sf_dir, "documents"))).withColumn(
         "piece", hf_byte_faithful_col(F.col("piece"))
     )
-    es = _merged_symbolization(pieces, merges_i)
-    pe = _piece_encoding(es, id_pairs)  # strict: coverage by construction
-    return _assemble_docs(pieces, pe).select(
-        "doc_id", "n_ids", "sum_ids", "ids_hash"
-    )
+    # strict: coverage by construction
+    return _served(_encode(pieces, merges_i, id_pairs)[1])
 
 
 def bpe_store_unk_by_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1364,14 +1359,7 @@ def bpe_store_unk_by_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.sum("n_ids").cast("long").alias("total_ids"),
             F.sum("n_unk").cast("long").alias("n_unk"),
-            F.floor(
-                F.sum("n_unk").cast("double")
-                / F.sum("n_ids")
-                * F.lit(1_000_000.0)
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("unk_ppm"),
+            _ppm(F.sum("n_unk"), F.sum("n_ids")).alias("unk_ppm"),
         )
     )
 
@@ -1390,14 +1378,10 @@ def _write_base_store_with_delta(
     out = _out_path(kind, sf_dir)
     merges, symbols, enc = _base_artifacts(spark, sf_dir)
     _write_store(spark, out, merges, symbols, enc)
-    delta = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % DOC_DELTA_MOD == 0
-    )
+    docs = table(spark, sf_dir, "documents")
     if seed_delta:
-        delta = delta.withColumn(
-            "text", F.concat(F.col("text"), F.lit(" " + OOV_SEED))
-        )
-    append_bpe_store(spark, delta, out, batch_id=1)
+        docs = _seeded(docs)
+    append_bpe_store(spark, docs.filter(_is_delta()), out, batch_id=1)
     return out
 
 
@@ -1435,42 +1419,22 @@ def tokenizer_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface a fixture change loudly)."""
     merges, symbols, _enc = _base_artifacts(spark, sf_dir)
     docs = table(spark, sf_dir, "documents")
-    seeded = docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % DOC_DELTA_MOD == 0,
-            F.concat(F.col("text"), F.lit(" " + OOV_SEED)),
-        ).otherwise(F.col("text")),
-    )
-    pieces = _pieces_of(seeded)
-    es = _merged_symbolization(pieces, merges)
-    id_map = _id_map([(sym, i) for i, sym in enumerate(symbols)])
-    pu = es.select(
-        "piece",
-        F.size("syms").cast("long").alias("n_sym"),
-        F.size(
-            F.filter("syms", lambda t: F.element_at(id_map, t).isNull())
-        )
-        .cast("long")
-        .alias("n_unk"),
+    pieces = _pieces_of(_seeded(docs))
+    # per-piece (n_sym, n_unk) off the frozen encode itself; the per-doc
+    # assembly is skipped — no id sequence is served here
+    pe = _piece_encoding(
+        _merged_symbolization(pieces, merges),
+        [(s, i) for i, s in enumerate(symbols)],
+        unk=UNK_ID,
     )
     return (
-        pieces.join(pu, "piece")
+        pieces.join(pe, "piece")
         .join(docs.select("doc_id", "source"), "doc_id")
         .groupBy("source")
         .agg(
             F.sum("n_sym").cast("long").alias("total_ids"),
             F.sum("n_unk").cast("long").alias("n_unk"),
-            # divide-FIRST ppm (the fertility discipline): n_unk*1e6 in
-            # long would overflow past ~9.2e12 UNK hits per source
-            F.floor(
-                F.sum("n_unk").cast("double")
-                / F.sum("n_sym")
-                * F.lit(1_000_000.0)
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("unk_ppm"),
+            _ppm(F.sum("n_unk"), F.sum("n_sym")).alias("unk_ppm"),
         )
     )
 
@@ -1769,21 +1733,11 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fertility_aggs() -> list:
-    # divide-FIRST ppm discipline (pipeline.py precedent): a long
-    # sum(nb)*1e6 product overflows int64 past ~9.2 TB of text per
-    # source — exactly the design point. Both engines run the identical
-    # double divide-then-multiply, and the byte/id sums stay exact in
-    # double far past 100 TB (<2^53).
     return [
         F.count("*").alias("n_docs"),
         F.sum("nb").cast("long").alias("total_bytes"),
         F.sum("n_ids").cast("long").alias("total_ids"),
-        F.floor(
-            F.sum("nb").cast("double") / F.sum("n_ids") * F.lit(1_000_000.0)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("bytes_per_id_ppm"),
+        _ppm(F.sum("nb"), F.sum("n_ids")).alias("bytes_per_id_ppm"),
     ]
 
 

@@ -3,12 +3,12 @@ merge-budget path (r8 verdict, Next-round #2; SCALE.md "BPE at a
 production merge count" holds the measured 16/64/256 numbers and the
 32k extrapolation).
 
-The batched learner's correctness argument is LOCAL: within a round,
+The learner's batching argument (batch_m > 1) is LOCAL: within a round,
 picks are pairwise symbol-disjoint (members and products), so each
 pick's count is its true pre-round pair count and the replaces commute.
 Across rounds it diverges from exact greedy only in that emergent pairs
-compete one round late. These tests pin exactly that contract on the
-fixture, so a future merge-budget raise is a measured flip, not a
+compete one round late; at batch_m=1 it IS exact greedy. These tests
+pin exactly that contract on the fixture, so a future merge-budget raise is a measured flip, not a
 rewrite (the tests/test_fixed_log_table.py discipline)."""
 
 from __future__ import annotations
@@ -62,7 +62,7 @@ def test_batched_rounds_are_symbol_disjoint_and_ordered(batched):
 
 def test_batched_head_matches_exact_and_tail_agrees(spark, batched):
     """Round 1's first pick IS the exact greedy argmax (identical state,
-    identical tiebreak), and fixture agreement with the exact learner
+    identical tiebreak), and fixture agreement with the exact table
     stays majority — the divergence is a tail-reordering, not a
     different vocabulary."""
     merges, _ = batched
@@ -94,20 +94,32 @@ def test_batched_merges_still_roundtrip(batched):
         assert "".join(syms) == piece
 
 
-def test_learn_selector_routes_by_budget(spark, batched):
-    """The public ``learn`` entry point flips learners at BATCHED_ABOVE
-    (r9 verdict, Next-round #3): at or below the threshold it IS exact
-    greedy (the canon path — equals the memoized exact table), above it
-    it IS the batched learner (same corpus + same batch_m reproduce the
-    module fixture's table exactly — both learners are deterministic)."""
+def test_exact_learner_is_batch_of_one(spark):
+    """batch_m=1 IS exact greedy: every round merges exactly one pair,
+    and the table equals the memoized canon one the unrolled oracles
+    replay (a fresh round's first candidate always passes, under the
+    same (n_occ DESC, lhs, rhs) order)."""
+    merges, round_sizes = bpe.learn_merges_batched(
+        spark, bpe._pieces(spark, SF), bpe.N_MERGES, batch_m=1
+    )
+    assert merges == bpe.learned_merges(spark, SF)
+    assert round_sizes == [1] * bpe.N_MERGES
+
+
+def test_learn_selector_routes_by_budget(spark, monkeypatch):
+    """The public ``learn`` entry point flips batch size at
+    BATCHED_ABOVE (r9 verdict, Next-round #3): at or below the
+    threshold it IS exact greedy (the canon path — equals the memoized
+    exact table), above it it IS the learner's default batch (same
+    corpus reproduces the same table — the learner is deterministic)."""
     exact = bpe.learn(spark, bpe._pieces(spark, SF), bpe.N_MERGES)
     assert exact == bpe.learned_merges(spark, SF)
-    routed = bpe.learn(
-        spark,
-        bpe._pieces(spark, SF),
-        bpe.N_MERGES,
-        batched_above=bpe.N_MERGES - 1,
-        batch_m=4,
+    monkeypatch.setattr(bpe, "BATCHED_ABOVE", bpe.N_MERGES - 1)
+    routed = bpe.learn(spark, bpe._pieces(spark, SF), bpe.N_MERGES)
+    batched, round_sizes = bpe.learn_merges_batched(
+        spark, bpe._pieces(spark, SF), bpe.N_MERGES
     )
-    assert routed == batched[0]
+    assert routed == batched
+    assert len(round_sizes) < bpe.N_MERGES  # batched, not one per round
+    monkeypatch.undo()
     assert bpe.BATCHED_ABOVE >= bpe.N_MERGES  # canon stays exact
