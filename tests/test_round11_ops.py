@@ -1,17 +1,13 @@
-"""Round-11 ops: the doremi-oracle blast-radius pin, the public
-`tokenizers`-format sidecar adapter, and the end-to-end pipeline
-capstone (plans/pipeline.py, plans/bpe.py)."""
+"""Round-11 ops: the doremi-oracle blast-radius pin and the end-to-end
+pipeline capstone (plans/pipeline.py). The round's `tokenizers`-format
+sidecar adapter tests live in tests/test_bpe.py."""
 
 from __future__ import annotations
-
-import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from simple_mapreduce_search_engine_information_retrieval__spark.plans import (
-    bpe,
     pipeline,
 )
 
@@ -38,229 +34,6 @@ def test_doremi_oracle_pin_fails_loudly_on_drift():
         pipeline._pin_doremi_weights_oracle(
             pipeline._duck_doremi_weights() + " "
         )
-
-
-# --- HF `tokenizers`-format sidecar adapter (r10 verdict #3) ---------------
-
-
-@pytest.fixture(scope="module")
-def hf_store(spark, tmp_path_factory):
-    """The canon full-corpus store plus its HF sidecar, built once."""
-    out = str(tmp_path_factory.mktemp("hf_sidecar"))
-    store = os.path.join(out, "store")
-    bpe.write_bpe_store(spark, SF, store)
-    sidecar = bpe.export_bpe_json_hf(
-        spark, store, os.path.join(out, "tokenizer_hf.json")
-    )
-    return store, sidecar
-
-
-def test_hf_export_is_byte_stable_and_public_shaped(spark, hf_store):
-    """Two exports of the same store are byte-identical, and the
-    artifact is the public minimal-model shape: model.type == BPE,
-    vocab a sym->id object, merges space-joined two-symbol strings
-    with NO residual raw spaces inside symbols (the ByteLevel marker
-    replaced them)."""
-    store, sidecar = hf_store
-    again = bpe.export_bpe_json_hf(spark, store, sidecar + ".2")
-    assert open(sidecar, "rb").read() == open(again, "rb").read()
-    doc = json.load(open(sidecar))
-    assert doc["version"] == bpe.HF_VERSION
-    model = doc["model"]
-    assert model["type"] == "BPE" and model["unk_token"] is None
-    assert all(len(m.split(" ")) == 2 for m in model["merges"])
-    # the canon vocabulary is space-bearing by construction (the #1
-    # fixture merge is (' ', 's')) — the marker must have fired
-    assert any(bpe.HF_SPACE_MARKER in s for s in model["vocab"])
-    assert all(" " not in s for s in model["vocab"])
-
-
-def test_hf_import_roundtrips_the_store_artifact(spark, hf_store):
-    """import(export(store)) reproduces the store's merges (modulo the
-    dropped n_occ diagnostics) and its exact sym->id vocab — the
-    lossless-through-the-public-format contract."""
-    store, sidecar = hf_store
-    merges, id_pairs = bpe.import_bpe_json_hf(sidecar)
-    want = bpe.read_bpe_merges(spark, store)
-    assert [(r, l, x) for r, l, x, _n in merges] == [
-        (r, l, x) for r, l, x, _n in want
-    ]
-    vocab_rows = spark.read.parquet(f"{store}/vocab").collect()
-    assert dict(id_pairs) == {r["sym"]: int(r["id"]) for r in vocab_rows}
-    # and it agrees symbol-for-symbol with the private sidecar's import
-    priv = bpe.export_bpe_json(
-        spark, store, os.path.join(os.path.dirname(sidecar), "tok_priv.json")
-    )
-    pm, pv = bpe.import_bpe_json(priv)
-    assert pm == merges and dict(pv) == dict(id_pairs)
-
-
-def test_hf_export_roundtrips_marker_bearing_symbol(spark, tmp_path):
-    """The r11 adapter REFUSED a symbol already containing the
-    ByteLevel marker (the space-only mapping was non-invertible there);
-    under the r12 full byte table a literal 'Ġ' renders as its OWN
-    UTF-8 bytes ('Äł'), distinct from a space's rendering, so the
-    poisoned store now exports AND imports back losslessly — the refuse
-    case is resolved, not just relocated (r11 ADVICE)."""
-    out = str(tmp_path / "marker_store")
-    marked = "a" + bpe.HF_SPACE_MARKER
-    bpe._write_store(
-        spark,
-        out,
-        [(1, "a", bpe.HF_SPACE_MARKER, 7)],
-        ["a", bpe.HF_SPACE_MARKER, marked],
-        spark.createDataFrame(
-            [(1, 1, 0, "x", 0)],
-            schema="doc_id BIGINT, n_ids BIGINT, sum_ids BIGINT, "
-            "ids_hash STRING, n_unk BIGINT",
-        ),
-    )
-    sidecar = bpe.export_bpe_json_hf(spark, out, str(tmp_path / "t.json"))
-    doc = json.load(open(sidecar))
-    # the marker char in a SYMBOL renders as its bytes, so the file's
-    # vocab carries no bare-marker key that could collide with a space
-    assert "Äł" in doc["model"]["vocab"]
-    merges, id_pairs = bpe.import_bpe_json_hf(sidecar)
-    assert [(lhs, rhs) for _r, lhs, rhs, _n in merges] == [
-        ("a", bpe.HF_SPACE_MARKER)
-    ]
-    assert dict(id_pairs) == {"a": 0, bpe.HF_SPACE_MARKER: 1, marked: 2}
-
-
-def test_hf_import_accepts_byte_fragments_refuses_alien_chars(tmp_path):
-    """INVERTED from the r12 refusal (r12 verdict #3): a byte-level-
-    LEARNED vocab (GPT-2's own) carries byte-fragment tokens — e.g. a
-    bare 'Ã' rendering the lone continuation byte 0xC3 — that decode to
-    no character string. These now import in byte-sequence carriage:
-    byte_level=True, every symbol back-mapped per BYTE (latin-1-
-    faithful), ASCII symbols unchanged. A char outside the 256-entry
-    alphabet (e.g. '€') still refuses — that file is not a ByteLevel
-    artifact at all."""
-    def write(bad_sym):
-        doc = {
-            "version": "1.0",
-            "model": {
-                "type": "BPE",
-                "unk_token": None,
-                "vocab": {"a": 0, bad_sym: 1},
-                "merges": [],
-            },
-        }
-        p = tmp_path / "frag.json"
-        p.write_text(json.dumps(doc, ensure_ascii=False), encoding="utf-8")
-        return str(p)
-
-    imp = bpe.import_bpe_json_hf(write("Ã"))
-    assert imp.byte_level
-    merges, id_pairs = imp
-    assert merges == []
-    # the fragment carries as the single byte 0xC3; 'a' stays 'a'
-    assert dict(id_pairs) == {"a": 0, "\xc3": 1}
-    with pytest.raises(ValueError, match="alphabet"):
-        bpe.import_bpe_json_hf(write("€"))
-
-
-def test_hf_bytelevel_table_is_the_public_one():
-    """Spot-pin the GPT-2 table rows the ADVICE named: space->Ġ,
-    newline->Ċ, tab->ĉ, high bytes to the shift block — and the table
-    is a 256-entry bijection."""
-    t = bpe._HF_BYTE_TO_CHAR
-    assert len(t) == 256 and len(set(t.values())) == 256
-    assert t[ord(" ")] == "Ġ" == bpe.HF_SPACE_MARKER
-    assert t[ord("\n")] == "Ċ" and t[ord("\t")] == "ĉ"
-    assert t[ord("a")] == "a" and t[0xE9] == "é"  # identity rows
-    assert t[0] == "Ā" and t[0xAD] == "Ń"  # shifted rows (0xAD is last)
-    # multibyte character: one rendered char per UTF-8 byte
-    assert bpe._hf_sym("é") == "Ã©" and bpe._hf_unsym("Ã©") == "é"
-
-
-def test_hf_import_reads_real_utf8_artifacts(tmp_path):
-    """Genuine `tokenizers` files ship raw multibyte 'Ġ' bytes, NOT \\u
-    escapes (r11 review: an ascii read rejected every real public
-    artifact with UnicodeDecodeError). A raw-UTF-8 file must import —
-    and the single-read auto importer must dispatch both formats."""
-    doc = {
-        "version": "1.0",
-        "model": {
-            "type": "BPE",
-            "unk_token": None,
-            "vocab": {"Ġ": 0, "a": 1, "Ġa": 2},
-            "merges": ["Ġ a"],
-        },
-    }
-    p = tmp_path / "real_hf.json"
-    raw = json.dumps(doc, ensure_ascii=False).encode("utf-8")
-    assert b"\xc4\xa0" in raw  # the marker really is raw multibyte
-    p.write_bytes(raw)
-    for importer in (bpe.import_bpe_json_hf, bpe.import_bpe_json_auto):
-        merges, id_pairs = importer(str(p))
-        assert merges == [(1, " ", "a", 0)]
-        assert dict(id_pairs) == {" ": 0, "a": 1, " a": 2}
-    # and the auto importer dispatches the PRIVATE format too
-    priv = {
-        "format": bpe.SIDECAR_FORMAT,
-        "version": bpe.SIDECAR_VERSION,
-        "unk_id": bpe.UNK_ID,
-        "merges": [[" ", "a"]],
-        "vocab": [[" ", 0], ["a", 1], [" a", 2]],
-    }
-    q = tmp_path / "priv.json"
-    q.write_text(json.dumps(priv))
-    assert bpe.import_bpe_json_auto(str(q)) == (merges, id_pairs)
-
-
-def test_hf_import_validates_shape(tmp_path):
-    """Element-level validation, the import_bpe_json discipline: wrong
-    model type, a merge that does not split into exactly two symbols,
-    a bool id, and a raw-space vocab key (two such keys could back-map
-    to ONE symbol — the r11-review collision hazard) must all raise
-    the advertised ValueError."""
-    good = {
-        "version": "1.0",
-        "model": {
-            "type": "BPE",
-            "unk_token": None,
-            "vocab": {"a": 0, "b": 1, "ab": 2},
-            "merges": ["a b"],
-        },
-    }
-
-    def write(mutate):
-        doc = json.loads(json.dumps(good))
-        mutate(doc)
-        p = tmp_path / "t.json"
-        p.write_text(json.dumps(doc))
-        return str(p)
-
-    m, v = bpe.import_bpe_json_hf(write(lambda d: None))
-    assert m == [(1, "a", "b", 0)] and dict(v) == {"a": 0, "b": 1, "ab": 2}
-    # BOTH public merge renderings import identically (r11 review pass
-    # 2: `tokenizers` >= 0.20 writes [lhs, rhs] pairs, not strings —
-    # rejecting them failed most freshly-saved real artifacts)
-    m2, v2 = bpe.import_bpe_json_hf(
-        write(lambda d: d["model"].update(merges=[["a", "b"]]))
-    )
-    assert (m2, dict(v2)) == (m, dict(v))
-    for mutate in (
-        lambda d: d["model"].update(type="WordPiece"),
-        lambda d: d["model"].update(merges=["a b c"]),
-        lambda d: d["model"].update(merges=["ab"]),
-        lambda d: d["model"].update(merges=["a  b"]),  # empty mid-symbol
-        lambda d: d["model"].update(merges=[["a", "b", "c"]]),
-        lambda d: d["model"].update(merges=[["a b", "c"]]),  # raw space
-        lambda d: d["model"].update(merges=[["a", 1]]),
-        lambda d: d["model"].update(merges=[7]),
-        lambda d: d["model"]["vocab"].update(a=True),  # bool id
-        lambda d: d["model"]["vocab"].update({" a": 9}),  # raw space
-        lambda d: d.pop("model"),
-        lambda d: d.update(model=None),  # routes to the HF error, auto too
-    ):
-        with pytest.raises(ValueError):
-            bpe.import_bpe_json_hf(write(mutate))
-    # the auto importer gives the HF-format error for a null model,
-    # not the private format's (r11 review pass 2 dispatch fix)
-    with pytest.raises(ValueError, match="tokenizers"):
-        bpe.import_bpe_json_auto(write(lambda d: d.update(model=None)))
 
 
 # --- end-to-end pipeline capstone (r10 verdict, Next-round #2) -------------
@@ -390,19 +163,3 @@ def test_pack_from_lens_matches_full_corpus_query(spark):
     )
     b = sorted(map(tuple, pipeline.pack_sequences(spark, SF).collect()))
     assert a == b
-
-
-def test_private_sidecar_import_rejects_bool_id(tmp_path):
-    """r10 ADVICE: ["sym", true] must not validate as id 1 in the
-    PRIVATE sidecar importer either."""
-    doc = {
-        "format": bpe.SIDECAR_FORMAT,
-        "version": bpe.SIDECAR_VERSION,
-        "unk_id": bpe.UNK_ID,
-        "merges": [["a", "b"]],
-        "vocab": [["a", 0], ["b", True]],
-    }
-    p = tmp_path / "t.json"
-    p.write_text(json.dumps(doc))
-    with pytest.raises(ValueError):
-        bpe.import_bpe_json(str(p))

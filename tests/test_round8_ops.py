@@ -1,22 +1,16 @@
-"""Round-8 extension ops beyond the oracle gate: intra-doc repetition
-scrub (Python ground-truth replay + invariants) and tokenizer fertility
-(accounting consistency with the encoder)."""
+"""Round-8 extension op beyond the oracle gate: intra-doc repetition
+scrub (Python ground-truth replay + invariants). The round's tokenizer
+fertility test lives in tests/test_bpe.py."""
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import functions as F
-
 from simple_mapreduce_search_engine_information_retrieval__spark.plans import (
-    bpe,
     textstats,
 )
 from simple_mapreduce_search_engine_information_retrieval__spark.plans.corpus import (
     tokenized_docs,
-)
-from simple_mapreduce_search_engine_information_retrieval__spark.sources.tables import (
-    table,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -68,41 +62,3 @@ def test_repetition_scrub_matches_python_replay(spark):
     # copy-paste tails exist — see textstats.SCRUB_SEED_MOD); the
     # seeding must make the scrub arm do real work, not vacuously pass
     assert any_scrubbed
-
-
-def test_tokenizer_fertility_accounting(spark):
-    """Per-source totals must re-aggregate the encoder's per-doc rows
-    exactly, and the ppm ratio must be the integer floor of the
-    division of those totals."""
-    enc = {
-        r["doc_id"]: r["n_ids"]
-        for r in bpe.tokenize_ids(spark, SF).select("doc_id", "n_ids").collect()
-    }
-    docs = (
-        table(spark, SF, "documents")
-        .select("doc_id", "source", F.octet_length("text").alias("nb"))
-        .collect()
-    )
-    want: dict[str, list[int]] = {}
-    for r in docs:
-        if r["doc_id"] in enc:
-            agg = want.setdefault(r["source"], [0, 0, 0])
-            agg[0] += 1
-            agg[1] += r["nb"]
-            agg[2] += enc[r["doc_id"]]
-    got = {
-        r["source"]: (
-            r["n_docs"],
-            r["total_bytes"],
-            r["total_ids"],
-            r["bytes_per_id_ppm"],
-        )
-        for r in bpe.tokenizer_fertility(spark, SF).collect()
-    }
-    import math
-
-    assert set(got) == set(want)
-    for src, (nd, nb, ni) in want.items():
-        # the query's divide-first double form, replayed exactly
-        ppm = math.floor(nb / ni * 1_000_000.0 + 0.5)
-        assert got[src] == (nd, nb, ni, ppm), src
